@@ -5198,4 +5198,122 @@ class SnapshotSuite extends AnyFunSuite {
     assert(SnapshotTable.branches(spark, t)
       .map(r => (r._1, r._3)) === Seq(("bh", 2)))
   }
+
+  test("on-disk layout format: every create form writes the same meta " +
+      "keys, per-file labels and bucket tags at create and append") {
+    // pins the layout encoding (manifest meta + file labels + bucket
+    // file names) against a frame whose partition values need label
+    // escaping (a space and a comma)
+    def frame(from: Long, n: Long): DataFrame =
+      spark.range(from, from + n).select(col("id").as("k"),
+        element_at(array(lit("a b"), lit("x,y"), lit("z")),
+          (pmod(col("id"), lit(3L)) + 1).cast("int")).as("s"),
+        pmod(col("id"), lit(2L)).as("g"),
+        (lit(1704067200L) + col("id") * 43200L).cast("timestamp")
+          .as("ts"),
+        (col("id") * 10).as("v"))
+    def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
+    def day(r: org.apache.spark.sql.Row) = r.getAs[java.sql.Timestamp]("ts")
+      .toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
+    final case class Case(name: String, create: String => Unit,
+        meta1: Map[String, String],
+        meta2: Map[String, String], label: Option[org.apache.spark.sql.Row => String],
+        labels1: Set[String], labels2: Set[String], partDirs: Int,
+        buckets: Option[Int])
+    val sLabels = Set("a b", "x,y", "z")
+    val sEnc = sLabels.map(enc)
+    val dupes = (0 to 5).map(i => s"${Seq("a+b", "x%2Cy", "z")(i % 3)},${i % 2}").toSet
+    val days1 = (0 until 12).map(d => java.time.LocalDate.of(2024, 1, 1).plusDays(d).toString).toSet
+    val days2 = (50 until 56).map(d => java.time.LocalDate.of(2024, 1, 1).plusDays(d).toString).toSet
+    val cases = Seq(
+      Case("plain", t => SnapshotTable.create(spark, t, frame(0, 24), 4),
+        Map.empty, Map.empty, None, Set.empty, Set.empty, 0, None),
+      Case("part_string", t => SnapshotTable.createPartitioned(spark, t,
+        frame(0, 24), "s"),
+        Map("partitionCol" -> "s"), Map("partitionCol" -> "s"),
+        Some(r => r.getAs[String]("s")), sLabels, sLabels, 1, None),
+      Case("part_seq1", t => SnapshotTable.createPartitioned(spark, t,
+        frame(0, 24), Seq("s")),
+        Map("partitionCol" -> "s"), Map("partitionCol" -> "s"),
+        Some(r => r.getAs[String]("s")), sLabels, sLabels, 1, None),
+      Case("part_seq2", t => SnapshotTable.createPartitioned(spark, t,
+        frame(0, 24), Seq("s", "g")),
+        Map("partitionCols" -> "s,g"), Map("partitionCols" -> "s,g"),
+        Some(r => enc(r.getAs[String]("s")) + "," + r.getAs[Long]("g")),
+        dupes, dupes, 2, None),
+      Case("part_days", t => SnapshotTable.createPartitioned(spark, t,
+        frame(0, 24), Seq("days(ts)")),
+        Map("partitionSpec" -> "days%28ts%29", "partitionCols" -> "ts"),
+        Map("partitionSpec" -> "days%28ts%29", "partitionCols" -> "ts"),
+        Some(r => enc(day(r))), days1, days1 ++ days2, 1, None),
+      Case("bucketed", t => SnapshotTable.createBucketed(spark, t,
+        frame(0, 24), "k", 4, Seq("v")),
+        Map("bucketCols" -> "k", "bucketN" -> "4", "bucketSort" -> "v"),
+        Map("bucketCols" -> "k", "bucketN" -> "4", "bucketSort" -> "v"),
+        None, Set.empty, Set.empty, 0, Some(4)),
+      Case("bucketed_part", t => SnapshotTable.createBucketed(spark, t,
+        frame(0, 24), Seq("k"), 4, Nil, Seq("s")),
+        Map("bucketCols" -> "k", "bucketN" -> "4", "partitionCols" -> "s"),
+        Map("bucketCols" -> "k", "bucketN" -> "4", "partitionCols" -> "s"),
+        Some(r => enc(r.getAs[String]("s"))), sEnc, sEnc, 1, Some(4)),
+      Case("clustered", t => SnapshotTable.createClustered(spark, t,
+        frame(0, 24), "k", numFiles = 4),
+        Map("statsCols" -> "k", "clusterCols" -> "k"),
+        Map("statsCols" -> "k", "clusterCols" -> "k"),
+        None, Set.empty, Set.empty, 0, None),
+      Case("identity", t => SnapshotTable.createWithIdentity(spark, t,
+        frame(0, 24), numFiles = 4),
+        Map("identityCol" -> "id", "identityHwm" -> "24"),
+        Map("identityCol" -> "id", "identityHwm" -> "36"),
+        None, Set.empty, Set.empty, 0, None),
+      Case("identity_part", t => SnapshotTable.createWithIdentity(spark, t,
+        frame(0, 24), partitionCols = Seq("s")),
+        Map("identityCol" -> "id", "identityHwm" -> "24",
+          "partitionCol" -> "s"),
+        Map("identityCol" -> "id", "identityHwm" -> "36",
+          "partitionCol" -> "s"),
+        Some(r => r.getAs[String]("s")), sLabels, sLabels, 1, None))
+    val untagged = """part-\d{5}-[0-9a-f-]+?[-.]c\d{3}(?:\.[a-z]+)*\.parquet""".r
+    val tagged =
+      """part-(\d{5})-[0-9a-f-]+?(?:-c\d{3})?_(\d{5})(?:\.c\d{3})?(?:\.[a-z]+)*\.parquet""".r
+    cases.foreach { c =>
+      val t = freshTable(s"fmt_${c.name}")
+      c.create(t)
+      SnapshotTable.append(spark, t, frame(100, 12))
+      Seq((1L, c.meta1, c.labels1), (2L, c.meta2, c.labels2)).foreach {
+        case (v, meta, labels) =>
+          val snap = SnapshotTable.readManifest(spark, t, v)
+          assert(snap.meta === meta, s"${c.name} v$v meta")
+          assert(snap.partitionOf.values.toSet === labels,
+            s"${c.name} v$v labels")
+          assert(snap.files.nonEmpty)
+          snap.files.foreach { rel =>
+            val parts = rel.split('/').toSeq
+            assert(parts.take(2).head === "data" &&
+              parts(1).startsWith("b-"), s"${c.name}: $rel")
+            val dirs = parts.drop(2).init
+            assert(dirs.size === c.partDirs &&
+              dirs.forall(_.matches("""__part\d*=.+""")),
+              s"${c.name}: $rel")
+            val rows = spark.read.parquet(s"$t/$rel").collect()
+            c.label match {
+              case Some(f) =>
+                assert(rows.map(f).toSet === snap.partitionOf.get(rel).toSet,
+                  s"${c.name} v$v: label of $rel")
+              case None => assert(!snap.partitionOf.contains(rel))
+            }
+            (c.buckets, parts.last) match {
+              case (Some(n), tagged(idx, b)) =>
+                assert(idx === b, s"${c.name}: $rel")
+                val ids = spark.read.parquet(s"$t/$rel")
+                  .select(pmod(hash(col("k")), lit(n))).distinct()
+                  .collect().map(_.getInt(0)).toSeq
+                assert(ids === Seq(b.toInt), s"${c.name}: bucket of $rel")
+              case (None, untagged(_*)) =>
+              case (_, name) => fail(s"${c.name} v$v: file name $name")
+            }
+          }
+      }
+    }
+  }
 }
