@@ -426,9 +426,9 @@ class GraftDataSource extends RelationProvider with SchemaRelationProvider
     // the user's layout request silently is the one wrong option
     // (the same rule as the OPTIONS/partitionBy disagreement above)
     if (exists && pcols.nonEmpty) {
-      val declared = SnapshotTable.partitionColsOf(
+      val declared = TableLayout.of(
         SnapshotTable.readManifest(spark, table,
-          SnapshotTable.currentVersion(spark, table)))
+          SnapshotTable.currentVersion(spark, table))).partitionCols
       require(declared == pcols,
         s"partitionBy(${pcols.mkString(", ")}) disagrees with the " +
           s"existing table's layout (${if (declared.isEmpty)
@@ -675,10 +675,7 @@ object GraftDataSource {
         // reader schema (visibleSchema) — by-name parquet resolution
         // never requests them
         dataSchema = SnapshotTable.visibleSchema(header),
-        bucketSpec = SnapshotTable.bucketSpecOf(header).map { case (cs, n) =>
-          org.apache.spark.sql.catalyst.catalog.BucketSpec(n, cs,
-            SnapshotTable.bucketSortOf(header))
-        },
+        bucketSpec = TableLayout.of(header).buckets,
         fileFormat = new ReadOnlyParquetFormat,
         options = Map.empty)(spark)
     } else new DvRelation(spark, table, header.version,

@@ -144,17 +144,8 @@ class SnapshotFileIndex private (spark: SparkSession, table: String,
       statusesFor(kept).map(_._2).toArray))
   }
 
-  private val pcols = SnapshotTable.partitionColsOf(header)
-  // hidden-partitioning transforms, aligned with pcols (empty on
-  // identity-partitioned and unpartitioned tables)
-  private val ptransforms = SnapshotTable.partitionSpecOf(header)
-  private val multiCol = header.meta.contains("partitionCols")
-
-  private def partValues(label: String): Seq[String] =
-    if (multiCol)
-      label.split(",", -1).map(v =>
-        java.net.URLDecoder.decode(v, "UTF-8")).toSeq
-    else Seq(label)
+  private val layout = TableLayout.of(header)
+  private val pcols = layout.partitionCols
 
   /** Can `entry` possibly hold a row satisfying `e`? (false only on a
     * provable exclusion.)
@@ -220,7 +211,7 @@ class SnapshotFileIndex private (spark: SparkSession, table: String,
     val v = render(l)
     if (v == null) return true
     if (!pcols.contains(column)) return true
-    val vals = partValues(label)
+    val vals = layout.valuesOf(label)
     var pi = 0
     while (pi < pcols.length) {
       if (pcols(pi) == column) {
@@ -236,7 +227,7 @@ class SnapshotFileIndex private (spark: SparkSession, table: String,
   /** One transform position's verdict on (label value, literal). */
   private def positionAdmits(label: String, pi: Int, l: Literal,
       v: String, lo: Boolean, hi: Boolean): Boolean = {
-    ptransforms.lift(pi) match {
+    layout.partitions.lift(pi) match {
       case Some(t) if !t.isIdentity =>
         t.applyLiteral(l) match {
           case Some(tl) =>
@@ -401,10 +392,7 @@ object SnapshotScan {
       // scan groups the tagged files by bucket id and reports hash
       // output partitioning — equal-bucketed graft tables then join
       // with no exchange on either side
-      bucketSpec = SnapshotTable.bucketSpecOf(header).map { case (cs, n) =>
-        org.apache.spark.sql.catalyst.catalog.BucketSpec(n, cs,
-          SnapshotTable.bucketSortOf(header))
-      },
+      bucketSpec = TableLayout.of(header).buckets,
       fileFormat = new ParquetFileFormat,
       options = Map.empty)(spark)
     (GraftShim.ofRows(spark, LogicalRelation(relation, isStreaming = false)),

@@ -624,7 +624,7 @@ object SnapshotTable {
   /** The location-independent identity of a data file: its
     * `data/<batch>/...` suffix — the manifest's relative path in the
     * URI-ENCODED space of `_metadata.file_path` (a raw disk name like
-    * `__part=a b` or `__part=a%20b` renders as `a%20b` / `a%2520b`
+    * `__part0=a b` or `__part0=a%20b` renders as `a%20b` / `a%2520b`
     * there). Deletion vectors key on it (plus row position), so a moved
     * table keeps its deletes; the encoding is location-independent too.
     * Anchored on the batch-dir prefix (`b-`/`dv-` + uuid), so partition
@@ -643,11 +643,11 @@ object SnapshotTable {
     * corrupt a literal '+'). One decode maps an encoded file key back
     * to the raw on-disk name the manifest records: a space in a dir
     * name renders as `%20` in URI space and decodes back; a
-    * Hive-escaped '%' (on disk as `%25`, e.g. inside `__part=a%20b`
+    * Hive-escaped '%' (on disk as `%25`, e.g. inside `__part0=a%20b`
     * for a value containing "a%20b" verbatim) renders as `%2525` and
     * decodes back to the on-disk `%25` — never double-decoded.
     */
-  private def pctDecode(s: String): String = unescapePartValue(s)
+  private def pctDecode(s: String): String = TableLayout.unescapePartValue(s)
 
   private val RelKeyRe = "^.*(data/(?:b|dv)-[^/]+/.*)$".r
 
@@ -849,251 +849,46 @@ object SnapshotTable {
     (v, n)
   }
 
-  /** Write `df` as a fresh immutable file batch under `data/b-<uuid>/`;
-    * returns the new files' table-relative paths. Staged files are
-    * invisible until a manifest referencing them commits.
+  /** Write `df` as a fresh immutable file batch under `data/b-<uuid>/`,
+    * arranged and labeled by `layout` ([[TableLayout.arranged]]); returns
+    * the new files' table-relative paths, sorted. Partitioned layouts
+    * nest files under `__part<i>=<value>/` dirs (read the labels back
+    * with [[TableLayout.labelOf]]); bucketed ones rename every file to
+    * carry its bucket id ([[TableLayout.bucketTagged]]), so a relation
+    * declaring the matching `BucketSpec` reports hash output
+    * partitioning and equal-bucketed tables join without a shuffle.
+    * Staged files are invisible until a manifest referencing them
+    * commits.
     */
-  private[graft] def stageBatch(df: DataFrame, table: String): Seq[String] = {
+  private[graft] def stageBatch(df: DataFrame, table: String,
+      layout: TableLayout = TableLayout.Plain): Seq[String] = {
     val batch = "b-" + java.util.UUID.randomUUID().toString
     val dir = s"$table/data/$batch"
+    val parts = layout.partNames
     labeledJob(df.sparkSession, "graft: stage batch") {
-      df.write.mode("error").options(stagingWriteOpts).parquet(dir) }
+      val w = layout.arranged(df).write.mode("error").options(stagingWriteOpts)
+      (if (parts.isEmpty) w else w.partitionBy(parts: _*)).parquet(dir) }
     val f = fs(df.sparkSession, table)
-    f.listStatus(new Path(dir)).iterator
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-      .map(n => s"data/$batch/$n").toVector.sorted
-  }
-
-  /** BUCKETED batch staging: hash-repartition on the bucket column
-    * into exactly `numBuckets` tasks (Spark's own HashPartitioning —
-    * the same murmur3 bucketing a `bucketBy` write uses), then tag
-    * each staged file's NAME with its bucket id in the `_NNNNN` form
-    * `BucketingUtils.getBucketId` parses. The task-partition index IS
-    * the bucket id (the parquet writer names one file per non-empty
-    * partition `part-<idx>-…`), so the tag is read off the original
-    * name — no data is inspected. A relation built over these files
-    * with the matching `BucketSpec` reports hash output partitioning,
-    * and two graft tables bucketed the same way JOIN WITHOUT A
-    * SHUFFLE on the bucket column (the 100 TB co-located-join layout;
-    * PlanAuditSuite asserts the exchange-free plan).
-    */
-  private[graft] def stageBucketedBatch(df: DataFrame, table: String,
-      bucketCols: Seq[String], numBuckets: Int,
-      clusterSort: Seq[Column] = Nil): Seq[String] = {
-    val batch = "b-" + java.util.UUID.randomUUID().toString
-    val dir = s"$table/data/$batch"
-    val bucketed = df.repartition(numBuckets,
-      bucketCols.map(c => col(s"`$c`")): _*)
-    // declared clustering sorts WITHIN each bucket (after the bucket
-    // shuffle — a pre-shuffle sort would be destroyed by it)
-    labeledJob(df.sparkSession, "graft: stage bucketed batch") {
-      (if (clusterSort.isEmpty) bucketed
-       else bucketed.sortWithinPartitions(clusterSort: _*))
-        .write.mode("error").options(stagingWriteOpts).parquet(dir) }
-    val f = fs(df.sparkSession, table)
-    f.listStatus(new Path(dir)).iterator
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-      .map { n =>
-        val tagged = bucketTagName(n)
-        require(f.rename(new Path(dir, n), new Path(dir, tagged)),
-          s"cannot bucket-tag $n")
-        s"data/$batch/$tagged"
-      }.toVector.sorted
-  }
-
-  /** `part-NNNNN-…` → `…_NNNNN.parquet`: the task-partition index IS
-    * the bucket id (HashPartitioning's pmod(murmur3, n)), re-rendered
-    * in the `_NNNNN` suffix form `BucketingUtils.getBucketId` parses.
-    */
-  private def bucketTagName(n: String): String = {
-    val idx = n.substring(5, 10).toInt // part-NNNNN-…
-    val dot = n.indexOf('.')
-    val (stem, ext) =
-      if (dot < 0) (n, "") else (n.substring(0, dot), n.substring(dot))
-    f"${stem}_$idx%05d$ext"
-  }
-
-  /** PARTITION × BUCKET staging (the canonical large-fact layout:
-    * partition by date, bucket by join key). One shuffle total: the
-    * batch hash-repartitions into `numBuckets` tasks on the bucket
-    * key, each task sorts its rows by (partition labels, bucket sort)
-    * — the writer's required ordering, so FileFormatWriter inserts no
-    * second sort — and writes ONE file per (partition dir, bucket)
-    * pair, bucket-tagged. Rows of key k live in bucket hash(k)%n
-    * inside EVERY partition dir, so the union of any partition-pruned
-    * file subset still groups cleanly by bucket id and the relation's
-    * BucketSpec keeps reporting hash output partitioning: a
-    * partition-pruned fact-fact join stays exchange-free.
-    */
-  private[graft] def stagePartitionedBucketedBatch(df: DataFrame,
-      table: String, labelCols: Seq[Column], bucketCols: Seq[String],
-      numBuckets: Int, sortWithin: Seq[Column] = Nil)
-      : Seq[(String, String)] = {
-    val batch = "b-" + java.util.UUID.randomUUID().toString
-    val dir = s"$table/data/$batch"
-    val partNames = labelCols.indices.map(i => s"__part$i")
-    val withParts = labelCols.zip(partNames).foldLeft(df) {
-      case (acc, (c, p)) => acc.withColumn(p, c)
-    }
-    labeledJob(df.sparkSession, "graft: stage part+bucket batch") {
-      withParts
-        .repartition(numBuckets, bucketCols.map(c => col(s"`$c`")): _*)
-        .sortWithinPartitions(partNames.map(col) ++ sortWithin: _*)
-        .write.mode("error").options(stagingWriteOpts).partitionBy(partNames: _*).parquet(dir) }
-    val f = fs(df.sparkSession, table)
-    def walk(p: Path, depth: Int, rel: String,
-        vals: List[String]): Vector[(String, String)] =
-      if (depth == labelCols.length)
+    def walk(p: Path, rel: String, depth: Int): Iterator[String] =
+      if (depth < parts.size)
+        f.listStatus(p).iterator
+          .filter(s => s.isDirectory &&
+            s.getPath.getName.startsWith(s"${parts(depth)}="))
+          .flatMap(s => walk(s.getPath, s"$rel/${s.getPath.getName}",
+            depth + 1))
+      else
         f.listStatus(p).iterator.map(_.getPath.getName)
           .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
           .map { n =>
-            val tagged = bucketTagName(n)
-            require(f.rename(new Path(p, n), new Path(p, tagged)),
-              s"cannot bucket-tag $rel/$n")
-            (s"$rel/$tagged", vals.reverse.map(enc).mkString(","))
-          }.toVector
-      else
-        f.listStatus(p).iterator.filter(_.isDirectory)
-          .filter(_.getPath.getName.startsWith(s"__part$depth="))
-          .flatMap { pd =>
-            val name = pd.getPath.getName
-            val v = unescapePartValue(name.stripPrefix(s"__part$depth="))
-            walk(pd.getPath, depth + 1, s"$rel/$name", v :: vals)
-          }.toVector
-    walk(new Path(dir), 0, s"data/$batch", Nil).sortBy(_._1)
-  }
-
-  /** Hive-style partitioned batch staging: a duplicated string column
-    * drives partitionBy (the data keeps the original column), and the
-    * partition value of every file is parsed back from its directory
-    * name. Returns (table-relative path, partition value) pairs. Null
-    * partition values carry Hive's default-partition token. Repartition
-    * by the column => one file per partition value per batch.
-    */
-  /** Hive-style partition-dir / URI unescape: ONLY %xx sequences
-    * decode. Spark's escapePathName never writes '+' for a space, so
-    * URLDecoder — which maps '+' -> ' ' — would corrupt any label
-    * containing a literal '+', silently breaking partition pruning for
-    * that value. Runs of CONSECUTIVE %xx escapes decode as one UTF-8
-    * byte sequence, not char-by-char: URI rendering encodes a
-    * multi-byte code point as adjacent escapes (`é` -> `%C3%A9`), and
-    * per-escape toChar decoding would yield mojibake whose key never
-    * matches the raw manifest path — UPDATE/DELETE/MERGE would then
-    * silently skip those files' rows. ASCII escapes (the only kind
-    * escapePathName emits) are a one-byte run, so both callers share
-    * this decoder.
-    */
-  private def unescapePartValue(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    val run = new java.io.ByteArrayOutputStream(8)
-    var i = 0
-    def flushRun(): Unit = if (run.size() > 0) {
-      sb.append(new String(run.toByteArray,
-        java.nio.charset.StandardCharsets.UTF_8))
-      run.reset()
-    }
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length &&
-          Character.digit(s.charAt(i + 1), 16) >= 0 &&
-          Character.digit(s.charAt(i + 2), 16) >= 0) {
-        run.write(Character.digit(s.charAt(i + 1), 16) * 16 +
-          Character.digit(s.charAt(i + 2), 16))
-        i += 3
-      } else { flushRun(); sb.append(c); i += 1 }
-    }
-    flushRun()
-    sb.result()
-  }
-
-  private[graft] def stagePartitionedBatch(df: DataFrame, table: String,
-      pcol: String, clusterSort: Seq[Column] = Nil)
-      : Seq[(String, String)] = {
-    val batch = "b-" + java.util.UUID.randomUUID().toString
-    val dir = s"$table/data/$batch"
-    val withPart = df.withColumn("__part", col(pcol).cast("string"))
-    // clustered tables RANGE-partition on (partition, cluster key)
-    // instead of hashing on the partition alone: a task then holds a
-    // contiguous key slice of one (or a few) partition values, so each
-    // partition directory gets one file PER SLICE — tight per-file
-    // min/max a range predicate prunes WITHIN the partition — rather
-    // than one file spanning the partition's whole key range
-    labeledJob(df.sparkSession, "graft: stage partitioned batch") {
-      (if (clusterSort.isEmpty) withPart.repartition(col("__part"))
-       else withPart
-         .repartitionByRange(col("__part") +: clusterSort: _*)
-         .sortWithinPartitions(col("__part") +: clusterSort: _*))
-        .write.mode("error").options(stagingWriteOpts).partitionBy("__part").parquet(dir) }
-    val f = fs(df.sparkSession, table)
-    f.listStatus(new Path(dir)).filter(_.isDirectory)
-      .filter(_.getPath.getName.startsWith("__part="))
-      .toIndexedSeq.flatMap { pd =>
-        val v = unescapePartValue(
-          pd.getPath.getName.stripPrefix("__part="))
-        f.listStatus(pd.getPath).iterator
-          .map(_.getPath.getName)
-          .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-          .map(n => (s"data/$batch/${pd.getPath.getName}/$n", v))
-          .toVector
-      }.sortBy(_._1)
-  }
-
-  /** Multi-column staging: nested `__part0=<a>/__part1=<b>/...` dirs,
-    * one (table-relative path, COMPOSITE label) pair per file. The
-    * composite label percent-encodes each column's string value and
-    * joins with ',' — unambiguous for values containing the separator.
-    * Null values carry Hive's default-partition token like the
-    * single-column path.
-    */
-  private[graft] def stagePartitionedBatchMulti(df: DataFrame,
-      table: String, pcols: Seq[String],
-      clusterSort: Seq[Column] = Nil): Seq[(String, String)] =
-    stageLabeledBatchMulti(df, table,
-      pcols.map(c => col(s"`$c`").cast("string")), clusterSort)
-
-  /** The generalized multi-label staging: each label column DERIVES a
-    * partition label from the row (identity tables pass the raw value
-    * cast to string; transform-partitioned tables pass the transform's
-    * label derivation — see [[PartitionTransforms]]).
-    */
-  private[graft] def stageLabeledBatchMulti(df: DataFrame,
-      table: String, labelCols: Seq[Column],
-      clusterSort: Seq[Column] = Nil): Seq[(String, String)] = {
-    val batch = "b-" + java.util.UUID.randomUUID().toString
-    val dir = s"$table/data/$batch"
-    val partNames = labelCols.indices.map(i => s"__part$i")
-    val withParts = labelCols.zip(partNames).foldLeft(df) {
-      case (acc, (c, p)) => acc.withColumn(p, c)
-    }
-    // range-on-(partitions, cluster key) when clustered — same
-    // within-partition file-splitting rationale as the single-column
-    // staging path
-    labeledJob(df.sparkSession, "graft: stage labeled batch") {
-      (if (clusterSort.isEmpty)
-         withParts.repartition(partNames.map(col): _*)
-       else withParts
-         .repartitionByRange(partNames.map(col) ++ clusterSort: _*)
-         .sortWithinPartitions(partNames.map(col) ++ clusterSort: _*))
-        .write.mode("error").options(stagingWriteOpts).partitionBy(partNames: _*).parquet(dir) }
-    val f = fs(df.sparkSession, table)
-    def walk(p: Path, depth: Int, rel: String,
-        vals: List[String]): Vector[(String, String)] =
-      if (depth == labelCols.length)
-        f.listStatus(p).iterator.map(_.getPath.getName)
-          .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-          .map(n => (s"$rel/$n", vals.reverse.map(enc).mkString(",")))
-          .toVector
-      else
-        f.listStatus(p).iterator.filter(_.isDirectory)
-          .filter(_.getPath.getName.startsWith(s"__part$depth="))
-          .flatMap { pd =>
-            val name = pd.getPath.getName
-            val v = unescapePartValue(name.stripPrefix(s"__part$depth="))
-            walk(pd.getPath, depth + 1, s"$rel/$name", v :: vals)
-          }.toVector
-    walk(new Path(dir), 0, s"data/$batch", Nil).sortBy(_._1)
+            if (layout.buckets.isEmpty) s"$rel/$n"
+            else {
+              val tagged = TableLayout.bucketTagged(n)
+              require(f.rename(new Path(p, n), new Path(p, tagged)),
+                s"cannot bucket-tag $rel/$n")
+              s"$rel/$tagged"
+            }
+          }
+    walk(new Path(dir), s"data/$batch", 0).toVector.sorted
   }
 
   /** Per-file stats of `statsCols` over a FRESHLY STAGED batch in one
@@ -1417,16 +1212,6 @@ object SnapshotTable {
     snap.meta.get("bloomCols").toSeq
       .flatMap(_.split(',').toSeq).filter(_.nonEmpty)
 
-  /** The table's declared clustering key (`clusterCols` metadata, set
-    * by [[createClustered]] or a clustered [[compact]]): staging sorts
-    * every fresh batch within partitions on it — appends and mutation
-    * rewrites keep per-file min/max ranges tight — and maintenance
-    * compaction range-resorts the whole table on it.
-    */
-  private def declaredClusterCols(snap: Snapshot): Seq[String] =
-    snap.meta.get("clusterCols").toSeq
-      .flatMap(_.split(',').toSeq).filter(_.nonEmpty)
-
   private def bloomSidecarPath(table: String, batch: String,
       col: String): Path =
     new Path(s"$table/data/$batch",
@@ -1515,18 +1300,13 @@ object SnapshotTable {
     * N hash-distributed files, and the bloom proves absence for the
     * rest (min/max stats are useless there: every file spans the whole
     * key range). The sidecars live beside their batch's data files, so
-    * the manifest stays file-list-sized; every mutation re-indexes its
-    * staged batch ([[stageFor]]), so coverage never degrades.
+    * the manifest stays file-list-sized; every mutation's staging pass
+    * re-indexes its batch, so coverage never degrades.
     */
   def createBloomIndexed(spark: SparkSession, table: String, df: DataFrame,
-      bloomCols: Seq[String], numFiles: Int = 8): Long = {
-    require(currentVersion(spark, table) == 0,
-      s"$table already has committed snapshots")
-    val files = stageBatch(df.repartition(numFiles), table)
-    writeBloomSidecars(spark, table, files, bloomCols, df.schema)
-    commitManifest(spark, table, df.schema, files, 0L,
-      Map("bloomCols" -> bloomCols.mkString(",")))
-  }
+      bloomCols: Seq[String], numFiles: Int = 8): Long =
+    createAs(spark, table, Snapshot(0L, df.schema, Nil,
+      Map("bloomCols" -> bloomCols.mkString(","))), df.repartition(numFiles))
 
   /** Point-lookup read on a bloom-indexed column: prune every file
     * whose bloom rejects ALL probe values (no false negatives — a
@@ -1562,14 +1342,24 @@ object SnapshotTable {
       .filter(col(column).isin(values.toSeq: _*))
   }
 
-  /** Stage `df` respecting the table's declared layout metadata: a
-    * partitioned table keeps EVERY new batch partition-labeled, a
-    * stats-tracking table re-computes per-file min/max for its declared
-    * columns, and a bloom-indexed table writes fresh sidecars for the
-    * staged batch — mutations never degrade manifest pruning or the
-    * point-lookup index.
+  /** Stage `df` respecting the table's declared layout metadata: EVERY
+    * new batch is arranged, labeled and bucketed by the table's
+    * [[TableLayout]], a stats-tracking table re-computes per-file
+    * min/max for its declared columns, and a bloom-indexed table writes
+    * fresh sidecars for the staged batch — mutations never degrade
+    * manifest pruning, the BucketSpec or the point-lookup index.
     */
   private def stageFor(snap: Snapshot, df: DataFrame, table: String)
+      : (Seq[String], Map[String, String],
+         Map[String, Map[String, (String, String)]],
+         Map[String, Map[String, String]]) =
+    stageFor(snap, df, table, TableLayout.of(snap))
+
+  /** As above, arranged by `layout` instead of the table's own (for
+    * rows the caller already arranged).
+    */
+  private def stageFor(snap: Snapshot, df: DataFrame, table: String,
+      layout: TableLayout)
       : (Seq[String], Map[String, String],
          Map[String, Map[String, (String, String)]],
          Map[String, Map[String, String]]) = {
@@ -1601,12 +1391,6 @@ object SnapshotTable {
         }
         (df.observe(o, aggs.head, aggs.tail: _*), Some(o))
       }
-    // declared clustering: every fresh batch sorts within its write
-    // tasks on the cluster key (batch-local, no extra shuffle), so
-    // per-file min/max ranges stay tight and range pruning keeps
-    // working as the table mutates — full re-clustering is compact()'s
-    // job, this keeps the decay slow between compactions
-    val clusterSort = declaredClusterCols(snap).map(c => col(s"`$c`"))
     // a clustered PARTITIONED batch range-partitions, and
     // repartitionByRange SAMPLES its input in a separate job — any
     // Observation riding the plan (the constraint metrics above, or
@@ -1614,59 +1398,10 @@ object SnapshotTable {
     // would fire twice and report doubled counts. Barrier once (same
     // recipe as assignIdentity) so the observed plan executes exactly
     // once and the range shuffle reads the checkpointed rows.
-    val rangeStaged = clusterSort.nonEmpty &&
-      (snap.meta.contains("partitionCols") ||
-        snap.meta.contains("partitionCol"))
+    val rangeStaged = layout.cluster.nonEmpty && layout.partitions.nonEmpty
     val dfIn = if (rangeStaged) df1.localCheckpoint() else df1
-    val (files, labels) =
-      if (bucketSpecOf(snap).isDefined &&
-          (snap.meta.contains("partitionSpec") ||
-            snap.meta.contains("partitionCols"))) {
-        // PARTITION × BUCKET: relabel through the declared transforms
-        // AND re-bucket, so both the pruning tuples and the BucketSpec
-        // stay true through every mutation
-        val Some((bcols, n)) = bucketSpecOf(snap)
-        val sortWithin =
-          if (clusterSort.nonEmpty) clusterSort
-          else bucketSortOf(snap).map(c => col(s"`$c`"))
-        val staged = stagePartitionedBucketedBatch(dfIn, table,
-          partitionTransformsOf(snap).map(t =>
-            t.labelCol(col(s"`${t.source}`"))), bcols, n, sortWithin)
-        (staged.map(_._1), staged.toMap)
-      } else if (snap.meta.contains("partitionSpec")) {
-        // hidden partitioning: every staged batch re-derives labels
-        // from row values through the declared transforms, so
-        // mutations and appends can never drift from the spec
-        val staged = stageLabeledBatchMulti(dfIn, table,
-          partitionSpecOf(snap).map(t =>
-            t.labelCol(col(s"`${t.source}`"))), clusterSort)
-        (staged.map(_._1), staged.toMap)
-      } else if (snap.meta.contains("partitionCols")) {
-        val staged = stagePartitionedBatchMulti(dfIn, table,
-          partitionColsOf(snap), clusterSort)
-        (staged.map(_._1), staged.toMap)
-      } else snap.meta.get("partitionCol") match {
-        case Some(pc) =>
-          val staged = stagePartitionedBatch(dfIn, table, pc, clusterSort)
-          (staged.map(_._1), staged.toMap)
-        case None => bucketSpecOf(snap) match {
-          case Some((bc, n)) =>
-            // bucketed layout: EVERY batch re-buckets (and re-sorts
-            // within buckets when a bucket sort is declared), so the
-            // declared BucketSpec stays true for the whole file list
-            // and the shuffle-free join property never degrades
-            val sortWithin =
-              if (clusterSort.nonEmpty) clusterSort
-              else bucketSortOf(snap).map(c => col(s"`$c`"))
-            (stageBucketedBatch(dfIn, table, bc, n, sortWithin),
-              Map.empty[String, String])
-          case None =>
-            val arranged =
-              if (clusterSort.isEmpty) dfIn
-              else dfIn.sortWithinPartitions(clusterSort: _*)
-            (stageBatch(arranged, table), Map.empty[String, String])
-        }
-      }
+    val files = stageBatch(dfIn, table, layout)
+    val labels = files.flatMap(f => layout.labelOf(f).map(f -> _)).toMap
     // the staged parquet now holds the rows — release the barrier copy
     // instead of waiting for the ContextCleaner
     if (rangeStaged) dfIn.unpersist(blocking = false)
@@ -1831,14 +1566,9 @@ object SnapshotTable {
     */
   private[sources] val GroupedManifestMinFiles = 48
 
-  private def partitionLayout(meta: Map[String, String]): Boolean =
-    meta.contains("partitionCol") || meta.contains("partitionCols") ||
-      meta.contains("partitionSpec")
-
-  private def shouldGroup(meta: Map[String, String], nFiles: Int)
-      : Boolean =
+  private def shouldGroup(layout: TableLayout, nFiles: Int): Boolean =
     nFiles >= GroupedManifestMinFiles &&
-      (partitionLayout(meta) || meta.contains("clusterCols"))
+      (layout.partitions.nonEmpty || layout.cluster.nonEmpty)
 
   /** Cluster-range chunk width: an UNPARTITIONED CLUSTERED table's
     * grouped anchor chunks each write batch's (range-sorted) file run
@@ -1911,7 +1641,7 @@ object SnapshotTable {
     */
   private def renderGroupedManifest(spark: SparkSession, table: String,
       schema: StructType, files: Seq[String], meta: Map[String, String],
-      partitionOf: Map[String, String],
+      clusterMode: Boolean, partitionOf: Map[String, String],
       statsOf: Map[String, Map[String, (String, String)]],
       deleteFiles: Seq[String],
       extraOf: Map[String, Map[String, String]],
@@ -1919,7 +1649,6 @@ object SnapshotTable {
     val f = fs(spark, table)
     val gDir = new Path(manifestDir(table), "groups")
     f.mkdirs(gDir)
-    val clusterMode = !partitionLayout(meta)
     // labels reusable from the base's anchor: untouched through the
     // chain (cleanGroups) AND untouched by THIS commit's add/remove
     // AND carrying unchanged per-file stats/extras (a stats backfill
@@ -2042,31 +1771,16 @@ object SnapshotTable {
       .mkString("\n").getBytes("UTF-8")
   }
 
-  /** The IDENTITY partition sources a layout meta declares (transform
-    * items like `days(ts)` derive zone-free labels and are excluded;
-    * only bare identity columns render labels via the zone-dependent
-    * cast-to-string).
-    */
-  private def identityPartitionSources(
-      meta: Map[String, String]): Seq[String] =
-    meta.get("partitionSpec") match {
-      case Some(spec) => spec.split(",", -1).map(dec).map(_.trim)
-        .filterNot(_.contains("(")).toSeq
-      case None => meta.get("partitionCols")
-        .map(_.split(",", -1).map(dec).toSeq)
-        .orElse(meta.get("partitionCol").map(Seq(_)))
-        .getOrElse(Nil)
-    }
-
   /** Does this (schema, meta) pair need a pinned staging timezone it
-    * does not have yet? True iff some identity partition source is a
+    * does not have yet? True iff some IDENTITY partition source is a
     * TIMESTAMP column — the one label derivation that depends on the
-    * session zone.
+    * session zone (transform items like `days(ts)` derive zone-free
+    * labels).
     */
   private def wantsStagingTz(schema: StructType,
-      meta: Map[String, String]): Boolean =
+      meta: Map[String, String], layout: TableLayout): Boolean =
     !meta.contains("stagingTz") &&
-      identityPartitionSources(meta).exists(c =>
+      layout.identitySources.exists(c =>
         schema.fieldNames.contains(c) && schema(c).dataType ==
           org.apache.spark.sql.types.TimestampType)
 
@@ -2127,11 +1841,13 @@ object SnapshotTable {
     // wrong derivation zone, refuse writes from the original zone and
     // mis-render read literals. Such tables stay unpinned (session-zone
     // reads, the pre-pin behavior) until a layout redeclaration.
+    val layout = TableLayout.of(meta0, schema)
     val declaresLayout = expected == 0 || base.exists(b =>
-      identityPartitionSources(b.meta) != identityPartitionSources(meta0))
-    val meta = if (wantsStagingTz(schema, meta0) && declaresLayout) meta0 +
-      ("stagingTz" -> spark.sessionState.conf.sessionLocalTimeZone)
-    else meta0
+      TableLayout.of(b).identitySources != layout.identitySources)
+    val meta =
+      if (wantsStagingTz(schema, meta0, layout) && declaresLayout) meta0 +
+        ("stagingTz" -> spark.sessionState.conf.sessionLocalTimeZone)
+      else meta0
     val next = expected + 1
     val f = fs(spark, table)
     f.mkdirs(manifestDir(table))
@@ -2148,9 +1864,9 @@ object SnapshotTable {
         case None => files
       }, extraOf)
     def renderFull(): Array[Byte] =
-      if (branchOf.isEmpty && shouldGroup(meta, files.size))
+      if (branchOf.isEmpty && shouldGroup(layout, files.size))
         renderGroupedManifest(spark, table, schema, files, meta,
-          partitionOf, statsOf, deleteFiles,
+          layout.partitions.isEmpty, partitionOf, statsOf, deleteFiles,
           // one-time upgrade as a legacy table crosses the grouping
           // threshold: every group member gets its size recorded
           withFileBytes(spark, table, files, extraOf1), base)
@@ -2365,11 +2081,21 @@ object SnapshotTable {
     * mutation tests/benchmarks exercise file granularity).
     */
   def create(spark: SparkSession, table: String, df: DataFrame,
-      numFiles: Int = 8): Long = {
+      numFiles: Int = 8): Long =
+    createAs(spark, table, Snapshot(0L, df.schema, Nil),
+      df.repartition(numFiles))
+
+  /** The one create path: stage `df` through `snap0`'s declared layout
+    * (and its stats/bloom declarations) and commit it as version 1 with
+    * `snap0`'s schema and meta.
+    */
+  private def createAs(spark: SparkSession, table: String, snap0: Snapshot,
+      df: DataFrame): Long = {
     require(currentVersion(spark, table) == 0,
       s"$table already has committed snapshots")
-    val files = stageBatch(df.repartition(numFiles), table)
-    commitManifest(spark, table, df.schema, files, 0L)
+    val (files, labels, stats, extras) = stageFor(snap0, df, table)
+    commitManifest(spark, table, snap0.schema, files, 0L, snap0.meta,
+      labels, stats, Nil, None, extras)
   }
 
   /** Create a PARTITIONED table: files are laid out and
@@ -2380,13 +2106,8 @@ object SnapshotTable {
     * reader/mutator works unchanged.
     */
   def createPartitioned(spark: SparkSession, table: String, df: DataFrame,
-      pcol: String): Long = {
-    require(currentVersion(spark, table) == 0,
-      s"$table already has committed snapshots")
-    val staged = stagePartitionedBatch(df, table, pcol)
-    commitManifest(spark, table, df.schema, staged.map(_._1), 0L,
-      Map("partitionCol" -> pcol), staged.toMap)
-  }
+      pcol: String): Long =
+    createPartitioned(spark, table, df, Seq(pcol))
 
   /** MULTI-COLUMN partitioning: files live in nested Hive-style dirs
     * (`__part0=<a>/__part1=<b>/...`) and each carries the COMPOSITE
@@ -2396,25 +2117,8 @@ object SnapshotTable {
     * opening an excluded file (the Iceberg partition-tuple shape, a
     * strict superset of Hive's prefix-only pruning because the
     * manifest holds full tuples, not a directory trie).
-    */
-  def createPartitioned(spark: SparkSession, table: String, df: DataFrame,
-      pcols: Seq[String]): Long = {
-    require(pcols.nonEmpty, "PARTITIONED BY needs at least one column")
-    val transforms = PartitionTransforms.parse(pcols, df.schema)
-    if (transforms.exists(!_.isIdentity))
-      return createTransformPartitioned(spark, table, df, transforms)
-    val idCols = transforms.map(_.source)
-    if (idCols.length == 1)
-      return createPartitioned(spark, table, df, idCols.head)
-    require(currentVersion(spark, table) == 0,
-      s"$table already has committed snapshots")
-    val staged = stagePartitionedBatchMulti(df, table, idCols)
-    commitManifest(spark, table, df.schema, staged.map(_._1), 0L,
-      Map("partitionCols" -> idCols.map(enc).mkString(",")),
-      staged.toMap)
-  }
-
-  /** HIDDEN partitioning (Iceberg partition transforms): the spec list
+    *
+    * HIDDEN partitioning (Iceberg partition transforms): the spec list
     * may mix `days(ts)`/`hours(ts)`/`months(ts)`/`years(ts)`,
     * `bucket(n, c)`, `truncate(w, c)` and bare identity columns — see
     * [[PartitionTransforms]]. The manifest stores the canonical spec
@@ -2426,45 +2130,17 @@ object SnapshotTable {
     * values; queries filter the raw column and the scan prunes the
     * predicate through the transform.
     */
-  private def createTransformPartitioned(spark: SparkSession,
-      table: String, df: DataFrame,
-      transforms: Seq[PartitionTransform]): Long = {
-    require(currentVersion(spark, table) == 0,
-      s"$table already has committed snapshots")
-    val staged = stageLabeledBatchMulti(df, table,
-      transforms.map(t => t.labelCol(col(s"`${t.source}`"))))
-    commitManifest(spark, table, df.schema, staged.map(_._1), 0L,
-      Map(
-        "partitionSpec" -> transforms.map(t => enc(t.spec)).mkString(","),
-        "partitionCols" ->
-          transforms.map(t => enc(t.source)).mkString(",")),
-      staged.toMap)
-  }
-
-  /** The table's partition TRANSFORMS, aligned with [[partitionColsOf]]
-    * — empty when the table is unpartitioned or plainly (identity-)
-    * partitioned in the pre-transform meta format.
-    */
-  private[graft] def partitionSpecOf(snap: Snapshot)
-      : Seq[PartitionTransform] =
-    snap.meta.get("partitionSpec").toSeq.flatMap(v =>
-      v.split(',').filter(_.nonEmpty).toSeq.map(s =>
-        PartitionTransforms.parseOne(dec(s), snap.schema)))
-
-  /** The partition layout as transforms regardless of meta vintage:
-    * the declared spec when present, otherwise the identity columns.
-    */
-  private[graft] def partitionTransformsOf(snap: Snapshot)
-      : Seq[PartitionTransform] = {
-    val specs = partitionSpecOf(snap)
-    if (specs.nonEmpty) specs
-    else partitionColsOf(snap).map(PartitionTransforms.PIdentity)
+  def createPartitioned(spark: SparkSession, table: String, df: DataFrame,
+      pcols: Seq[String]): Long = {
+    require(pcols.nonEmpty, "PARTITIONED BY needs at least one column")
+    createAs(spark, table, Snapshot(0L, df.schema, Nil,
+      TableLayout.declare(df.schema, partitionBy = pcols).meta), df)
   }
 
   /** Create a BUCKETED table: every batch — the create, appends,
     * mutation rewrites, compaction — hash-repartitions into exactly
-    * `numBuckets` bucket-tagged files ([[stageBucketedBatch]]), and
-    * the Catalyst relations declare the matching `BucketSpec`, so a
+    * `numBuckets` bucket-tagged files ([[stageBatch]]), and the
+    * Catalyst relations declare the matching `BucketSpec`, so a
     * join between two graft tables bucketed the same way on the join
     * key plans WITHOUT a shuffle on either side (Spark's v1 bucketed
     * scan — the co-located-join layout that at 100 TB turns the
@@ -2485,92 +2161,22 @@ object SnapshotTable {
     * partitionBy = Seq("days(ts)"))` is the canonical date-partitioned,
     * key-bucketed large fact. Partition pruning and the exchange-free
     * bucket join compose: rows of one key hash to the same bucket id
-    * inside every partition dir.
+    * inside every partition dir. Within-bucket `sortCols` play
+    * `bucketBy + sortBy`'s role: staged batches sort inside each
+    * bucket, and the relations declare them in the BucketSpec — Spark
+    * trusts the ordering exactly when a bucket is ONE file (its own
+    * single-file check), so after a compact() the sort-merge join plans
+    * with NO SortExec on the graft sides either: zero exchanges AND
+    * zero sorts.
     */
   def createBucketed(spark: SparkSession, table: String, df: DataFrame,
       bucketCols: Seq[String], numBuckets: Int,
       sortCols: Seq[String], partitionBy: Seq[String]): Long = {
-    require(currentVersion(spark, table) == 0,
-      s"$table already has committed snapshots")
     require(bucketCols.nonEmpty, "bucketed layout needs bucket columns")
-    (bucketCols ++ sortCols).foreach(c =>
-      require(df.columns.contains(c),
-        s"bucket/sort column $c is not in the frame " +
-          s"(${df.columns.mkString(", ")})"))
-    require(numBuckets > 0 && numBuckets <= 100000,
-      s"numBuckets must be in [1, 100000], got $numBuckets")
-    val transforms = PartitionTransforms.parse(partitionBy, df.schema)
-    transforms.foreach(t => require(!bucketCols.contains(t.source) ||
-      !t.isIdentity,
-      s"${t.source} cannot be both a bucket column and an identity " +
-        "partition column"))
-    val bucketMeta =
-      Map("bucketCols" -> bucketCols.map(enc).mkString(","),
-        "bucketN" -> numBuckets.toString) ++
-        (if (sortCols.isEmpty) Map.empty[String, String]
-         else Map("bucketSort" -> sortCols.map(enc).mkString(",")))
-    if (transforms.isEmpty) {
-      val files = stageBucketedBatch(df, table, bucketCols, numBuckets,
-        sortCols.map(c => col(s"`$c`")))
-      commitManifest(spark, table, df.schema, files, 0L, bucketMeta)
-    } else {
-      val staged = stagePartitionedBucketedBatch(df, table,
-        transforms.map(t => t.labelCol(col(s"`${t.source}`"))),
-        bucketCols, numBuckets, sortCols.map(c => col(s"`$c`")))
-      val pmeta =
-        if (transforms.exists(!_.isIdentity))
-          Map("partitionSpec" ->
-            transforms.map(t => enc(t.spec)).mkString(","),
-            "partitionCols" ->
-              transforms.map(t => enc(t.source)).mkString(","))
-        else Map("partitionCols" ->
-          transforms.map(t => enc(t.source)).mkString(","))
-      commitManifest(spark, table, df.schema, staged.map(_._1), 0L,
-        bucketMeta ++ pmeta, staged.toMap)
-    }
+    createAs(spark, table, Snapshot(0L, df.schema, Nil,
+      TableLayout.declare(df.schema, partitionBy, bucketCols, numBuckets,
+        sortCols).meta), df)
   }
-
-  /** The declared bucket layout, when the table has one (multi-column
-    * tables store the encoded list under `bucketCols`, pre-existing
-    * single-column ones the bare name under `bucketCol` — both read).
-    */
-  private[graft] def bucketSpecOf(snap: Snapshot)
-      : Option[(Seq[String], Int)] =
-    for {
-      c <- snap.meta.get("bucketCols")
-        .map(_.split(',').filter(_.nonEmpty).map(dec).toSeq)
-        .orElse(snap.meta.get("bucketCol").map(Seq(_)))
-      n <- snap.meta.get("bucketN")
-    } yield (c, n.toInt)
-
-  /** Declared within-bucket sort columns (`bucketBy + sortBy`'s role):
-    * staged batches sort inside each bucket, and the relations declare
-    * them in the BucketSpec — Spark trusts the ordering exactly when a
-    * bucket is ONE file (its own single-file check), so after a
-    * compact() the sort-merge join plans with NO SortExec on the graft
-    * sides either: zero exchanges AND zero sorts.
-    */
-  private[graft] def bucketSortOf(snap: Snapshot): Seq[String] =
-    snap.meta.get("bucketSort").toSeq
-      .flatMap(_.split(',').filter(_.nonEmpty).map(dec))
-
-  /** The table's partition columns: multi-column tables store the
-    * encoded list under `partitionCols`, single-column ones the bare
-    * name under `partitionCol` (the pre-existing format — both read).
-    */
-  private[graft] def partitionColsOf(snap: Snapshot): Seq[String] =
-    snap.meta.get("partitionCols")
-      .map(_.split(',').filter(_.nonEmpty).map(dec).toSeq)
-      .getOrElse(snap.meta.get("partitionCol").toSeq)
-
-  /** A file's partition values, aligned with [[partitionColsOf]]. */
-  private[sources] def partValuesOf(snap: Snapshot,
-      file: String): Option[Seq[String]] =
-    snap.partitionOf.get(file).map { l =>
-      if (snap.meta.contains("partitionCols"))
-        l.split(",", -1).map(dec).toSeq
-      else Seq(l)
-    }
 
   /** Read only the partitions in `values`: the file list is pruned on
     * manifest metadata ALONE — no data-file footer of an excluded
@@ -2582,7 +2188,8 @@ object SnapshotTable {
       case Some(v) => readManifest(spark, table, v)
       case None => loadCurrent(spark, table)
     }
-    val pcols = partitionColsOf(snap)
+    val layout = TableLayout.of(snap)
+    val pcols = layout.partitionCols
     require(pcols.nonEmpty,
       s"$table is not partitioned - use read + a filter")
     // the bare-values signature names no column, so it is only
@@ -2595,8 +2202,8 @@ object SnapshotTable {
         "readWhere(table, Map(column -> values)) to name the " +
         "column(s), or read + a filter (the scan prunes on the full " +
         "composite tuple)")
-    val files = snap.files.filter(f =>
-      partValuesOf(snap, f).flatMap(_.headOption).exists(values))
+    val files = snap.files.filter(f => snap.partitionOf.get(f)
+      .exists(l => values(layout.valuesOf(l).head)))
     readFilesDv(spark, table, snap, files)
   }
 
@@ -2612,7 +2219,8 @@ object SnapshotTable {
       case Some(v) => readManifest(spark, table, v)
       case None => loadCurrent(spark, table)
     }
-    val pcols = partitionColsOf(snap)
+    val layout = TableLayout.of(snap)
+    val pcols = layout.partitionCols
     require(pcols.nonEmpty,
       s"$table is not partitioned - use read + a filter")
     val unknown = colValues.keys.filterNot(pcols.contains)
@@ -2621,7 +2229,7 @@ object SnapshotTable {
         s"(partitioned by ${pcols.mkString(", ")})")
     val wanted = pcols.map(colValues.get) // aligned with the tuple
     val files = snap.files.filter(f =>
-      partValuesOf(snap, f).exists(tuple =>
+      snap.partitionOf.get(f).map(layout.valuesOf).exists(tuple =>
         tuple.lazyZip(wanted).forall((v, w) => w.forall(_ (v)))))
     readFilesDv(spark, table, snap, files)
   }
@@ -2640,21 +2248,14 @@ object SnapshotTable {
   def createClustered(spark: SparkSession, table: String, df: DataFrame,
       clusterCol: String, numFiles: Int = 8,
       statsCols: Seq[String] = Nil): Long = {
-    require(currentVersion(spark, table) == 0,
-      s"$table already has committed snapshots")
+    // the clustering key is DECLARED table metadata: staging range-sorts
+    // this batch and keeps later batches batch-locally sorted on it, and
+    // compact()/maintain() re-cluster the whole table on it
+    val layout = TableLayout.declare(df.schema, cluster = Seq(clusterCol))
     val sc = if (statsCols.isEmpty) Seq(clusterCol) else statsCols
-    val arranged = df
-      .repartitionByRange(numFiles, col(clusterCol))
-      .sortWithinPartitions(col(clusterCol))
-    val files = stageBatch(arranged, table)
-    val (stats, extras) = computeStats(spark, table, files, sc, df.schema)
-    // the clustering key is DECLARED table metadata: staging keeps
-    // later batches batch-locally sorted on it and compact()/maintain()
-    // re-cluster the whole table on it (see declaredClusterCols)
-    commitManifest(spark, table, df.schema, files, 0L,
-      Map("statsCols" -> sc.mkString(","),
-        "clusterCols" -> clusterCol), Map.empty, stats, Nil,
-      None, extras)
+    createAs(spark, table, Snapshot(0L, df.schema, Nil,
+      layout.meta + ("statsCols" -> sc.mkString(","))),
+      df.repartitionByRange(numFiles, col(s"`$clusterCol`")))
   }
 
   /** Read only the files whose recorded [min,max] for `column` can
@@ -3044,27 +2645,10 @@ object SnapshotTable {
          else k) -> v }
     def rekeyList(v: String) =
       v.split(',').map(c => if (c == from) to else c).mkString(",")
-    val newMeta = snap.meta
+    val newMeta = TableLayout.of(snap).renamed(from, to).into(snap.meta
       .map {
-        case ("partitionCol", `from`) => "partitionCol" -> to
-        case ("partitionCols", v) => "partitionCols" ->
-          v.split(',').map(c => if (dec(c) == from) enc(to) else c)
-            .mkString(",")
-        case ("partitionSpec", v) => "partitionSpec" ->
-          v.split(',').map { s =>
-            val t = PartitionTransforms.parseOne(dec(s), snap.schema)
-            if (t.source == from) enc(t.withSource(to).spec) else s
-          }.mkString(",")
         case ("statsCols", v) => "statsCols" -> rekeyList(v)
-        case ("bucketCol", `from`) => "bucketCol" -> to
-        case ("bucketCols", v) => "bucketCols" ->
-          v.split(',').map(c => if (dec(c) == from) enc(to) else c)
-            .mkString(",")
-        case ("bucketSort", v) => "bucketSort" ->
-          v.split(',').map(c => if (dec(c) == from) enc(to) else c)
-            .mkString(",")
         case ("bloomCols", v) => "bloomCols" -> rekeyList(v)
-        case ("clusterCols", v) => "clusterCols" -> rekeyList(v)
         case ("identityCol", `from`) => "identityCol" -> to
         case ("identitySort", v) => "identitySort" ->
           v.split(',').map(c => if (dec(c) == from) enc(to) else c)
@@ -3072,7 +2656,7 @@ object SnapshotTable {
         case (k, v) if k == s"colDefault.${enc(from)}" =>
           s"colDefault.${enc(to)}" -> v
         case kv => kv
-      } + ("colmap" -> encodeColMap(newCm))
+      }) + ("colmap" -> encodeColMap(newCm))
     // FULL manifest, not a delta: this commit re-keys the per-file
     // stats/extras of every UNCHANGED file, and a delta encodes
     // per-file attributes only for added files — the re-keyed entries
@@ -3107,21 +2691,21 @@ object SnapshotTable {
     val snap = loadCurrent(spark, table)
     val distinct = names.distinct
     require(distinct.nonEmpty, "DROP COLUMN needs at least one column")
+    val layout = TableLayout.of(snap)
     // ---- pre-flight EVERY guard for EVERY name before the commit ----
     distinct.foreach { name =>
       require(snap.schema.fieldNames.contains(name),
         s"no such column $name")
-      require(!snap.meta.get("partitionCol").contains(name) &&
-        !partitionColsOf(snap).contains(name),
+      require(!layout.partitionCols.contains(name),
         s"cannot drop partition column $name")
       // bucket membership guards like partition membership: dropping a
       // bucket (or within-bucket sort) column would leave the manifest
       // declaring a BucketSpec over a nonexistent column, breaking
       // every subsequent scan — rebucketTable is the evolution verb
-      require(!bucketSpecOf(snap).exists(_._1.contains(name)),
+      require(!layout.buckets.exists(_.bucketColumnNames.contains(name)),
         s"cannot drop bucket column $name — rebucket first " +
           "(rebucketTable)")
-      require(!bucketSortOf(snap).contains(name),
+      require(!layout.buckets.exists(_.sortColumnNames.contains(name)),
         s"cannot drop bucket-sort column $name — rebucket first " +
           "(rebucketTable)")
       requireUnconstrained(snap, name, "drop")
@@ -3149,12 +2733,12 @@ object SnapshotTable {
         s"cannot drop $name: it orders identity assignment " +
           "(identitySort)")
     }
-    val base = (snap.meta.map {
-      case ("statsCols", v) => "statsCols" -> strip(v)
-      case ("bloomCols", v) => "bloomCols" -> strip(v)
-      case ("clusterCols", v) => "clusterCols" -> strip(v)
-      case kv => kv
-    } -- distinct.map(n => s"colDefault.${enc(n)}")) +
+    val base = (layout.copy(cluster = layout.cluster.filterNot(nameSet))
+      .into(snap.meta.map {
+        case ("statsCols", v) => "statsCols" -> strip(v)
+        case ("bloomCols", v) => "bloomCols" -> strip(v)
+        case kv => kv
+      }) -- distinct.map(n => s"colDefault.${enc(n)}")) +
       ("droppedCols" -> dropped)
     val newCm = cm -- nameSet
     val newMeta =
@@ -3412,6 +2996,7 @@ object SnapshotTable {
   def detail(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
     val snap = loadCurrent(spark, table)
+    val layout = TableLayout.of(snap)
     // materialized-view observability: its source, the refresh mark,
     // the source's CURRENT version (one manifest-dir listing) and the
     // derived staleness — the row an operator's "which MVs need a
@@ -3431,12 +3016,10 @@ object SnapshotTable {
       // transform-partitioned tables show the SPEC (days(ts), ...);
       // identity tables the bare column list — both read back through
       // repartitionTable / createPartitioned unchanged
-      (if (snap.meta.contains("partitionSpec"))
-         partitionSpecOf(snap).map(_.spec)
-       else partitionColsOf(snap)).mkString(","),
-      declaredClusterCols(snap).mkString(","),
-      bucketSpecOf(snap).map(_._1.mkString(",")),
-      snap.meta.get("bucketN").map(_.toInt),
+      layout.partitions.map(_.spec).mkString(","),
+      layout.cluster.mkString(","),
+      layout.buckets.map(_.bucketColumnNames.mkString(",")),
+      layout.buckets.map(_.numBuckets),
       snap.meta.get("identityCol"),
       snap.meta.get("identityHwm").map(_.toLong),
       declaredStatsCols(snap).mkString(","),
@@ -3592,8 +3175,8 @@ object SnapshotTable {
     val snap = loadCurrent(spark, table)
     // spec items may be transforms (days(ts), bucket(n, c), ...) —
     // parse validates sources against the schema
-    val transforms =
-      PartitionTransforms.parse(newPartitionCols, snap.schema)
+    val transforms = TableLayout.declare(snap.schema,
+      partitionBy = newPartitionCols).partitions
     val sources = transforms.map(_.source)
     require(newPartitionCols.distinct.size == newPartitionCols.size,
       "partition spec items must be distinct")
@@ -3606,30 +3189,8 @@ object SnapshotTable {
     // rewrite = materialization (DVs, colmap, initial defaults), same
     // as compact — so the evolved manifest sheds them
     val df = readFilesDv(spark, table, snap, snap.files)
-    val newMeta0 =
-      snap.meta - "partitionCol" - "partitionCols" - "partitionSpec" -
-        "colmap" - "droppedCols" - "stagingTz"
-    val newMeta =
-      if (transforms.exists(!_.isIdentity))
-        newMeta0 +
-          ("partitionSpec" ->
-            transforms.map(t => enc(t.spec)).mkString(",")) +
-          ("partitionCols" -> sources.map(enc).mkString(","))
-      else sources match {
-        case Nil => newMeta0
-        // a BUCKETED table must carry `partitionCols` even for one
-        // identity column: stageFor's partition × bucket composed
-        // branch (and partValuesOf's label decode) key on
-        // partitionCols/partitionSpec — the legacy bare key would
-        // stage partition-only files with NO bucket tags under a
-        // manifest that still declares a BucketSpec ("Invalid bucket
-        // file" on the next bucketed scan)
-        case Seq(one) if bucketSpecOf(snap).isDefined =>
-          newMeta0 + ("partitionCols" -> enc(one))
-        case Seq(one) => newMeta0 + ("partitionCol" -> one)
-        case many =>
-          newMeta0 + ("partitionCols" -> many.map(enc).mkString(","))
-      }
+    val newMeta = TableLayout.of(snap).withPartitions(transforms)
+      .into(snap.meta - "colmap" - "droppedCols" - "stagingTz")
     val target = snap.copy(meta = newMeta)
     val (files, labels, stats, extras) = stageFor(target, df, table)
     commitManifest(spark, table, snap.schema, files, snap.version,
@@ -3654,38 +3215,22 @@ object SnapshotTable {
       numBuckets: Int, bucketCols: Seq[String] = Nil,
       sortCols: Seq[String] = Nil): Long = {
     val snap = loadCurrent(spark, table)
-    val cur = bucketSpecOf(snap)
+    val cur = TableLayout.of(snap)
     val cols =
       if (bucketCols.nonEmpty) bucketCols
-      else cur.map(_._1).getOrElse(Seq.empty)
+      else cur.buckets.map(_.bucketColumnNames).getOrElse(Seq.empty)
     require(cols.nonEmpty,
       s"$table is not bucketed — pass bucketCols to introduce a " +
         "bucket layout")
-    (cols ++ sortCols).foreach(c =>
-      require(snap.schema.fieldNames.contains(c),
-        s"bucket/sort column $c is not a table column " +
-          s"(${snap.schema.fieldNames.mkString(", ")})"))
-    require(numBuckets > 0 && numBuckets <= 100000,
-      s"numBuckets must be in [1, 100000], got $numBuckets")
-    val sorts = if (sortCols.nonEmpty) sortCols else bucketSortOf(snap)
+    val sorts =
+      if (sortCols.nonEmpty) sortCols
+      else cur.buckets.map(_.sortColumnNames).getOrElse(Nil)
+    // a table carrying the legacy single `partitionCol` key moves to
+    // `partitionCols` here (the bare key is for unbucketed layouts only)
+    val newMeta = cur.withBuckets(TableLayout.declare(snap.schema,
+      bucketCols = cols, numBuckets = numBuckets, bucketSort = sorts)
+      .buckets).into(snap.meta - "colmap" - "droppedCols")
     val df = readFilesDv(spark, table, snap, snap.files)
-    // a table carrying the legacy single `partitionCol` key upgrades
-    // to `partitionCols` here: the bucket layout being introduced (or
-    // rewritten) stages through the partition × bucket composed branch,
-    // which keys on partitionCols/partitionSpec and writes enc'd
-    // composite labels — leaving the bare key would stage partition
-    // files with no bucket tags under a manifest declaring a BucketSpec
-    val meta0 = snap.meta.get("partitionCol") match {
-      case Some(pc) =>
-        (snap.meta - "partitionCol") + ("partitionCols" -> enc(pc))
-      case None => snap.meta
-    }
-    val newMeta = (meta0 - "bucketCol" - "bucketSort" - "colmap" -
-      "droppedCols") +
-      ("bucketCols" -> cols.map(enc).mkString(",")) +
-      ("bucketN" -> numBuckets.toString) ++
-      (if (sorts.isEmpty) Map.empty[String, String]
-       else Map("bucketSort" -> sorts.map(enc).mkString(",")))
     val target = snap.copy(meta = newMeta)
     val (files, labels, stats, extras) = stageFor(target, df, table)
     commitManifest(spark, table, snap.schema, files, snap.version,
@@ -3763,8 +3308,8 @@ object SnapshotTable {
         s"(${df.columns.mkString(", ")})"))
     // items may be transforms (days(ts), bucket(n, c), ...) — identity
     // composes with hidden partitioning like with identity columns
-    val transforms = PartitionTransforms.parse(partitionCols, df.schema)
-    require(!transforms.exists(_.source.equalsIgnoreCase(idCol)),
+    val layout = TableLayout.declare(df.schema, partitionBy = partitionCols)
+    require(!layout.partitionCols.exists(_.equalsIgnoreCase(idCol)),
       s"cannot partition by the identity column $idCol — its values " +
         "are assigned at commit, after the layout is chosen")
     val schema = StructType(
@@ -3774,34 +3319,15 @@ object SnapshotTable {
     val meta = Map("identityCol" -> idCol, "identityHwm" -> "0") ++
       (if (sortCols.isEmpty) Map.empty[String, String]
        else Map("identitySort" -> sortCols.map(enc).mkString(","))) ++
-      (if (transforms.exists(!_.isIdentity))
-         Map("partitionSpec" ->
-           transforms.map(t => enc(t.spec)).mkString(","),
-           "partitionCols" ->
-             transforms.map(t => enc(t.source)).mkString(","))
-       else transforms.map(_.source) match {
-        case Nil => Map.empty[String, String]
-        case Seq(one) => Map("partitionCol" -> one)
-        case many => Map("partitionCols" -> many.map(enc).mkString(","))
-      })
+      layout.meta
     val snap0 = Snapshot(0L, schema, Nil, meta)
+    // ids are assigned globally FIRST (the rank pipeline is
+    // layout-independent), then the assigned rows stage through the
+    // table's layout like every later append
     val (assigned, hwm) = assignIdentity(snap0, df)
-    if (partitionCols.isEmpty) {
-      val files = stageBatch(assigned.repartition(numFiles), table)
-      commitManifest(spark, table, schema, files, 0L,
-        meta + ("identityHwm" -> hwm.toString))
-    } else {
-      // identity + partitioned: ids are assigned globally FIRST (the
-      // rank pipeline is layout-independent), then the assigned rows
-      // stage through the shared layout-aware path — every later
-      // append verb already composes identityFor with stageFor, so
-      // create was the only missing combination
-      val (files, labels, stats, extras) = stageFor(snap0, assigned,
-        table)
-      commitManifest(spark, table, schema, files, 0L,
-        meta + ("identityHwm" -> hwm.toString), labels, stats, Nil,
-        None, extras)
-    }
+    createAs(spark, table,
+      snap0.copy(meta = meta + ("identityHwm" -> hwm.toString)),
+      if (layout.placesRows) assigned else assigned.repartition(numFiles))
   }
 
   /** Assign `hwm+1 .. hwm+n` to the table's identity column (see
@@ -4435,18 +3961,18 @@ object SnapshotTable {
       numFiles: Int = 0): (Long, Int, Int) = {
     val snap0 = loadCurrent(spark, table)
     if (snap0.files.isEmpty) return (snap0.version, 0, 0)
-    val cluster =
-      if (clusterBy.nonEmpty) clusterBy else declaredClusterCols(snap0)
+    val layout0 = TableLayout.of(snap0)
+    val cluster = if (clusterBy.nonEmpty) clusterBy else layout0.cluster
     cluster.foreach(c => require(snap0.schema.fieldNames.contains(c),
       s"cluster column $c is not a table column " +
         s"(${snap0.schema.fieldNames.mkString(", ")})"))
     // the evolved declarations ride the compaction commit AND drive
     // its own staging/stats passes (stats must cover the cluster key
     // or range pruning on it has nothing to prune with)
+    val layout = layout0.copy(cluster = cluster)
     val snap =
       if (cluster.isEmpty) snap0
-      else snap0.copy(meta = snap0.meta +
-        ("clusterCols" -> cluster.mkString(",")) +
+      else snap0.copy(meta = layout.into(snap0.meta) +
         ("statsCols" -> (declaredStatsCols(snap0) ++
           cluster.filterNot(declaredStatsCols(snap0).contains))
           .mkString(",")))
@@ -4463,53 +3989,46 @@ object SnapshotTable {
     // rows drop out of the rewrite) and the new manifest clears the
     // vector list — compact doubles as the DV purge
     val df0 = readFilesDv(spark, table, snap, snap.files)
-    // partitioned tables compact per partition (stageFor re-labels),
-    // bucketed ones per bucket (stageFor re-buckets — the BucketSpec
-    // must stay true through maintenance); unpartitioned ones into
-    // ~targetMB files
-    val (fresh, labels, stats, extras) =
-      if (snap.meta.contains("partitionCols") ||
-          bucketSpecOf(snap).isDefined) stageFor(snap, df0, table)
-      else snap.meta.get("partitionCol") match {
-        case Some(_) => stageFor(snap, df0, table)
-        case None =>
-          // clustered: a GLOBAL re-sort (the one shuffle this
-          // maintenance verb is for). One dimension → range sort (file
-          // k holds keys strictly below file k+1 — the tightest
-          // min/max layout one dimension allows). SEVERAL numeric
-          // dimensions → Z-ORDER (bit-interleaved cells): every file
-          // covers a small hyper-rectangle, so a narrow predicate on
-          // ANY clustered dimension prunes — lexicographic multi-key
-          // sort would cluster only the leading column. Non-numeric
-          // multi-column keys fall back to lexicographic (z-cells need
-          // a numeric scale).
-          val numericZ = cluster.size > 1 && cluster.forall { c =>
-            val dt = snap.schema(c).dataType
-            dt.isInstanceOf[org.apache.spark.sql.types.NumericType] ||
-              dt == org.apache.spark.sql.types.TimestampType ||
-              dt == org.apache.spark.sql.types.DateType
-          }
-          val arranged =
-            if (cluster.isEmpty) df0.repartition(nOut)
-            else if (numericZ) {
-              require(!snap.schema.fieldNames.contains("__z"),
-                "z-order compaction reserves the column name __z")
-              graft.operators.ScalePatterns.withZValue(df0, cluster)
-                .repartitionByRange(nOut, col("__z"))
-                .sortWithinPartitions(col("__z"))
-                .drop("__z")
-            } else df0
-              .repartitionByRange(nOut, cluster.map(col): _*)
-              .sortWithinPartitions(cluster.map(col): _*)
-          val files = stageBatch(arranged, table)
-          // re-index like every other mutation: compaction must not
-          // silently degrade bloom point-lookup coverage
-          writeBloomSidecars(spark, table, files, declaredBloomCols(snap),
-            snap.schema)
-          val (st, ex) = computeStats(spark, table, files,
-            declaredStatsCols(snap), snap.schema)
-          (files, Map.empty[String, String], st, ex)
+    // partitioned tables compact per partition (the layout re-labels),
+    // bucketed ones per bucket (the layout re-buckets — the BucketSpec
+    // must stay true through maintenance); the rest re-arrange globally
+    // into ~targetMB files, already in cluster order, so they stage
+    // without the layout's batch-local cluster sort
+    val (input, staging) =
+      if (layout.placesRows) (df0, layout)
+      else {
+        // clustered: a GLOBAL re-sort (the one shuffle this
+        // maintenance verb is for). One dimension → range sort (file
+        // k holds keys strictly below file k+1 — the tightest
+        // min/max layout one dimension allows). SEVERAL numeric
+        // dimensions → Z-ORDER (bit-interleaved cells): every file
+        // covers a small hyper-rectangle, so a narrow predicate on
+        // ANY clustered dimension prunes — lexicographic multi-key
+        // sort would cluster only the leading column. Non-numeric
+        // multi-column keys fall back to lexicographic (z-cells need
+        // a numeric scale).
+        val numericZ = cluster.size > 1 && cluster.forall { c =>
+          val dt = snap.schema(c).dataType
+          dt.isInstanceOf[org.apache.spark.sql.types.NumericType] ||
+            dt == org.apache.spark.sql.types.TimestampType ||
+            dt == org.apache.spark.sql.types.DateType
+        }
+        val arranged =
+          if (cluster.isEmpty) df0.repartition(nOut)
+          else if (numericZ) {
+            require(!snap.schema.fieldNames.contains("__z"),
+              "z-order compaction reserves the column name __z")
+            graft.operators.ScalePatterns.withZValue(df0, cluster)
+              .repartitionByRange(nOut, col("__z"))
+              .sortWithinPartitions(col("__z"))
+              .drop("__z")
+          } else df0
+            .repartitionByRange(nOut, cluster.map(col): _*)
+            .sortWithinPartitions(cluster.map(col): _*)
+        (arranged, TableLayout.Plain)
       }
+    val (fresh, labels, stats, extras) =
+      stageFor(snap, input, table, staging)
     // the rewrite lands every row under the CURRENT column names, so
     // compaction clears the column mapping (and un-retires former /
     // dropped names: no current-snapshot file carries them anymore) —
@@ -4559,9 +4078,10 @@ object SnapshotTable {
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
     import org.apache.spark.sql.types.StringType
     val snap = loadCurrent(spark, table)
-    require(partitionColsOf(snap).nonEmpty,
+    val layout = TableLayout.of(snap)
+    val transforms = layout.partitions
+    require(transforms.nonEmpty,
       s"$table is not partitioned — use compact()")
-    val transforms = partitionTransformsOf(snap)
     val positions = transforms.zipWithIndex
       .filter(_._1.source.equalsIgnoreCase(column)).map(_._2)
     require(positions.nonEmpty,
@@ -4627,10 +4147,7 @@ object SnapshotTable {
       }
     }
     snap.partitionOf.values.toSet.filter { composite =>
-      val vals =
-        if (snap.meta.contains("partitionCols"))
-          composite.split(",", -1).map(dec).toSeq
-        else Seq(composite)
+      val vals = layout.valuesOf(composite)
       positions.forall(pi =>
         vals.lift(pi).forall(v => admits(transforms(pi), v)))
     }
@@ -4639,7 +4156,7 @@ object SnapshotTable {
   def compactPartitions(spark: SparkSession, table: String,
       values: Set[String]): (Long, Int, Int) = {
     val snap = loadCurrent(spark, table)
-    require(partitionColsOf(snap).nonEmpty,
+    require(TableLayout.of(snap).partitions.nonEmpty,
       s"$table is not partitioned — use compact()")
     require(values.nonEmpty, "name at least one partition value")
     require(snap.deleteFiles.isEmpty,
@@ -4915,7 +4432,7 @@ object SnapshotTable {
       val tableUri = f.makeQualified(new Path(table)).toString
       f.listStatus(dataDir).filter(_.isDirectory).foreach { b =>
         // RECURSIVE listing: partitioned batches nest their parquet
-        // under __part=* subdirectories — a direct-children-only sweep
+        // under __part<i>=* subdirectories — a direct-children-only sweep
         // would miss them AND then judge the batch dir empty-of-parquet
         // and recursively delete LIVE nested data
         val it = f.listFiles(b.getPath, true)
@@ -5672,10 +5189,8 @@ object SnapshotTable {
     * files were staged under the FORK's layout and validated under the
     * fork's constraints).
     */
-  private val CherryLayoutKeys = Seq("partitionCol", "partitionCols",
-    "partitionSpec", "bucketCol", "bucketCols", "bucketN", "bucketSort",
-    "colmap", "droppedCols", "identityCol", "identitySort",
-    "clusterCols", "statsCols", "bloomCols")
+  private val CherryLayoutKeys = TableLayout.MetaKeys ++ Seq("colmap",
+    "droppedCols", "identityCol", "identitySort", "statsCols", "bloomCols")
 
   private def cherryPickOnto(spark: SparkSession, table: String,
       name: String, snap: Snapshot, base: Long, cur: Long): Long = {

@@ -538,7 +538,8 @@ class PlanAuditSuite extends AnyFunSuite with AdaptiveSparkPlanHelper {
       SnapshotTable.rebucketTable(spark, ta, 16)
       val snapB = SnapshotTable.readManifest(spark, tb,
         SnapshotTable.currentVersion(spark, tb))
-      assert(SnapshotTable.bucketSpecOf(snapB)
+      assert(graft.sources.TableLayout.of(snapB).buckets.map(b =>
+        (b.bucketColumnNames, b.numBuckets))
         .contains((Seq("l_partkey", "l_suppkey"), 16)))
       assertNoExchange("after rebucket to 16", filtered = false)
       assert(SnapshotTable.read(spark, tb, Some(preRebucket)).count()

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.SnapshotTable
+import graft.sources.{SnapshotTable, TableLayout}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,6 +25,10 @@ class SnapshotSuite extends AnyFunSuite {
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.orderBy(col("o_orderkey")).collect().map(_.toString).toSeq
+
+  private def bucketsOf(snap: SnapshotTable.Snapshot)
+      : Option[(Seq[String], Int)] =
+    TableLayout.of(snap).buckets.map(b => (b.bucketColumnNames, b.numBuckets))
 
   test("create + read round trip equals the source") {
     val t = freshTable("roundtrip")
@@ -1733,8 +1737,8 @@ class SnapshotSuite extends AnyFunSuite {
   }
 
   test("CHECK constraints cover the partitioned and WAP staging paths") {
-    // partitioned tables stage through stagePartitionedBatch — the
-    // other half of stageFor; enforcement must be identical
+    // partitioned tables stage through the labeled stageBatch layout
+    // (partition dirs, hash on the labels); enforcement must be identical
     val t = freshTable("consppart")
     SnapshotTable.createPartitioned(spark, t, orders
       .withColumn("part", col("o_orderstatus")), "part")
@@ -3139,7 +3143,7 @@ class SnapshotSuite extends AnyFunSuite {
       s2.sql(s"INSERT INTO $name VALUES (1, 1.0), (2, 2.0), (3, 3.0)")
       val snap = SnapshotTable.readManifest(spark, t,
         SnapshotTable.currentVersion(spark, t))
-      assert(SnapshotTable.bucketSpecOf(snap) === Some((Seq("k"), 4)))
+      assert(bucketsOf(snap) === Some((Seq("k"), 4)))
       assert(snap.files.nonEmpty && snap.files.forall(f =>
         f.substring(f.lastIndexOf('/') + 1)
           .matches(""".*_(\d+)(?:\..*)?$""")),
@@ -3151,7 +3155,7 @@ class SnapshotSuite extends AnyFunSuite {
     (1L to 100L).map(k => (k, k * 2.0)).toDF("k", "v")
       .write.format("graft").option("bucketCol", "k")
       .option("bucketN", "4").save(t2)
-    assert(SnapshotTable.bucketSpecOf(SnapshotTable.readManifest(spark,
+    assert(bucketsOf(SnapshotTable.readManifest(spark,
       t2, 1L)) === Some((Seq("k"), 4)))
     assert(SnapshotTable.read(spark, t2).count() === 100L)
     // bucket + partition COMPOSES on the writer surface (r17): labels
@@ -3162,7 +3166,7 @@ class SnapshotSuite extends AnyFunSuite {
       .write.format("graft").option("bucketCol", "k")
       .option("bucketN", "4").option("partitionCol", "c").save(t3)
     val snap3 = SnapshotTable.readManifest(spark, t3, 1L)
-    assert(SnapshotTable.bucketSpecOf(snap3) === Some((Seq("k"), 4)))
+    assert(bucketsOf(snap3) === Some((Seq("k"), 4)))
     assert(snap3.partitionOf.nonEmpty &&
       snap3.partitionOf.values.toSet === Set("e", "o"))
     assert(snap3.files.forall(f => f.substring(f.lastIndexOf('/') + 1)
@@ -3181,7 +3185,7 @@ class SnapshotSuite extends AnyFunSuite {
     SnapshotTable.repartitionTable(spark, t3, Seq("truncate(1,c)"))
     val snap4 = SnapshotTable.readManifest(spark, t3,
       SnapshotTable.currentVersion(spark, t3))
-    assert(SnapshotTable.bucketSpecOf(snap4) === Some((Seq("k"), 4)))
+    assert(bucketsOf(snap4) === Some((Seq("k"), 4)))
     assert(snap4.partitionOf.values.toSet === Set("e", "o"))
     assert(SnapshotTable.read(spark, t3).count() === 10L)
   }
@@ -3243,7 +3247,7 @@ class SnapshotSuite extends AnyFunSuite {
     }
     val v = SnapshotTable.repartitionTable(spark, t, Seq("o_orderkey"))
     val snap = SnapshotTable.readManifest(spark, t, v)
-    assert(SnapshotTable.partitionColsOf(snap) === Seq("o_orderkey"))
+    assert(TableLayout.of(snap).partitionCols === Seq("o_orderkey"))
     assert(snap.partitionOf.size === snap.files.size,
       "every rewritten file carries its NEW label")
     assert(snap.deleteFiles.isEmpty, "the rewrite materializes DVs")
@@ -3260,7 +3264,7 @@ class SnapshotSuite extends AnyFunSuite {
     }
     // the OLD version still reads with the OLD layout
     val old = SnapshotTable.readManifest(spark, t, 1L)
-    assert(SnapshotTable.partitionColsOf(old) === Seq("o_orderstatus"))
+    assert(TableLayout.of(old).partitionCols === Seq("o_orderstatus"))
     assert(SnapshotTable.readWhere(spark, t, Set("F"), version = Some(1L))
       .filter(col("o_orderstatus") =!= "F").count() === 0L)
     // identity keeps assigning above the mark after the evolution
@@ -3271,7 +3275,7 @@ class SnapshotSuite extends AnyFunSuite {
     // de-partitioning is the Nil spec
     val v2 = SnapshotTable.repartitionTable(spark, t, Nil)
     val snap2 = SnapshotTable.readManifest(spark, t, v2)
-    assert(SnapshotTable.partitionColsOf(snap2).isEmpty &&
+    assert(TableLayout.of(snap2).partitionCols.isEmpty &&
       snap2.partitionOf.isEmpty)
     assert(SnapshotTable.read(spark, t).count() === n + 1)
   }
@@ -3793,7 +3797,7 @@ class SnapshotSuite extends AnyFunSuite {
     SnapshotTable.renameColumn(spark, t, "ts", "event_ts")
     val snap4 = SnapshotTable.readManifest(spark, t,
       SnapshotTable.currentVersion(spark, t))
-    assert(graft.sources.SnapshotTable.partitionSpecOf(snap4)
+    assert(TableLayout.of(snap4).partitions
       .map(_.spec) === Seq("months(event_ts)"))
     // the raw scan refuses column-mapped snapshots (honesty rule) —
     // compact materializes the rename AND relabels through the spec
@@ -3812,7 +3816,7 @@ class SnapshotSuite extends AnyFunSuite {
       """PARTITIONED BY (days(ts), bucket(4, k)) AS """ +
       """SELECT * FROM graft_ptrans_src")""").collect()
     val snapSql = SnapshotTable.readManifest(spark, t2, 1L)
-    assert(graft.sources.SnapshotTable.partitionSpecOf(snapSql)
+    assert(TableLayout.of(snapSql).partitions
       .map(_.spec) === Seq("days(ts)", "bucket(4,k)"))
     assert(sortedRows(SnapshotTable.read(spark, t2)) === sortedRows(df))
     // DESCRIBE DETAIL surfaces the spec text
@@ -5197,6 +5201,27 @@ class SnapshotSuite extends AnyFunSuite {
       .collect()
     assert(SnapshotTable.branches(spark, t)
       .map(r => (r._1, r._3)) === Seq(("bh", 2)))
+  }
+
+  test("every create form rejects a bad layout column before staging") {
+    // `a.b` is a real top-level column whose name needs quoting; `nope`
+    // does not exist
+    val df = spark.range(0, 4).select(col("id").as("k"),
+      pmod(col("id"), lit(2L)).as("a.b"), col("id").as("v"))
+    val creates: Seq[(String, String => Long)] = Seq(
+      "String a.b" -> (SnapshotTable.createPartitioned(spark, _, df, "a.b")),
+      "String nope" -> (SnapshotTable.createPartitioned(spark, _, df, "nope")),
+      "Seq a.b" -> (SnapshotTable.createPartitioned(spark, _, df, Seq("a.b"))),
+      "Seq nope" ->
+        (SnapshotTable.createPartitioned(spark, _, df, Seq("nope"))),
+      "clustered nope" -> (SnapshotTable.createClustered(spark, _, df, "nope")))
+    creates.foreach { case (form, create) =>
+      val t = freshTable("badlayout")
+      withClue(form) {
+        intercept[IllegalArgumentException](create(t))
+        assert(SnapshotTable.currentVersion(spark, t) === 0L)
+      }
+    }
   }
 
   test("on-disk layout format: every create form writes the same meta " +
