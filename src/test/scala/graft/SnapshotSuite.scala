@@ -5341,4 +5341,108 @@ class SnapshotSuite extends AnyFunSuite {
       }
     }
   }
+
+  test("per-file metadata: every file-adding verb records each live " +
+      "file's label, bytes, row count and declared min/max") {
+    val t = freshTable("entry_meta")
+    // `v` is NULL on every 5th row, so declared stats cover files with
+    // and without nulls
+    def frame(from: Long, n: Long): DataFrame =
+      spark.range(from, from + n).select(col("id").as("k"),
+        concat(lit("p"), pmod(col("id"), lit(3L)).cast("string")).as("part"),
+        when(pmod(col("id"), lit(5L)) === 0, lit(null).cast("long"))
+          .otherwise(col("id") * 10).as("v"))
+    val fsys = new org.apache.hadoop.fs.Path(t)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def check(step: String): Unit = {
+      val snap = SnapshotTable.readManifest(spark, t,
+        SnapshotTable.currentVersion(spark, t))
+      val live = snap.files.toSet
+      assert(live.size === snap.files.size, s"$step: duplicate entries")
+      Seq("label" -> snap.partitionOf.keySet, "stats" -> snap.statsOf.keySet,
+        "extra" -> snap.extraOf.keySet).foreach { case (what, keys) =>
+        assert(keys.subsetOf(live),
+          s"$step: $what for files outside v${snap.version}: ${keys -- live}")
+      }
+      val partitioned = TableLayout.of(snap).partitions.nonEmpty
+      assert(partitioned || step == "create", s"$step: layout lost")
+      val declared = snap.meta("statsCols").split(',').toSeq
+      assert(declared.toSet === Set("k", "v"), s"$step: statsCols")
+      val perFile = spark.read.schema(snap.schema)
+        .parquet(snap.files.map(f => s"$t/$f"): _*)
+        .groupBy(input_file_name().as("f"))
+        .agg(count(lit(1)).as("rows"), collect_set(col("part")).as("parts"),
+          min("k").cast("string"), max("k").cast("string"),
+          min("v").cast("string"), max("v").cast("string"))
+        .collect().map { r =>
+          val abs = r.getString(0)
+          abs.substring(abs.lastIndexOf("/data/b-") + 1) -> r
+        }.toMap
+      snap.files.foreach { f =>
+        val r = perFile.get(f)
+        val extra = snap.extraOf.getOrElse(f, Map.empty)
+        assert(extra.get("bytes") ===
+          Some(fsys.getFileStatus(new org.apache.hadoop.fs.Path(t, f))
+            .getLen.toString), s"$step: bytes of $f")
+        assert(extra.get("rows") ===
+          Some(r.map(_.getLong(1)).getOrElse(0L).toString),
+          s"$step: rows of $f")
+        if (partitioned)
+          assert(r.map(_.getSeq[String](2).toSet).getOrElse(Set.empty) ===
+            snap.partitionOf.get(f).toSet, s"$step: label of $f")
+        declared.zipWithIndex.foreach { case (c, i) =>
+          val bounds = r.flatMap(x => Option(x.getString(3 + 2 * i))
+            .map(_ -> x.getString(4 + 2 * i)))
+          assert(snap.statsOf.getOrElse(f, Map.empty).get(c) === bounds,
+            s"$step: $c bounds of $f")
+        }
+      }
+    }
+    SnapshotTable.createClustered(spark, t, frame(0, 60), "k",
+      numFiles = 4, statsCols = Seq("k", "v"))
+    check("create")
+    val src = frame(10, 3).withColumn("v", lit(-1L))
+      .union(frame(200, 4))
+    val verbs: Seq[(String, () => Unit)] = Seq(
+      "repartitionTable" -> (() =>
+        SnapshotTable.repartitionTable(spark, t, Seq("part"))),
+      "append" -> (() => SnapshotTable.append(spark, t, frame(100, 30))),
+      "updateWhere" -> (() => SnapshotTable.updateWhere(spark, t,
+        col("k") === 5L, Map("v" -> lit(7L)))),
+      "deleteWhere" -> (() =>
+        SnapshotTable.deleteWhere(spark, t, col("k") === 7L)),
+      "mergeInto" -> (() => SnapshotTable.mergeInto(spark, t, src, "k")),
+      "mergeIntoFull" -> (() => SnapshotTable.mergeIntoFull(spark, t,
+        frame(20, 2).union(frame(220, 2)), Seq("k" -> "k"),
+        matched = Seq(SnapshotTable.MergeWhen(None,
+          Some(Map("v" -> lit(3L))))),
+        notMatchedBySource = Nil,
+        notMatched = Seq(SnapshotTable.MergeInsert(None, Map(
+          "k" -> SnapshotTable.srcRef("k"),
+          "part" -> SnapshotTable.srcRef("part"),
+          "v" -> SnapshotTable.srcRef("v")))))),
+      "updateWhereVector" -> (() => SnapshotTable.updateWhereVector(spark,
+        t, col("k") === 11L, Map("v" -> lit(1L)))),
+      "compact" -> (() => SnapshotTable.compact(spark, t)),
+      "compactPartitions" -> (() =>
+        SnapshotTable.compactPartitions(spark, t, Set("p1"))),
+      "replaceContents" -> (() =>
+        SnapshotTable.replaceContents(spark, t, frame(0, 45))),
+      "commitStreamBatch" -> (() =>
+        SnapshotTable.commitStreamBatch(spark, t, frame(300, 9), 0L)),
+      "publishBranch cherry-pick" -> { () =>
+        SnapshotTable.createBranch(spark, t, "side")
+        SnapshotTable.withBranch(spark, t, "side") {
+          SnapshotTable.append(spark, t, frame(400, 6)) }
+        SnapshotTable.append(spark, t, frame(500, 6))
+        SnapshotTable.publishBranch(spark, t, "side", cherryPick = true)
+      })
+    verbs.foreach { case (name, run) =>
+      val before = SnapshotTable.currentVersion(spark, t)
+      run()
+      assert(SnapshotTable.currentVersion(spark, t) > before,
+        s"$name committed nothing")
+      check(name)
+    }
+  }
 }
