@@ -292,15 +292,15 @@ object MaterializedView {
         case None => df
       }
       val result = mat.localCheckpoint()
-      SnapshotTable.commitManifest(spark, mvPath, result.schema,
-        stage(result, mvPath), 0L,
-        Map("mvSource" -> sourcePath,
-          "mvQuery" -> java.net.URLEncoder.encode(query, "UTF-8"),
-          "cdcUpTo" -> cur.toString,
-          "mvIncrRuns" -> "0") ++
-          (if (token == SourceToken) Map.empty[String, String]
-           else Map("mvToken" ->
-             java.net.URLEncoder.encode(token, "UTF-8"))))
+      SnapshotTable.commitManifest(spark, mvPath,
+        SnapshotTable.Snapshot(0L, result.schema, stage(result, mvPath),
+          Map("mvSource" -> sourcePath,
+            "mvQuery" -> java.net.URLEncoder.encode(query, "UTF-8"),
+            "cdcUpTo" -> cur.toString,
+            "mvIncrRuns" -> "0") ++
+            (if (token == SourceToken) Map.empty[String, String]
+             else Map("mvToken" ->
+               java.net.URLEncoder.encode(token, "UTF-8")))), 0L)
     } finally dropView(spark, vn)
   }
 
@@ -368,11 +368,10 @@ object MaterializedView {
       if (mode == "incremental" && shape.exists(_.floaty))
         incrRuns + 1
       else 0L
-    val v = SnapshotTable.commitManifest(spark, mvPath, result.schema,
-      stage(result, mvPath), snap.version,
-      snap.meta + ("cdcUpTo" -> cur.toString) +
-        ("mvIncrRuns" -> nextRuns.toString),
-      Map.empty, Map.empty, Nil, Some(snap))
+    val v = SnapshotTable.commitManifest(spark, mvPath,
+      SnapshotTable.Snapshot(snap.version, result.schema,
+        stage(result, mvPath), snap.meta + ("cdcUpTo" -> cur.toString) +
+          ("mvIncrRuns" -> nextRuns.toString)), snap.version, Some(snap))
     (mode, upTo, cur, v)
   }
 

@@ -49,12 +49,8 @@ class SnapshotFileIndex private (spark: SparkSession, table: String,
   def this(spark: SparkSession, table: String,
       snap: SnapshotTable.Snapshot) =
     this(spark, table, snap,
-      admit => snap.files.map { p =>
-        (p, snap.partitionOf.get(p),
-          snap.statsOf.getOrElse(p, Map.empty),
-          snap.extraOf.getOrElse(p, Map.empty))
-      }.filter(e => admit.forall(_(
-        SnapshotTable.GroupRef("", e._2, 1, -1L, e._3)))),
+      admit => snap.entries.filter(e => admit.forall(_(
+        SnapshotTable.GroupRef("", e.label, 1, -1L, e.stats)))),
       None, () => -1, () => -1L)
 
   private val fsys = new Path(table)
@@ -80,12 +76,12 @@ class SnapshotFileIndex private (spark: SparkSession, table: String,
   override def partitionSchema: StructType = StructType(Nil)
 
   override def inputFiles: Array[String] =
-    statusesFor(allEntries).map(_._2.getPath.toString).toArray
+    statusesFor(allEntries).map(_.getPath.toString).toArray
 
   override def refresh(): Unit = ()
 
   override lazy val sizeInBytes: Long = knownSize.getOrElse(
-    statusesFor(allEntries).map(_._2.getLen).sum)
+    statusesFor(allEntries).map(_.getLen).sum)
 
   /** FileStatus per entry: manifest-stamped sizes build synthetic
     * statuses with no filesystem call; un-stamped entries list their
@@ -94,20 +90,20 @@ class SnapshotFileIndex private (spark: SparkSession, table: String,
     * bottleneck, and the dir listing matches object-store batching).
     */
   private def statusesFor(entries: Seq[SnapshotTable.Entry])
-      : Seq[(String, FileStatus)] = {
+      : Seq[FileStatus] = {
     val qualifiedTable = fsys.makeQualified(new Path(table))
     val (stamped, unstamped) = entries.partition(
-      _._4.get("bytes").exists(v =>
+      _.extra.get("bytes").exists(v =>
         scala.util.Try(v.toLong).isSuccess))
     val synthetic = stamped.map { e =>
-      val len = e._4("bytes").toLong
-      e._1 -> new FileStatus(len, false, 1, 128L * 1024 * 1024, 0L,
-        new Path(qualifiedTable, e._1))
+      val len = e.extra("bytes").toLong
+      new FileStatus(len, false, 1, 128L * 1024 * 1024, 0L,
+        new Path(qualifiedTable, e.path))
     }
-    val listed: Seq[(String, FileStatus)] =
+    val listed: Seq[FileStatus] =
       if (unstamped.isEmpty) { lastListedDirs = 0; Nil }
       else {
-        val byDir = unstamped.map(_._1)
+        val byDir = unstamped.map(_.path)
           .groupBy(r => r.split('/').dropRight(1).mkString("/"))
         lastListedDirs = byDir.size
         val found: Map[String, FileStatus] = byDir.keys.flatMap { dir =>
@@ -115,7 +111,7 @@ class SnapshotFileIndex private (spark: SparkSession, table: String,
             .filter(_.isFile)
             .map(st => s"$dir/${st.getPath.getName}" -> st)
         }.toMap
-        unstamped.map(e => e._1 -> found(e._1))
+        unstamped.map(e => found(e.path))
       }
     synthetic ++ listed
   }
@@ -130,8 +126,8 @@ class SnapshotFileIndex private (spark: SparkSession, table: String,
     val admit: Option[SnapshotTable.GroupRef => Boolean] =
       if (dataFilters.isEmpty) None
       else Some { g =>
-        val asEntry: SnapshotTable.Entry =
-          ("", g.label.filterNot(_.startsWith("#")), g.stats, Map.empty)
+        val asEntry = SnapshotTable.Entry("",
+          g.label.filterNot(_.startsWith("#")), g.stats)
         dataFilters.forall(e => mayMatch(asEntry, e))
       }
     val entries = entriesFor(admit)
@@ -141,7 +137,7 @@ class SnapshotFileIndex private (spark: SparkSession, table: String,
       dataFilters.forall(expr => mayMatch(e, expr)))
     lastPlannedFiles = kept.size
     Seq(PartitionDirectory(InternalRow.empty,
-      statusesFor(kept).map(_._2).toArray))
+      statusesFor(kept).toArray))
   }
 
   private val layout = TableLayout.of(header)
@@ -196,7 +192,7 @@ class SnapshotFileIndex private (spark: SparkSession, table: String,
 
   private def extraLong(entry: SnapshotTable.Entry,
       key: String): Option[Long] =
-    entry._4.get(key)
+    entry.extra.get(key)
       .flatMap(v => scala.util.Try(v.toLong).toOption)
 
   /** The partition-position admission shared by the group- and
@@ -283,13 +279,13 @@ class SnapshotFileIndex private (spark: SparkSession, table: String,
       l: Literal, lo: Boolean, hi: Boolean): Boolean = {
     val v = render(l)
     if (v == null) return true
-    entry._2.foreach { label =>
+    entry.label.foreach { label =>
       if (pcols.contains(column) &&
           !labelAdmits(label, column, l, lo, hi)) return false
       // identity range over the label: the original per-file path also
       // admitted ranges via stats below, which remain authoritative
     }
-    entry._3.get(column) match {
+    entry.stats.get(column) match {
       case Some((mn, mx)) =>
         // TIMESTAMP stats are recorded as epoch micros, so they compare
         // numerically like any numeric column

@@ -120,6 +120,19 @@ object SnapshotTable {
       }.foldLeft(0L)(math.max)
   }
 
+  /** One data file of a snapshot with the metadata that travels with
+    * it — one manifest line: the table-relative `path`, its partition
+    * `label` (None on unpartitioned tables), per-column min/max `stats`
+    * and `extra` per-file attributes (row count, per-column null
+    * counts, sketches, on-disk bytes). Staging returns entries,
+    * manifests parse into them, and [[Snapshot.edit]] is the only way
+    * a snapshot's file list changes, so a file never moves without its
+    * metadata.
+    */
+  final case class Entry(path: String, label: Option[String] = None,
+      stats: Map[String, (String, String)] = Map.empty,
+      extra: Map[String, String] = Map.empty)
+
   /** One committed snapshot: schema, table-relative data file paths,
     * per-file partition labels (for manifest-level pruning; empty for
     * unpartitioned tables), and small key=value metadata (e.g. the
@@ -136,7 +149,32 @@ object SnapshotTable {
       statsOf: Map[String, Map[String, (String, String)]] = Map.empty,
       deleteFiles: Seq[String] = Nil, depth: Int = 0,
       extraOf: Map[String, Map[String, String]] = Map.empty,
-      cleanGroups: Map[String, GroupRef] = Map.empty)
+      cleanGroups: Map[String, GroupRef] = Map.empty) {
+
+    /** The entry of live file `path`. */
+    def entry(path: String): Entry = Entry(path, partitionOf.get(path),
+      statsOf.getOrElse(path, Map.empty), extraOf.getOrElse(path, Map.empty))
+
+    /** Every live file's entry, in file-list order. */
+    def entries: Seq[Entry] = files.map(entry)
+
+    /** This snapshot with the files in `remove` dropped and `add`
+      * appended, in order: each file's label, stats and extras leave
+      * and arrive with it. Every other field is kept — callers `copy`
+      * the schema, meta or deletion-vector list they change. Manifest
+      * replay ([[applyDelta]]) and every verb build the next state
+      * through here. To re-publish a file with new metadata, remove
+      * and add it.
+      */
+    def edit(remove: Set[String], add: Seq[Entry]): Snapshot = copy(
+      files = files.filterNot(remove) ++ add.map(_.path),
+      partitionOf = (partitionOf -- remove) ++
+        add.flatMap(e => e.label.map(e.path -> _)),
+      statsOf = (statsOf -- remove) ++
+        add.collect { case e if e.stats.nonEmpty => e.path -> e.stats },
+      extraOf = (extraOf -- remove) ++
+        add.collect { case e if e.extra.nonEmpty => e.path -> e.extra })
+  }
 
   /** One group reference inside a GROUPED (two-tier) full manifest:
     * the anchor lists (group file, label, entry count, total data
@@ -160,9 +198,7 @@ object SnapshotTable {
       stats: Map[String, (String, String)] = Map.empty)
 
   /** One manifest FILE as written (full, grouped-full, or a delta
-    * against `base`). An entry is (path, partition label, min/max
-    * stats, extra per-file attributes — row count, per-column null
-    * counts, on-disk bytes). `groups` is non-empty for GROUPED full
+    * against `base`). `groups` is non-empty for GROUPED full
     * manifests; `entries` then holds the resolved union of all groups
     * when parsed eagerly, or only the admitted groups when parsed for
     * pruned scan planning.
@@ -171,13 +207,7 @@ object SnapshotTable {
       schema: StructType,
       base: Option[Long], depth: Int, meta: Map[String, String],
       deleteFiles: Seq[String], removed: Seq[String],
-      entries: Seq[(String, Option[String], Map[String, (String, String)],
-        Map[String, String])],
-      groups: Seq[GroupRef] = Nil)
-
-  private[sources] type Entry =
-    (String, Option[String], Map[String, (String, String)],
-      Map[String, String])
+      entries: Seq[Entry], groups: Seq[GroupRef] = Nil)
 
   private def readLinesAt(spark: SparkSession, table: String,
       p: Path): Vector[String] = {
@@ -213,7 +243,7 @@ object SnapshotTable {
         }.toMap
       case _ => ()
     }
-    (path, part, stats, extra)
+    Entry(path, part, stats, extra)
   }
 
   private val GroupMarker = "graft-group-v1"
@@ -356,14 +386,10 @@ object SnapshotTable {
   }
 
   private def toSnapshot(raw: RawManifest): Snapshot =
-    Snapshot(raw.version, raw.schema, raw.entries.map(_._1), raw.meta,
-      raw.entries.collect { case (f, Some(v), _, _) => f -> v }.toMap,
-      raw.entries.collect {
-        case (f, _, st, _) if st.nonEmpty => f -> st }.toMap,
-      raw.deleteFiles, raw.depth,
-      raw.entries.collect {
-        case (f, _, _, x) if x.nonEmpty => f -> x }.toMap,
-      raw.groups.flatMap(g => g.label.map(_ -> g)).toMap)
+    Snapshot(raw.version, raw.schema, Vector.empty, raw.meta,
+      deleteFiles = raw.deleteFiles, depth = raw.depth,
+      cleanGroups = raw.groups.flatMap(g => g.label.map(_ -> g)).toMap)
+      .edit(Set.empty, raw.entries)
 
   /** Apply one delta on top of its resolved base: the file list drops
     * the removed paths and appends the added entries; meta, schema and
@@ -383,18 +409,11 @@ object SnapshotTable {
     val rmBatches = d.removed.map(batchDirOf).toSet
     val dirtyChunks = base.cleanGroups.keySet.filter(l =>
       chunkBatchOf(l).exists(rmBatches.contains))
-    val dirtyLabels = (d.entries.flatMap(_._2) ++
+    val dirtyLabels = (d.entries.flatMap(_.label) ++
       d.removed.flatMap(base.partitionOf.get)).toSet ++ dirtyChunks
-    Snapshot(d.version, d.schema,
-      base.files.filterNot(rm) ++ d.entries.map(_._1), d.meta,
-      (base.partitionOf -- rm) ++
-        d.entries.collect { case (f, Some(v), _, _) => f -> v },
-      (base.statsOf -- rm) ++
-        d.entries.collect { case (f, _, st, _) if st.nonEmpty => f -> st },
-      d.deleteFiles, d.depth,
-      (base.extraOf -- rm) ++
-        d.entries.collect { case (f, _, _, x) if x.nonEmpty => f -> x },
-      base.cleanGroups -- dirtyLabels)
+    base.edit(rm, d.entries).copy(version = d.version, schema = d.schema,
+      meta = d.meta, deleteFiles = d.deleteFiles, depth = d.depth,
+      cleanGroups = base.cleanGroups -- dirtyLabels)
   }
 
   def readManifest(spark: SparkSession, table: String,
@@ -473,7 +492,7 @@ object SnapshotTable {
       val defs = defaultsOf(header)
       defs.nonEmpty && {
         val markers = defs.keys.map(c => s"predates.${enc(c)}").toSet
-        entries(None).exists(e => markers.exists(e._4.contains))
+        entries(None).exists(e => markers.exists(e.extra.contains))
       }
     }
 
@@ -488,7 +507,7 @@ object SnapshotTable {
         if (rmAll.nonEmpty) None // removed bytes live inside groups
         else {
           val g = anchor.groups.map(_.bytes)
-          val d = deltas.flatMap(_.entries).map(_._4.get("bytes")
+          val d = deltas.flatMap(_.entries).map(_.extra.get("bytes")
             .flatMap(v => scala.util.Try(v.toLong).toOption)
             .getOrElse(-1L))
           if (g.exists(_ < 0) || d.exists(_ < 0)) None
@@ -509,7 +528,7 @@ object SnapshotTable {
     def entries(admit: Option[GroupRef => Boolean]): Seq[Entry] = {
       def keepRef(g: GroupRef): Boolean = admit.forall(_(g))
       def keepEntry(e: Entry): Boolean =
-        admit.forall(_(GroupRef("", e._2, 1, -1L, e._3)))
+        admit.forall(_(GroupRef("", e.label, 1, -1L, e.stats)))
       var groupsRead = 0
       var bytesRead = 0L
       val anchorEntries: Seq[Entry] =
@@ -525,7 +544,7 @@ object SnapshotTable {
       lastGroupBytesRead = bytesRead
       deltas.foldLeft(anchorEntries) { (acc, d) =>
         val rm = d.removed.toSet
-        acc.filterNot(e => rm(e._1)) ++ d.entries.filter(keepEntry)
+        acc.filterNot(e => rm(e.path)) ++ d.entries.filter(keepEntry)
       }
     }
   }
@@ -828,25 +847,36 @@ object SnapshotTable {
       predicate: Column): (Long, Long) = {
     val snap = loadCurrent(spark, table)
     val matches = coalesce(predicate, lit(false))
-    val hits = readFilesDvProv(spark, table, snap, snap.files)
-      .filter(matches)
-      .select(col("__fk").as("file_key"), col("__rp").as("pos"))
+    val (dir, dvFiles) = stageDeletionVector(spark, table,
+      readFilesDvProv(spark, table, snap, snap.files).filter(matches))
+    val n = labeledJob(spark, "graft: count deletion vector") {
+      spark.read.schema(dvFileSchema).parquet(dir).count() }
+    if (n == 0) {
+      fs(spark, table).delete(new Path(dir), true)
+      return (snap.version, 0L)
+    }
+    val v = commitManifest(spark, table,
+      snap.copy(deleteFiles = snap.deleteFiles ++ dvFiles), snap.version,
+      Some(snap))
+    (v, n)
+  }
+
+  /** Write the (`__fk`, `__rp`) coordinates of `rows` as a fresh
+    * `dv-<uuid>` deletion-vector batch, labeled as a staging job;
+    * returns the batch dir and its files' table-relative paths, sorted.
+    */
+  private def stageDeletionVector(spark: SparkSession, table: String,
+      rows: DataFrame): (String, Seq[String]) = {
     val batch = "dv-" + java.util.UUID.randomUUID().toString
     val dir = s"$table/data/$batch"
     labeledJob(spark, "graft: stage deletion vector") {
-      hits.write.mode("error").options(stagingWriteOpts).parquet(dir) }
-    val f = fs(spark, table)
-    val dvFiles = f.listStatus(new Path(dir)).iterator
+      rows.select(col("__fk").as("file_key"), col("__rp").as("pos"))
+        .write.mode("error").options(stagingWriteOpts).parquet(dir) }
+    val files = fs(spark, table).listStatus(new Path(dir)).iterator
       .map(_.getPath.getName)
       .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
       .map(n => s"data/$batch/$n").toVector.sorted
-    val n = labeledJob(spark, "graft: count deletion vector") {
-      spark.read.schema(dvFileSchema).parquet(dir).count() }
-    if (n == 0) { f.delete(new Path(dir), true); return (snap.version, 0L) }
-    val v = commitManifest(spark, table, snap.schema, snap.files,
-      snap.version, snap.meta, snap.partitionOf, snap.statsOf,
-      snap.deleteFiles ++ dvFiles, Some(snap), snap.extraOf)
-    (v, n)
+    (dir, files)
   }
 
   /** Write `df` as a fresh immutable file batch under `data/b-<uuid>/`,
@@ -1348,21 +1378,17 @@ object SnapshotTable {
     * min/max for its declared columns, and a bloom-indexed table writes
     * fresh sidecars for the staged batch — mutations never degrade
     * manifest pruning, the BucketSpec or the point-lookup index.
+    * Returns the staged files' entries (label, stats, extras).
     */
-  private def stageFor(snap: Snapshot, df: DataFrame, table: String)
-      : (Seq[String], Map[String, String],
-         Map[String, Map[String, (String, String)]],
-         Map[String, Map[String, String]]) =
+  private def stageFor(snap: Snapshot, df: DataFrame,
+      table: String): Seq[Entry] =
     stageFor(snap, df, table, TableLayout.of(snap))
 
   /** As above, arranged by `layout` instead of the table's own (for
     * rows the caller already arranged).
     */
   private def stageFor(snap: Snapshot, df: DataFrame, table: String,
-      layout: TableLayout)
-      : (Seq[String], Map[String, String],
-         Map[String, Map[String, (String, String)]],
-         Map[String, Map[String, String]]) = {
+      layout: TableLayout): Seq[Entry] = {
     // identity-TIMESTAMP partition labels derive via cast-to-string,
     // which renders in the SESSION zone — a batch staged under a zone
     // different from the table's pinned staging zone would label files
@@ -1401,7 +1427,6 @@ object SnapshotTable {
     val rangeStaged = layout.cluster.nonEmpty && layout.partitions.nonEmpty
     val dfIn = if (rangeStaged) df1.localCheckpoint() else df1
     val files = stageBatch(dfIn, table, layout)
-    val labels = files.flatMap(f => layout.labelOf(f).map(f -> _)).toMap
     // the staged parquet now holds the rows — release the barrier copy
     // instead of waiting for the ContextCleaner
     if (rangeStaged) dfIn.unpersist(blocking = false)
@@ -1424,7 +1449,8 @@ object SnapshotTable {
       declaredStatsCols(snap), snap.schema)
     writeBloomSidecars(df.sparkSession, table, files,
       declaredBloomCols(snap), snap.schema)
-    (files, labels, stats, extras)
+    files.map(f => Entry(f, layout.labelOf(f),
+      stats.getOrElse(f, Map.empty), extras.getOrElse(f, Map.empty)))
   }
 
   /** SQL's unresolved-column rule for UPDATE: every SET target must
@@ -1488,68 +1514,56 @@ object SnapshotTable {
       .filter(!coalesce(expr(predicateSql), lit(false))).count()
     if (bad > 0) throw new ConstraintViolationException(
       s"existing data violates $name: $bad rows")
-    commitManifest(spark, table, snap.schema, snap.files, snap.version,
-      snap.meta + (s"constraint.$name" -> predicateSql),
-      snap.partitionOf, snap.statsOf, snap.deleteFiles, Some(snap),
-      snap.extraOf)
+    commitManifest(spark, table,
+      snap.copy(meta = snap.meta + (s"constraint.$name" -> predicateSql)),
+      snap.version, Some(snap))
   }
 
   /** Drop a CHECK constraint — a metadata-only commit. */
   def dropConstraint(spark: SparkSession, table: String,
       name: String): Long = {
     val snap = loadCurrent(spark, table)
-    commitManifest(spark, table, snap.schema, snap.files, snap.version,
-      snap.meta - s"constraint.$name",
-      snap.partitionOf, snap.statsOf, snap.deleteFiles, Some(snap),
-      snap.extraOf)
+    commitManifest(spark, table,
+      snap.copy(meta = snap.meta - s"constraint.$name"), snap.version,
+      Some(snap))
   }
 
-  private def fileLine(p: String, partitionOf: Map[String, String],
-      statsOf: Map[String, Map[String, (String, String)]],
-      extraOf: Map[String, Map[String, String]]): String = {
+  private def fileLine(e: Entry): String = {
     def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
-    val partField = partitionOf.get(p).map(v => s"p=$v")
-    val statField = statsOf.get(p).filter(_.nonEmpty).map(st =>
+    val partField = e.label.map(v => s"p=$v")
+    val statField = Option(e.stats).filter(_.nonEmpty).map(st =>
       "s=" + st.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
         s"${enc(c)}|${enc(mn)}|${enc(mx)}"
       }.mkString(";"))
-    val extraField = extraOf.get(p).filter(_.nonEmpty).map(x =>
+    val extraField = Option(e.extra).filter(_.nonEmpty).map(x =>
       "x=" + x.toSeq.sortBy(_._1).map { case (k, v) =>
         s"${enc(k)}|${enc(v)}"
       }.mkString(";"))
-    (p +: (partField.toSeq ++ statField.toSeq ++ extraField.toSeq))
+    (e.path +: (partField.toSeq ++ statField.toSeq ++ extraField.toSeq))
       .mkString("\t")
   }
 
-  private def renderManifest(schema: StructType, files: Seq[String],
-      meta: Map[String, String],
-      partitionOf: Map[String, String],
-      statsOf: Map[String, Map[String, (String, String)]],
-      deleteFiles: Seq[String] = Nil,
-      extraOf: Map[String, Map[String, String]] = Map.empty): Array[Byte] =
-    (Seq(Marker, "schema:" + schema.json) ++
-      meta.toSeq.sortBy(_._1).map { case (k, v) => s"meta:$k=$v" } ++
-      deleteFiles.map(d => s"dv:$d") ++
-      files.map(p => fileLine(p, partitionOf, statsOf, extraOf)))
-      .mkString("\n").getBytes("UTF-8")
-
-  /** A DELTA manifest: adds/removes against `baseVersion` instead of
-    * the full file list — commit metadata cost O(churn), not O(table
-    * files). Meta and the DV list are still written whole (both are
-    * small/churn-sized and each manifest stays authoritative for them).
+  /** The meta and deletion-vector lines: every manifest form writes
+    * them whole (both are small/churn-sized and each manifest stays
+    * authoritative for them).
     */
-  private def renderDelta(schema: StructType, baseVersion: Long,
-      depth: Int, meta: Map[String, String], deleteFiles: Seq[String],
-      removed: Seq[String], added: Seq[String],
-      partitionOf: Map[String, String],
-      statsOf: Map[String, Map[String, (String, String)]],
-      extraOf: Map[String, Map[String, String]]): Array[Byte] =
-    (Seq(Marker, "schema:" + schema.json,
-      s"base:$baseVersion", s"depth:$depth") ++
-      meta.toSeq.sortBy(_._1).map { case (k, v) => s"meta:$k=$v" } ++
-      deleteFiles.map(d => s"dv:$d") ++
-      removed.map(r => s"rm:$r") ++
-      added.map(p => fileLine(p, partitionOf, statsOf, extraOf)))
+  private def stateLines(s: Snapshot): Seq[String] =
+    s.meta.toSeq.sortBy(_._1).map { case (k, v) => s"meta:$k=$v" } ++
+      s.deleteFiles.map(d => s"dv:$d")
+
+  private def renderManifest(s: Snapshot): Array[Byte] =
+    (Seq(Marker, "schema:" + s.schema.json) ++ stateLines(s) ++
+      s.entries.map(fileLine)).mkString("\n").getBytes("UTF-8")
+
+  /** A DELTA manifest of `s`: adds/removes against `baseVersion`
+    * instead of the full file list — commit metadata cost O(churn), not
+    * O(table files).
+    */
+  private def renderDelta(s: Snapshot, baseVersion: Long, depth: Int,
+      removed: Seq[String], added: Seq[String]): Array[Byte] =
+    (Seq(Marker, "schema:" + s.schema.json,
+      s"base:$baseVersion", s"depth:$depth") ++ stateLines(s) ++
+      removed.map(r => s"rm:$r") ++ added.map(p => fileLine(s.entry(p))))
       .mkString("\n").getBytes("UTF-8")
 
   /** Delta chains re-anchor with a full manifest after this many links
@@ -1601,12 +1615,10 @@ object SnapshotTable {
     * and give grouped anchors their per-group byte totals.
     */
   private def withFileBytes(spark: SparkSession, table: String,
-      paths: Seq[String],
-      extraOf: Map[String, Map[String, String]])
-      : Map[String, Map[String, String]] = {
+      paths: Seq[String], snap: Snapshot): Snapshot = {
     val missing = paths.filterNot(p =>
-      extraOf.get(p).exists(_.contains("bytes")))
-    if (missing.isEmpty) return extraOf
+      snap.extraOf.get(p).exists(_.contains("bytes")))
+    if (missing.isEmpty) return snap
     val f = fs(spark, table)
     val byDir = missing.groupBy(r =>
       r.split('/').dropRight(1).mkString("/"))
@@ -1619,17 +1631,17 @@ object SnapshotTable {
           Iterator.empty[(String, Long)]
       }
     }.toMap
-    missing.foldLeft(extraOf) { (acc, p) =>
+    snap.copy(extraOf = missing.foldLeft(snap.extraOf) { (acc, p) =>
       found.get(p) match {
         case Some(len) => acc + (p ->
           (acc.getOrElse(p, Map.empty) + ("bytes" -> len.toString)))
         case None => acc
       }
-    }
+    })
   }
 
-  /** Write a GROUPED (two-tier) full manifest: file entries grouped by
-    * partition label into CONTENT-ADDRESSED group files under
+  /** Write a GROUPED (two-tier) full manifest of `snap`: file entries
+    * grouped by partition label into CONTENT-ADDRESSED group files under
     * `_manifests/groups/`, the anchor carrying one
     * `grp:<file> <label> <count> <bytes>` line per group. Groups whose
     * membership (and per-file stats) the chain since the previous
@@ -1640,12 +1652,9 @@ object SnapshotTable {
     * restores and time travel. Returns the anchor body.
     */
   private def renderGroupedManifest(spark: SparkSession, table: String,
-      schema: StructType, files: Seq[String], meta: Map[String, String],
-      clusterMode: Boolean, partitionOf: Map[String, String],
-      statsOf: Map[String, Map[String, (String, String)]],
-      deleteFiles: Seq[String],
-      extraOf: Map[String, Map[String, String]],
+      snap: Snapshot, clusterMode: Boolean,
       base: Option[Snapshot]): Array[Byte] = {
+    val files = snap.files
     val f = fs(spark, table)
     val gDir = new Path(manifestDir(table), "groups")
     f.mkdirs(gDir)
@@ -1665,14 +1674,14 @@ object SnapshotTable {
         val touched = b.files.filterNot(targetSet) ++
           files.filterNot(baseSet) ++
           files.filter(p => baseSet(p) &&
-            (statsOf.get(p) != b.statsOf.get(p) ||
-              extraOf.get(p) != b.extraOf.get(p)))
+            (snap.statsOf.get(p) != b.statsOf.get(p) ||
+              snap.extraOf.get(p) != b.extraOf.get(p)))
         val dirty =
           if (clusterMode) {
             val dirtyBatches = touched.map(batchDirOf).toSet
             b.cleanGroups.keySet.filter(l =>
               chunkBatchOf(l).exists(dirtyBatches.contains))
-          } else touched.flatMap(partitionOf.get).toSet
+          } else touched.flatMap(snap.partitionOf.get).toSet
         b.cleanGroups -- dirty
       case _ => Map.empty
     }
@@ -1684,15 +1693,15 @@ object SnapshotTable {
     // omitted columns simply don't prune at group level.
     def groupStats(members: Seq[String])
         : Map[String, (String, String)] = {
-      val perFile = members.map(p => statsOf.getOrElse(p,
+      val perFile = members.map(p => snap.statsOf.getOrElse(p,
         Map.empty[String, (String, String)]))
       if (perFile.exists(_.isEmpty)) return Map.empty
       val common = perFile.map(_.keySet).reduce(_ intersect _)
       common.iterator.flatMap { c =>
-        val numeric = schema.fieldNames.contains(c) &&
-          (schema(c).dataType
+        val numeric = snap.schema.fieldNames.contains(c) &&
+          (snap.schema(c).dataType
             .isInstanceOf[org.apache.spark.sql.types.NumericType] ||
-            schema(c).dataType ==
+            snap.schema(c).dataType ==
               org.apache.spark.sql.types.TimestampType)
         val bounds = perFile.map(_(c))
         if (numeric) {
@@ -1721,7 +1730,7 @@ object SnapshotTable {
               case (chunk, i) => (Some(chunkLabel(b, i)), chunk)
             }
         }
-      else files.groupBy(partitionOf.get).toSeq
+      else files.groupBy(snap.partitionOf.get).toSeq
         .sortBy(_._1.getOrElse(""))
     val refs = byGroup.map { case (label, members) =>
       label.flatMap(reusable.get)
@@ -1729,7 +1738,7 @@ object SnapshotTable {
         case Some(ref) => ref
         case None =>
           val content = (GroupMarker +: members.sorted.map(p =>
-            fileLine(p, partitionOf, statsOf, extraOf)))
+            fileLine(snap.entry(p))))
             .mkString("\n").getBytes("UTF-8")
           val rel = s"groups/g-${sha1hex(content)}.grp"
           val gp = new Path(manifestDir(table), rel)
@@ -1748,7 +1757,7 @@ object SnapshotTable {
           }
           val bytes = members.foldLeft(0L) { (s, p) =>
             if (s < 0) s
-            else extraOf.get(p).flatMap(_.get("bytes"))
+            else snap.extraOf.get(p).flatMap(_.get("bytes"))
               .flatMap(v => scala.util.Try(v.toLong).toOption) match {
               case Some(b) => s + b
               case None => -1L // unknown member: group total unknown
@@ -1758,9 +1767,7 @@ object SnapshotTable {
             groupStats(members))
       }
     }
-    (Seq(Marker, "schema:" + schema.json) ++
-      meta.toSeq.sortBy(_._1).map { case (k, v) => s"meta:$k=$v" } ++
-      deleteFiles.map(d => s"dv:$d") ++
+    (Seq(Marker, "schema:" + snap.schema.json) ++ stateLines(snap) ++
       refs.map(g => s"grp:${g.rel}\t" +
         s"${g.label.map(l => "v" + enc(l)).getOrElse("-")}\t" +
         s"${g.count}\t${g.bytes}" +
@@ -1793,17 +1800,24 @@ object SnapshotTable {
     snap.meta.getOrElse("stagingTz",
       spark.sessionState.conf.sessionLocalTimeZone)
 
-  /** The commit point: publish `files` as version `expected + 1`. Fails
-    * (leaving staged files orphaned, all snapshots intact) if another
-    * writer committed first — optimistic concurrency on the manifest
-    * publish.
+  /** The commit point: publish `next` — the table's whole next state:
+    * schema, file entries (usually `base.edit(...)`), meta and deletion
+    * vectors — as version `expected + 1`. Its `version`, `depth` and
+    * `cleanGroups` are not read. Fails (leaving staged files orphaned,
+    * all snapshots intact) if another writer committed first —
+    * optimistic concurrency on the manifest publish.
     *
-    * O(churn) metadata: when the caller supplies the `base` snapshot it
-    * mutated (every verb has it in hand), the manifest is written as a
-    * DELTA — adds/removes against the base version — whenever that is
+    * `expected` and `base` decide how `next` is encoded. O(churn)
+    * metadata: when the caller supplies the `base` snapshot it mutated
+    * (every verb has it in hand) and `base.version == expected`, the
+    * manifest is written as a DELTA — `next`'s adds/removes against the
+    * base version, diffed by path — whenever that is
     * smaller than re-listing the table (it always is for a bounded
     * mutation of a large table) and the chain is shorter than
     * [[MaxChainDepth]]; otherwise a full manifest re-anchors the chain.
+    * A file kept at the same path is written as the base had it in a
+    * delta, so a commit that changes a kept file's metadata must pass
+    * `base = None`.
     * A 1-file append to an 800k-file table therefore writes O(1)
     * manifest bytes, not tens of MB (the Iceberg manifest-list shape,
     * collapsed to one level). Readers resolve the chain in
@@ -1812,17 +1826,12 @@ object SnapshotTable {
     * manifests that kept versions still resolve through.
     */
   private[graft] def commitManifest(spark: SparkSession, table: String,
-      schema: StructType, files: Seq[String], expected: Long,
-      meta0: Map[String, String] = Map.empty,
-      partitionOf: Map[String, String] = Map.empty,
-      statsOf: Map[String, Map[String, (String, String)]] = Map.empty,
-      deleteFiles: Seq[String] = Nil, base: Option[Snapshot] = None,
-      extraOf: Map[String, Map[String, String]] = Map.empty)
-      : Long = {
-    require(meta0.forall { case (k, v) =>
+      next0: Snapshot, expected: Long,
+      base: Option[Snapshot] = None): Long = {
+    require(next0.meta.forall { case (k, v) =>
       !k.contains('=') && !(k + v).exists(c => c == '\n' || c == '\r') },
       "manifest meta keys/values must be line-safe and '='-free keys")
-    require(partitionOf.values.forall(v =>
+    require(next0.partitionOf.values.forall(v =>
       !v.exists(c => c == '\n' || c == '\r' || c == '\t')),
       "partition values must be line- and tab-safe")
     // TIMESTAMP identity-partition labels are rendered by
@@ -1841,14 +1850,15 @@ object SnapshotTable {
     // wrong derivation zone, refuse writes from the original zone and
     // mis-render read literals. Such tables stay unpinned (session-zone
     // reads, the pre-pin behavior) until a layout redeclaration.
-    val layout = TableLayout.of(meta0, schema)
+    val layout = TableLayout.of(next0)
     val declaresLayout = expected == 0 || base.exists(b =>
       TableLayout.of(b).identitySources != layout.identitySources)
-    val meta =
-      if (wantsStagingTz(schema, meta0, layout) && declaresLayout) meta0 +
-        ("stagingTz" -> spark.sessionState.conf.sessionLocalTimeZone)
-      else meta0
-    val next = expected + 1
+    val pinned =
+      if (wantsStagingTz(next0.schema, next0.meta, layout) &&
+          declaresLayout) next0.copy(meta = next0.meta +
+        ("stagingTz" -> spark.sessionState.conf.sessionLocalTimeZone))
+      else next0
+    val v = expected + 1
     val f = fs(spark, table)
     f.mkdirs(manifestDir(table))
     // inside withBranch the commit targets the next staged-branch
@@ -1858,30 +1868,28 @@ object SnapshotTable {
     val branchOf = scopedBranch(table)
     // stamp on-disk sizes for this commit's NEW files (one listStatus
     // per fresh batch dir — O(churn)); scan planning then never lists
-    val extraOf1 = withFileBytes(spark, table,
+    val next = withFileBytes(spark, table,
       base match {
-        case Some(b) => files.filterNot(b.files.toSet)
-        case None => files
-      }, extraOf)
+        case Some(b) => pinned.files.filterNot(b.files.toSet)
+        case None => pinned.files
+      }, pinned)
     def renderFull(): Array[Byte] =
-      if (branchOf.isEmpty && shouldGroup(layout, files.size))
-        renderGroupedManifest(spark, table, schema, files, meta,
-          layout.partitions.isEmpty, partitionOf, statsOf, deleteFiles,
+      if (branchOf.isEmpty && shouldGroup(layout, next.files.size))
+        renderGroupedManifest(spark, table,
           // one-time upgrade as a legacy table crosses the grouping
           // threshold: every group member gets its size recorded
-          withFileBytes(spark, table, files, extraOf1), base)
-      else renderManifest(schema, files, meta, partitionOf, statsOf,
-        deleteFiles, extraOf1)
+          withFileBytes(spark, table, next.files, next),
+          layout.partitions.isEmpty, base)
+      else renderManifest(next)
     val body: Array[Byte] = base match {
       case Some(b) if branchOf.isEmpty && b.version == expected &&
           expected > 0 && b.depth + 1 <= MaxChainDepth =>
         val baseSet = b.files.toSet
-        val targetSet = files.toSet
+        val targetSet = next.files.toSet
         val removed = b.files.filterNot(targetSet)
-        val added = files.filterNot(baseSet)
+        val added = next.files.filterNot(baseSet)
         if (removed.size + added.size < b.files.size)
-          renderDelta(schema, expected, b.depth + 1, meta, deleteFiles,
-            removed, added, partitionOf, statsOf, extraOf1)
+          renderDelta(next, expected, b.depth + 1, removed, added)
         else renderFull()
       case _ => renderFull()
     }
@@ -1891,8 +1899,8 @@ object SnapshotTable {
     try out.write(body)
     finally out.close()
     val target = branchOf match {
-      case Some(n) => branchManifestPath(table, n, next.toInt)
-      case None => manifestPath(table, next)
+      case Some(n) => branchManifestPath(table, n, v.toInt)
+      case None => manifestPath(table, v)
     }
     // the catalog seam: publish is delegated to the pluggable
     // CommitCatalog (default: the cross-process lockfile CAS below); a
@@ -1909,10 +1917,10 @@ object SnapshotTable {
     if (!won) {
       f.delete(tmp, false)
       throw new CommitConflictException(
-        s"concurrent commit detected at $table v$next (current is " +
+        s"concurrent commit detected at $table v$v (current is " +
           s"${currentVersion(spark, table)}); staged files left orphaned")
     }
-    next
+    v
   }
 
   /** The commit point abstraction: atomically publish `tmp` as `target`
@@ -2093,9 +2101,8 @@ object SnapshotTable {
       df: DataFrame): Long = {
     require(currentVersion(spark, table) == 0,
       s"$table already has committed snapshots")
-    val (files, labels, stats, extras) = stageFor(snap0, df, table)
-    commitManifest(spark, table, snap0.schema, files, 0L, snap0.meta,
-      labels, stats, Nil, None, extras)
+    commitManifest(spark, table,
+      snap0.edit(Set.empty, stageFor(snap0, df, table)), 0L)
   }
 
   /** Create a PARTITIONED table: files are laid out and
@@ -2355,20 +2362,17 @@ object SnapshotTable {
     // must read the default (the column is physically absent in them);
     // files staged later always carry the column (writers fill it)
     val markers = defaults.keys.map(c => s"predates.${enc(c)}" -> "1")
-    val extras =
-      if (defaults.isEmpty) snap.extraOf
-      else snap.files.map { f =>
-        f -> (snap.extraOf.getOrElse(f, Map.empty) ++ markers)
-      }.toMap
+    val next = snap.copy(schema = StructType(snap.schema.fields ++ newFields),
+      meta = snap.meta ++ metaUp)
     // a default-declaring evolution re-tags EVERY live file, so the
     // manifest must be written FULL: a delta records per-file attrs
     // only for added files, and the markers would silently drop. Rare
     // DDL — the O(files) manifest write is the honest cost here.
-    commitManifest(spark, table,
-      StructType(snap.schema.fields ++ newFields), snap.files,
-      snap.version, snap.meta ++ metaUp, snap.partitionOf, snap.statsOf,
-      snap.deleteFiles, if (defaults.isEmpty) Some(snap) else None,
-      extras)
+    if (defaults.isEmpty) commitManifest(spark, table, next, snap.version,
+      Some(snap))
+    else commitManifest(spark, table, next.edit(snap.files.toSet,
+      snap.entries.map(e => e.copy(extra = e.extra ++ markers))),
+      snap.version)
   }
 
   /** Declared column defaults: logical name -> SQL literal text. */
@@ -2444,10 +2448,9 @@ object SnapshotTable {
         "files — compact() to materialize it, then SET DEFAULT")
     require(!defaultSql.exists(c => c == '\n' || c == '\r'),
       "default must be single-line")
-    commitManifest(spark, table, snap.schema, snap.files, snap.version,
-      snap.meta + (s"colDefault.${enc(column)}" -> enc(defaultSql)),
-      snap.partitionOf, snap.statsOf, snap.deleteFiles, Some(snap),
-      snap.extraOf)
+    commitManifest(spark, table, snap.copy(meta =
+      snap.meta + (s"colDefault.${enc(column)}" -> enc(defaultSql))),
+      snap.version, Some(snap))
   }
 
   /** Drop a column's write-default — future INSERTs that omit it fill
@@ -2463,10 +2466,9 @@ object SnapshotTable {
     require(!hasLiveDefaultFor(snap, column),
       s"$column still carries a LIVE initial default on pre-evolution " +
         "files — compact() to materialize it, then DROP DEFAULT")
-    commitManifest(spark, table, snap.schema, snap.files, snap.version,
-      snap.meta - s"colDefault.${enc(column)}",
-      snap.partitionOf, snap.statsOf, snap.deleteFiles, Some(snap),
-      snap.extraOf)
+    commitManifest(spark, table,
+      snap.copy(meta = snap.meta - s"colDefault.${enc(column)}"),
+      snap.version, Some(snap))
   }
 
   private def hasLiveDefaultFor(snap: Snapshot, column: String): Boolean =
@@ -2662,11 +2664,10 @@ object SnapshotTable {
     // per-file attributes only for added files — the re-keyed entries
     // would silently drop and post-rename range pruning on the new
     // name would find no stats. Rare DDL; O(files) write is honest.
-    commitManifest(spark, table, newSchema, snap.files, snap.version,
-      newMeta, snap.partitionOf,
-      snap.statsOf.map { case (f, m) => f -> rekey(m) },
-      snap.deleteFiles, None,
-      snap.extraOf.map { case (f, m) => f -> rekeyExtra(m) })
+    commitManifest(spark, table, snap.edit(snap.files.toSet,
+      snap.entries.map(e =>
+        e.copy(stats = rekey(e.stats), extra = rekeyExtra(e.extra))))
+      .copy(schema = newSchema, meta = newMeta), snap.version)
   }
 
   /** METADATA-ONLY column drop: the data stays in existing files and
@@ -2747,14 +2748,13 @@ object SnapshotTable {
     // FULL manifest for the same reason as renameColumn: the dropped
     // column's per-file stats/extras are scrubbed on every unchanged
     // file, which a delta cannot carry
-    commitManifest(spark, table,
-      StructType(snap.schema.fields.filterNot(f => nameSet(f.name))),
-      snap.files, snap.version, newMeta, snap.partitionOf,
-      snap.statsOf.map { case (f, m) => f -> (m -- nameSet) },
-      snap.deleteFiles, None,
-      snap.extraOf.map { case (f, m) =>
-        f -> (m -- nameSet.map(n => s"nulls.$n")
-          -- nameSet.map(n => s"predates.${enc(n)}")) })
+    commitManifest(spark, table, snap.edit(snap.files.toSet,
+      snap.entries.map(e => e.copy(stats = e.stats -- nameSet,
+        extra = e.extra -- nameSet.map(n => s"nulls.$n")
+          -- nameSet.map(n => s"predates.${enc(n)}"))))
+      .copy(schema =
+        StructType(snap.schema.fields.filterNot(f => nameSet(f.name))),
+        meta = newMeta), snap.version)
   }
 
   /** METADATA-ONLY type widening (int -> long, float -> double): the
@@ -2803,9 +2803,8 @@ object SnapshotTable {
       StructType(sch.fields.map(x =>
         if (x.name == name) x.copy(dataType = to) else x))
     }
-    commitManifest(spark, table, newSchema,
-      snap.files, snap.version, snap.meta, snap.partitionOf,
-      snap.statsOf, snap.deleteFiles, Some(snap), snap.extraOf)
+    commitManifest(spark, table, snap.copy(schema = newSchema),
+      snap.version, Some(snap))
   }
 
   /** Table history (the DESCRIBE HISTORY shape): one row per retained
@@ -3110,11 +3109,9 @@ object SnapshotTable {
           "append frame", allowSubset = false))
       }
     val (batch, metaUp) = identityFor(snap, batch0)
-    val (files, labels, stats, extras) = stageFor(snap, batch, table)
-    commitManifest(spark, table, snap.schema, snap.files ++ files,
-      snap.version, snap.meta ++ metaUp, snap.partitionOf ++ labels,
-      snap.statsOf ++ stats, snap.deleteFiles, Some(snap0),
-      snap.extraOf ++ extras)
+    commitManifest(spark, table,
+      snap.edit(Set.empty, stageFor(snap, batch, table))
+        .copy(meta = snap.meta ++ metaUp), snap.version, Some(snap0))
   }
 
   /** The snapshot with its schema evolved to append `src`'s NEW
@@ -3191,10 +3188,10 @@ object SnapshotTable {
     val df = readFilesDv(spark, table, snap, snap.files)
     val newMeta = TableLayout.of(snap).withPartitions(transforms)
       .into(snap.meta - "colmap" - "droppedCols" - "stagingTz")
-    val target = snap.copy(meta = newMeta)
-    val (files, labels, stats, extras) = stageFor(target, df, table)
-    commitManifest(spark, table, snap.schema, files, snap.version,
-      newMeta, labels, stats, Nil, Some(snap), extras)
+    val target = snap.copy(meta = newMeta, deleteFiles = Nil)
+    commitManifest(spark, table,
+      target.edit(snap.files.toSet, stageFor(target, df, table)),
+      snap.version, Some(snap))
   }
 
   /** BUCKET-LAYOUT evolution: move a table that outgrew its bucket
@@ -3231,10 +3228,10 @@ object SnapshotTable {
       bucketCols = cols, numBuckets = numBuckets, bucketSort = sorts)
       .buckets).into(snap.meta - "colmap" - "droppedCols")
     val df = readFilesDv(spark, table, snap, snap.files)
-    val target = snap.copy(meta = newMeta)
-    val (files, labels, stats, extras) = stageFor(target, df, table)
-    commitManifest(spark, table, snap.schema, files, snap.version,
-      newMeta, labels, stats, Nil, Some(snap), extras)
+    val target = snap.copy(meta = newMeta, deleteFiles = Nil)
+    commitManifest(spark, table,
+      target.edit(snap.files.toSet, stageFor(target, df, table)),
+      snap.version, Some(snap))
   }
 
   def replaceContents(spark: SparkSession, table: String,
@@ -3260,15 +3257,15 @@ object SnapshotTable {
       else if (snap.meta.contains("identityCol")) df
       else df.select(snap.schema.fieldNames.map(col).toIndexedSeq: _*)
     val (batch, metaUp) = identityFor(snap, batch0)
-    val (files, labels, stats, extras) = stageFor(snap, batch, table)
     // every surviving row is freshly staged under CURRENT column names,
     // so the replace clears the column mapping exactly like compact()
     // — the raw FileIndex fast path resumes and retired names free up.
     // The identity mark update MUST ride this commit: dropping it
     // would hand the replaced rows' ids out again on the next append
-    commitManifest(spark, table, snap.schema, files, snap.version,
-      snap.meta - "colmap" - "droppedCols" ++ metaUp, labels, stats, Nil,
-      Some(snap0), extras)
+    commitManifest(spark, table,
+      snap.edit(snap.files.toSet, stageFor(snap, batch, table)).copy(
+        meta = snap.meta - "colmap" - "droppedCols" ++ metaUp,
+        deleteFiles = Nil), snap.version, Some(snap0))
   }
 
   /** CREATE with an IDENTITY column (the reference's `INTEGER PRIMARY
@@ -3474,14 +3471,11 @@ object SnapshotTable {
         case None => col(f.name)
       }
     }.toIndexedSeq: _*)
-    val (fresh, labels, stats, extras) = stageFor(snap, rewritten, table)
+    val fresh = stageFor(snap, rewritten, table)
     val matched = observedLong(obs.get, "matched")(
       readFilesDv(spark, table, snap, hit).filter(predicate).count())
-    val keep = snap.files.filterNot(hit.contains)
-    val v = commitManifest(spark, table, snap.schema, keep ++ fresh,
-      snap.version, snap.meta, (snap.partitionOf -- hit) ++ labels,
-      (snap.statsOf -- hit) ++ stats, snap.deleteFiles, Some(snap),
-      (snap.extraOf -- hit) ++ extras)
+    val v = commitManifest(spark, table, snap.edit(hit.toSet, fresh),
+      snap.version, Some(snap))
     (v, matched, hit.size)
   }
 
@@ -3506,7 +3500,7 @@ object SnapshotTable {
         sum(when(matches, 1L).otherwise(0L)).as("deleted"),
         sum(when(matches, 0L).otherwise(1L)).as("kept"))
     val survivors = touched.filter(!matches)
-    val (staged, labels, stats, extras) = stageFor(snap, survivors, table)
+    val staged = stageFor(snap, survivors, table)
     val mm = obs.get
     lazy val recount = readFilesDv(spark, table, snap, hit)
       .agg(coalesce(sum(when(matches, 1L).otherwise(0L)), lit(0L)),
@@ -3517,12 +3511,9 @@ object SnapshotTable {
     // simply leave the manifest with no replacement
     val fresh =
       if (observedLong(mm, "kept")(recount.getLong(1)) > 0L) staged
-      else { dropStagedBatches(spark, table, staged); Nil }
-    val keep = snap.files.filterNot(hit.contains)
-    val v = commitManifest(spark, table, snap.schema, keep ++ fresh,
-      snap.version, snap.meta, (snap.partitionOf -- hit) ++ labels,
-      (snap.statsOf -- hit) ++ stats, snap.deleteFiles, Some(snap),
-      (snap.extraOf -- hit) ++ extras)
+      else { dropStagedBatches(spark, table, staged.map(_.path)); Nil }
+    val v = commitManifest(spark, table, snap.edit(hit.toSet, fresh),
+      snap.version, Some(snap))
     (v, deleted, hit.size)
   }
 
@@ -3579,10 +3570,7 @@ object SnapshotTable {
       .select(col("__fk")).distinct()
       .collect().map(r => pctDecode(r.getString(0))).toSet
     val hit = snap.files.filter(hitKeys)
-    val (rewrittenFiles, updated) = if (hit.isEmpty)
-      ((Nil: Seq[String], Map.empty[String, String],
-        Map.empty[String, Map[String, (String, String)]],
-        Map.empty[String, Map[String, String]]), 0L)
+    val (rewritten, updated) = if (hit.isEmpty) (Nil, 0L)
     else {
       // the updated count rides the rewrite pass as an observed metric
       // (every touched row flows through the CollectMetrics node; the
@@ -3621,23 +3609,18 @@ object SnapshotTable {
     // inserted rows draw fresh identity values; the new mark rides the
     // same atomic commit as the upsert
     val (insertRows, idMeta) = identityFor(snap, inserts)
-    val (insertFiles0, insertLabels, insertStats, insertExtras) =
-      stageFor(snap, insertRows, table)
+    val insertStaged = stageFor(snap, insertRows, table)
     val nIns = observedLong(obsIns.get, "inserted")(
       src.join(cur.select(col(key)).distinct(), Seq(key), "left_anti")
         .count())
-    val insertFiles =
-      if (nIns > 0) insertFiles0
-      else { dropStagedBatches(spark, table, insertFiles0); Nil }
+    val inserted =
+      if (nIns > 0) insertStaged
+      else { dropStagedBatches(spark, table, insertStaged.map(_.path)); Nil }
     if (updated == 0 && nIns == 0) return (snap.version, 0L, 0L, 0)
-    val keep = snap.files.filterNot(hit.contains)
-    val v = commitManifest(spark, table, snap.schema,
-      keep ++ rewrittenFiles._1 ++ insertFiles, snap.version,
-      snap.meta ++ (if (nIns > 0) idMeta else Map.empty),
-      (snap.partitionOf -- hit) ++ rewrittenFiles._2 ++ insertLabels,
-      (snap.statsOf -- hit) ++ rewrittenFiles._3 ++ insertStats,
-      snap.deleteFiles, Some(snap),
-      (snap.extraOf -- hit) ++ rewrittenFiles._4 ++ insertExtras)
+    val v = commitManifest(spark, table,
+      snap.edit(hit.toSet, rewritten ++ inserted)
+        .copy(meta = snap.meta ++ (if (nIns > 0) idMeta else Map.empty)),
+      snap.version, Some(snap))
     (v, updated, nIns, hit.size)
   }
 
@@ -3818,10 +3801,7 @@ object SnapshotTable {
     val isM = col("__m").isNotNull
     val obs = org.apache.spark.sql.Observation(
       s"graft-mrgf-${java.util.UUID.randomUUID()}")
-    val (rewritten, nUpd, nDel) = if (hit.isEmpty)
-      ((Nil: Seq[String], Map.empty[String, String],
-        Map.empty[String, Map[String, (String, String)]],
-        Map.empty[String, Map[String, String]]), 0L, 0L)
+    val (rewritten, nUpd, nDel) = if (hit.isEmpty) (Nil, 0L, 0L)
     else {
       val touched = readFilesDv(spark, table, snap, hit)
       val joined = touched.join(srcP,
@@ -3871,22 +3851,14 @@ object SnapshotTable {
       val kept = observedLong(m, "kept")(re.getLong(2))
       val fresh =
         if (kept > 0L) staged
-        else {
-          dropStagedBatches(spark, table, staged._1)
-          (Nil: Seq[String], Map.empty[String, String],
-            Map.empty[String, Map[String, (String, String)]],
-            Map.empty[String, Map[String, String]])
-        }
+        else { dropStagedBatches(spark, table, staged.map(_.path)); Nil }
       (fresh, upd, del)
     }
 
     // ----- insert pass: source rows matching NO live target row, first
     // applicable NOT MATCHED clause builds the row, unclaimed rows drop
-    val (insertStaged, nIns, idMeta) = if (notMatched.isEmpty) {
-      ((Nil: Seq[String], Map.empty[String, String],
-        Map.empty[String, Map[String, (String, String)]],
-        Map.empty[String, Map[String, String]]), 0L,
-        Map.empty[String, String])
+    val (inserted, nIns, idMeta) = if (notMatched.isEmpty) {
+      (Nil, 0L, Map.empty[String, String])
     } else {
       val curKeys = targetKeys.get
       val unmatched = srcP.join(curKeys,
@@ -3917,23 +3889,15 @@ object SnapshotTable {
         unmatched.filter(appliedI).count())
       if (n > 0) (staged, n, idMetaUp)
       else {
-        dropStagedBatches(spark, table, staged._1)
-        ((Nil: Seq[String], Map.empty[String, String],
-          Map.empty[String, Map[String, (String, String)]],
-          Map.empty[String, Map[String, String]]), 0L,
-          Map.empty[String, String])
+        dropStagedBatches(spark, table, staged.map(_.path))
+        (Nil, 0L, Map.empty[String, String])
       }
     }
     if (nUpd == 0 && nDel == 0 && nIns == 0 && hit.isEmpty)
       return (snap.version, 0L, 0L, 0L, 0)
-    val keep = snap.files.filterNot(hit.contains)
-    val v = commitManifest(spark, table, schema,
-      keep ++ rewritten._1 ++ insertStaged._1, snap.version,
-      snap.meta ++ idMeta,
-      (snap.partitionOf -- hit) ++ rewritten._2 ++ insertStaged._2,
-      (snap.statsOf -- hit) ++ rewritten._3 ++ insertStaged._3,
-      snap.deleteFiles, Some(snap),
-      (snap.extraOf -- hit) ++ rewritten._4 ++ insertStaged._4)
+    val v = commitManifest(spark, table,
+      snap.edit(hit.toSet, rewritten ++ inserted)
+        .copy(meta = snap.meta ++ idMeta), snap.version, Some(snap))
     (v, nUpd, nDel, nIns, hit.size)
     } finally targetKeys.foreach(_.unpersist(blocking = false))
   }
@@ -4027,15 +3991,15 @@ object SnapshotTable {
             .sortWithinPartitions(cluster.map(col): _*)
         (arranged, TableLayout.Plain)
       }
-    val (fresh, labels, stats, extras) =
-      stageFor(snap, input, table, staging)
+    val fresh = stageFor(snap, input, table, staging)
     // the rewrite lands every row under the CURRENT column names, so
     // compaction clears the column mapping (and un-retires former /
     // dropped names: no current-snapshot file carries them anymore) —
     // the raw FileIndex scan becomes exact again, same as the DV purge
-    val v = commitManifest(spark, table, snap.schema, fresh,
-      snap.version, snap.meta - "colmap" - "droppedCols", labels, stats,
-      Nil, Some(snap), extras)
+    val v = commitManifest(spark, table,
+      snap.edit(snap.files.toSet, fresh).copy(
+        meta = snap.meta - "colmap" - "droppedCols", deleteFiles = Nil),
+      snap.version, Some(snap))
     (v, snap.files.size, fresh.size)
   }
 
@@ -4169,14 +4133,11 @@ object SnapshotTable {
     val hit = snap.files.filter(f =>
       snap.partitionOf.get(f).exists(values)).toSet
     if (hit.isEmpty) return (snap.version, 0, 0)
-    val keep = snap.files.filterNot(hit)
     val df = readFilesDv(spark, table, snap, snap.files.filter(hit))
-    val (fresh, labels, stats, extras) = stageFor(snap, df, table)
-    val v = commitManifest(spark, table, snap.schema, keep ++ fresh,
-      snap.version, snap.meta,
-      (snap.partitionOf -- hit) ++ labels,
-      (snap.statsOf -- hit) ++ stats, Nil, Some(snap),
-      (snap.extraOf -- hit) ++ extras)
+    val fresh = stageFor(snap, df, table)
+    val v = commitManifest(spark, table,
+      snap.edit(hit, fresh).copy(deleteFiles = Nil), snap.version,
+      Some(snap))
     (v, hit.size, fresh.size)
   }
 
@@ -4221,12 +4182,10 @@ object SnapshotTable {
         else (batch0.select(
           snap.schema.fieldNames.map(col).toIndexedSeq: _*),
           Map.empty[String, String])
-      val (files, labels, stats, extras) = stageFor(snap, rows, table)
-      commitManifest(spark, table, snap.schema, snap.files ++ files,
-        snap.version,
-        snap.meta ++ metaUp + (metaKey -> batchId.toString),
-        snap.partitionOf ++ labels, snap.statsOf ++ stats,
-        snap.deleteFiles, Some(snap0), snap.extraOf ++ extras)
+      commitManifest(spark, table,
+        snap.edit(Set.empty, stageFor(snap, rows, table)).copy(
+          meta = snap.meta ++ metaUp + (metaKey -> batchId.toString)),
+        snap.version, Some(snap0))
       true
     }
   }
@@ -4250,11 +4209,11 @@ object SnapshotTable {
         if (snap.meta.contains("identityCol")) identityFor(snap, batch)
         else (batch.select(
           snap.schema.fieldNames.map(col).toIndexedSeq: _*), Map.empty)
-      val (files, labels, stats, extras) = stageFor(snap, rows, table)
-      commitManifest(spark, table, snap.schema, files, snap.version,
-        snap.meta - "colmap" - "droppedCols" ++ metaUp +
-          (metaKey -> batchId.toString),
-        labels, stats, Nil, Some(snap), extras)
+      commitManifest(spark, table,
+        snap.edit(snap.files.toSet, stageFor(snap, rows, table)).copy(
+          meta = snap.meta - "colmap" - "droppedCols" ++ metaUp +
+            (metaKey -> batchId.toString), deleteFiles = Nil),
+        snap.version, Some(snap))
       true
     }
   }
@@ -4748,10 +4707,8 @@ object SnapshotTable {
     // deliberately a FULL manifest (base = None): restore re-lists the
     // old snapshot verbatim and re-anchors any delta chain — the verb
     // is rare and the verbatim list is its contract
-    commitManifest(spark, table, old.schema, old.files, cur.version,
-      old.meta ++ streamMarks ++ idMark +
-        ("restoredFrom" -> version.toString),
-      old.partitionOf, old.statsOf, old.deleteFiles, None, old.extraOf)
+    commitManifest(spark, table, old.copy(meta = old.meta ++ streamMarks ++
+      idMark + ("restoredFrom" -> version.toString)), cur.version)
   }
 
   private def stagedManifestPath(table: String, token: String) =
@@ -4777,15 +4734,13 @@ object SnapshotTable {
     // frozen base (any interleaving commit fails the publish and the
     // caller re-stages on the new base, drawing fresh ids)
     val (rows, metaUp) = identityFor(snap, df)
-    val (files, labels, stats, extras) = stageFor(snap, rows, table)
+    val candidate = snap.edit(Set.empty, stageFor(snap, rows, table))
+      .copy(meta = snap.meta ++ metaUp + ("wapBase" -> snap.version.toString))
     val token = java.util.UUID.randomUUID().toString
     val f = fs(spark, table)
     val p = stagedManifestPath(table, token)
     val out = f.create(p, false)
-    try out.write(renderManifest(snap.schema, snap.files ++ files,
-      snap.meta ++ metaUp + ("wapBase" -> snap.version.toString),
-      snap.partitionOf ++ labels, snap.statsOf ++ stats,
-      snap.deleteFiles, snap.extraOf ++ extras))
+    try out.write(renderManifest(candidate))
     finally out.close()
     token
   }
@@ -4823,10 +4778,9 @@ object SnapshotTable {
       throw new IllegalStateException(
         s"publish conflict at $table: candidate staged on v$base but " +
           s"current is v$cur; re-stage on the new base")
-    val v = commitManifest(spark, table, snap.schema, snap.files, base,
-      snap.meta - "wapBase", snap.partitionOf, snap.statsOf,
-      snap.deleteFiles, Some(readManifest(spark, table, base)),
-      snap.extraOf)
+    val v = commitManifest(spark, table,
+      snap.copy(meta = snap.meta - "wapBase"), base,
+      Some(readManifest(spark, table, base)))
     fs(spark, table).delete(p, false)
     v
   }
@@ -4900,9 +4854,8 @@ object SnapshotTable {
     val snap = readManifest(spark, table, v)
     val f = fs(spark, table)
     val out = f.create(branchManifestPath(table, name, 0), false)
-    try out.write(renderManifest(snap.schema, snap.files,
-      snap.meta + ("branchBase" -> v.toString) + ("branchName" -> name),
-      snap.partitionOf, snap.statsOf, snap.deleteFiles, snap.extraOf))
+    try out.write(renderManifest(snap.copy(meta =
+      snap.meta + ("branchBase" -> v.toString) + ("branchName" -> name))))
     finally out.close()
     cacheWapExists(table, name, exists = true)
   }
@@ -5130,10 +5083,9 @@ object SnapshotTable {
     val v =
       if (cur == base)
         // FAST-FORWARD: metadata-only promotion of the branch head
-        commitManifest(spark, table, snap.schema, snap.files, base,
-          snap.meta - "branchBase" - "branchName",
-          snap.partitionOf, snap.statsOf, snap.deleteFiles,
-          Some(readManifest(spark, table, base)), snap.extraOf)
+        commitManifest(spark, table,
+          snap.copy(meta = snap.meta - "branchBase" - "branchName"), base,
+          Some(readManifest(spark, table, base)))
       else {
         // REPLAY detection before any conflict check: a crash between
         // the main commit and dropBranch leaves the branch alive with
@@ -5169,9 +5121,8 @@ object SnapshotTable {
     val snap = readManifest(spark, table, v)
     val f = fs(spark, table)
     val out = f.create(branchManifestPath(table, name, head + 1), false)
-    try out.write(renderManifest(snap.schema, snap.files,
-      snap.meta + ("branchBase" -> v.toString) + ("branchName" -> name),
-      snap.partitionOf, snap.statsOf, snap.deleteFiles, snap.extraOf))
+    try out.write(renderManifest(snap.copy(meta =
+      snap.meta + ("branchBase" -> v.toString) + ("branchName" -> name))))
     finally out.close()
     // keep the PRIOR head (delete only the sequences below it): a
     // branch-tailing CDF stream checkpointed at that head can then
@@ -5263,16 +5214,10 @@ object SnapshotTable {
     val added = snap.files.filterNot(baseSnap.files.toSet)
       .filterNot(mainSet)
     if (added.isEmpty) return cur
-    val addedSet = added.toSet
-    commitManifest(spark, table, mainSnap.schema,
-      mainSnap.files ++ added, cur,
-      mainSnap.meta ++ merged.map("identityHwm" -> _.toString) ++
-        markMerge,
-      mainSnap.partitionOf ++
-        snap.partitionOf.view.filterKeys(addedSet).toMap,
-      mainSnap.statsOf ++ snap.statsOf.view.filterKeys(addedSet).toMap,
-      mainSnap.deleteFiles, Some(mainSnap),
-      mainSnap.extraOf ++ snap.extraOf.view.filterKeys(addedSet).toMap)
+    commitManifest(spark, table,
+      mainSnap.edit(Set.empty, added.map(snap.entry)).copy(meta =
+        mainSnap.meta ++ merged.map("identityHwm" -> _.toString) ++
+          markMerge), cur, Some(mainSnap))
   }
 
   /** Drop a branch: its manifests go; its staged batches become
@@ -5439,15 +5384,7 @@ object SnapshotTable {
     try {
       val n = matched.count()
       if (n == 0) return (snap.version, 0L)
-      val batch = "dv-" + java.util.UUID.randomUUID().toString
-      val dir = s"$table/data/$batch"
-      matched.select(col("__fk").as("file_key"), col("__rp").as("pos"))
-        .write.mode("error").options(stagingWriteOpts).parquet(dir)
-      val f = fs(spark, table)
-      val dvFiles = f.listStatus(new Path(dir)).iterator
-        .map(_.getPath.getName)
-        .filter(nm => nm.startsWith("part-") && nm.endsWith(".parquet"))
-        .map(nm => s"data/$batch/$nm").toVector.sorted
+      val (_, dvFiles) = stageDeletionVector(spark, table, matched)
       // one simultaneous select (not a withColumn fold): every
       // assignment RHS binds against the OLD row, so `SET a = b,
       // b = a` swaps — and casts to the declared column type — the
@@ -5461,11 +5398,10 @@ object SnapshotTable {
             case None => col(f.name)
           }
         }.toIndexedSeq: _*)
-      val (fresh, labels, stats, extras) = stageFor(snap, updated, table)
-      val v = commitManifest(spark, table, snap.schema,
-        snap.files ++ fresh, snap.version, snap.meta,
-        snap.partitionOf ++ labels, snap.statsOf ++ stats,
-        snap.deleteFiles ++ dvFiles, Some(snap), snap.extraOf ++ extras)
+      val v = commitManifest(spark, table,
+        snap.edit(Set.empty, stageFor(snap, updated, table))
+          .copy(deleteFiles = snap.deleteFiles ++ dvFiles),
+        snap.version, Some(snap))
       (v, n)
     } finally { matched.unpersist(blocking = false); () }
   }

@@ -28,8 +28,9 @@ object CommitWorker {
         val files =
           if (cur == 0) Nil
           else SnapshotTable.readManifest(spark, table, cur).files
-        SnapshotTable.commitManifest(spark, table, schema, files, cur,
-          Map("w" -> s"$id-$i"))
+        SnapshotTable.commitManifest(spark, table,
+          SnapshotTable.Snapshot(cur, schema, files, Map("w" -> s"$id-$i")),
+          cur)
       }
     }
     spark.stop()

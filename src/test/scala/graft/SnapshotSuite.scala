@@ -103,7 +103,7 @@ class SnapshotSuite extends AnyFunSuite {
     val snap1 = SnapshotTable.readManifest(spark, t, 1L)
     // a writer that read v1 and tries to commit over the v2 that landed
     val ex = intercept[IllegalStateException] {
-      SnapshotTable.commitManifest(spark, t, snap1.schema, snap1.files, 1L)
+      SnapshotTable.commitManifest(spark, t, snap1, 1L)
     }
     assert(ex.getMessage.contains("concurrent commit"))
     assert(SnapshotTable.currentVersion(spark, t) === 2L)
@@ -1347,8 +1347,9 @@ class SnapshotSuite extends AnyFunSuite {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("x",
         org.apache.spark.sql.types.LongType)))
-    SnapshotTable.commitManifest(spark, t, schema, Nil, 0L,
-      Map("w" -> "init-0")) // v1
+    SnapshotTable.commitManifest(spark, t,
+      SnapshotTable.Snapshot(0L, schema, Nil, Map("w" -> "init-0")),
+      0L) // v1
     val perWorker = 6
     // Test/fork := true, so java.class.path IS the full test classpath
     val javaBin = System.getProperty("java.home") + "/bin/java"
@@ -1381,8 +1382,9 @@ class SnapshotSuite extends AnyFunSuite {
       SnapshotTable.withCommitRetry(maxAttempts = 200) {
         val cur = SnapshotTable.currentVersion(spark, t)
         val files = SnapshotTable.readManifest(spark, t, cur).files
-        SnapshotTable.commitManifest(spark, t, schema, files, cur,
-          Map("w" -> s"self-$i"))
+        SnapshotTable.commitManifest(spark, t,
+          SnapshotTable.Snapshot(cur, schema, files, Map("w" -> s"self-$i")),
+          cur)
       }
     }
     def drain(pf: (Process, java.io.File), id: String): Unit = {
@@ -4719,9 +4721,8 @@ class SnapshotSuite extends AnyFunSuite {
     assert(v1.meta.contains("stagingTz"))
     // simulate a legacy (pre-pin) table: a v2 commit whose meta drops
     // the pin — each manifest is wholly authoritative for meta
-    SnapshotTable.commitManifest(spark, t, v1.schema, v1.files, 1L,
-      v1.meta - "stagingTz", v1.partitionOf, v1.statsOf, Nil, Some(v1),
-      v1.extraOf)
+    SnapshotTable.commitManifest(spark, t,
+      v1.copy(meta = v1.meta - "stagingTz"), 1L, Some(v1))
     val v2 = SnapshotTable.readManifest(spark, t, 2L)
     assert(!v2.meta.contains("stagingTz"),
       "an unchanged layout must not re-pin (retroactive adoption " +

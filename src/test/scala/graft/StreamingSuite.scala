@@ -613,8 +613,9 @@ class StreamingSuite extends AnyFunSuite {
               .filter(col("n") > 0)
             val files = SnapshotTable.stageBatch(
               newView.repartition(1), viewT)
-            SnapshotTable.commitManifest(spark, viewT, vsnap.schema,
-              files, cur, Map("cdcUpTo" -> to.toString))
+            SnapshotTable.commitManifest(spark, viewT,
+              SnapshotTable.Snapshot(cur, vsnap.schema, files,
+                Map("cdcUpTo" -> to.toString)), cur)
             ()
           }
         }
