@@ -1826,12 +1826,12 @@ object SnapshotTable {
     * manifests that kept versions still resolve through.
     */
   private[graft] def commitManifest(spark: SparkSession, table: String,
-      next0: Snapshot, expected: Long,
+      next: Snapshot, expected: Long,
       base: Option[Snapshot] = None): Long = {
-    require(next0.meta.forall { case (k, v) =>
+    require(next.meta.forall { case (k, v) =>
       !k.contains('=') && !(k + v).exists(c => c == '\n' || c == '\r') },
       "manifest meta keys/values must be line-safe and '='-free keys")
-    require(next0.partitionOf.values.forall(v =>
+    require(next.partitionOf.values.forall(v =>
       !v.exists(c => c == '\n' || c == '\r' || c == '\t')),
       "partition values must be line- and tab-safe")
     // TIMESTAMP identity-partition labels are rendered by
@@ -1850,14 +1850,14 @@ object SnapshotTable {
     // wrong derivation zone, refuse writes from the original zone and
     // mis-render read literals. Such tables stay unpinned (session-zone
     // reads, the pre-pin behavior) until a layout redeclaration.
-    val layout = TableLayout.of(next0)
+    val layout = TableLayout.of(next)
     val declaresLayout = expected == 0 || base.exists(b =>
       TableLayout.of(b).identitySources != layout.identitySources)
-    val pinned =
-      if (wantsStagingTz(next0.schema, next0.meta, layout) &&
-          declaresLayout) next0.copy(meta = next0.meta +
-        ("stagingTz" -> spark.sessionState.conf.sessionLocalTimeZone))
-      else next0
+    val meta =
+      if (wantsStagingTz(next.schema, next.meta, layout) &&
+          declaresLayout) next.meta +
+        ("stagingTz" -> spark.sessionState.conf.sessionLocalTimeZone)
+      else next.meta
     val v = expected + 1
     val f = fs(spark, table)
     f.mkdirs(manifestDir(table))
@@ -1868,28 +1868,28 @@ object SnapshotTable {
     val branchOf = scopedBranch(table)
     // stamp on-disk sizes for this commit's NEW files (one listStatus
     // per fresh batch dir — O(churn)); scan planning then never lists
-    val next = withFileBytes(spark, table,
+    val state = withFileBytes(spark, table,
       base match {
-        case Some(b) => pinned.files.filterNot(b.files.toSet)
-        case None => pinned.files
-      }, pinned)
+        case Some(b) => next.files.filterNot(b.files.toSet)
+        case None => next.files
+      }, next.copy(meta = meta))
     def renderFull(): Array[Byte] =
-      if (branchOf.isEmpty && shouldGroup(layout, next.files.size))
+      if (branchOf.isEmpty && shouldGroup(layout, state.files.size))
         renderGroupedManifest(spark, table,
           // one-time upgrade as a legacy table crosses the grouping
           // threshold: every group member gets its size recorded
-          withFileBytes(spark, table, next.files, next),
+          withFileBytes(spark, table, state.files, state),
           layout.partitions.isEmpty, base)
-      else renderManifest(next)
+      else renderManifest(state)
     val body: Array[Byte] = base match {
       case Some(b) if branchOf.isEmpty && b.version == expected &&
           expected > 0 && b.depth + 1 <= MaxChainDepth =>
         val baseSet = b.files.toSet
-        val targetSet = next.files.toSet
+        val targetSet = state.files.toSet
         val removed = b.files.filterNot(targetSet)
-        val added = next.files.filterNot(baseSet)
+        val added = state.files.filterNot(baseSet)
         if (removed.size + added.size < b.files.size)
-          renderDelta(next, expected, b.depth + 1, removed, added)
+          renderDelta(state, expected, b.depth + 1, removed, added)
         else renderFull()
       case _ => renderFull()
     }
