@@ -5446,4 +5446,103 @@ class SnapshotSuite extends AnyFunSuite {
       check(name)
     }
   }
+
+  test("mergeInto equivalence: update-only, insert-only, mixed, duplicate " +
+      "and NULL source keys, empty and all-matching sources on plain, " +
+      "partitioned and clustered tables, one with a deletion vector") {
+    import org.apache.spark.sql.Row
+    val k = col("o_orderkey")
+    // the four orders columns as (key, custkey, status, price)
+    val base = Tables.orders(spark, sf).select(k, col("o_custkey"),
+      col("o_orderstatus"), col("o_totalprice"))
+    val dvKey = base.filter(k % 9 === 3).agg(min(k)).head().getLong(0)
+    val layouts: Seq[(String, String => Unit)] = Seq(
+      "plain + deletion vector" -> { t =>
+        SnapshotTable.create(spark, t, base, numFiles = 4)
+        SnapshotTable.deleteWhereVector(spark, t, k % 9 === 3)
+      },
+      "partitioned" -> { t =>
+        SnapshotTable.createPartitioned(spark, t, base, "o_orderstatus")
+      },
+      "clustered" -> { t =>
+        SnapshotTable.createClustered(spark, t, base, "o_orderkey",
+          numFiles = 4)
+      })
+    // each case builds its source from the table's live rows
+    val cases: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "update-only" -> (live => live.filter(k % 7 === 0).select(k,
+        lit(null).cast("long").as("o_custkey"), lit("U").as("o_orderstatus"),
+        (col("o_totalprice") + 1).as("o_totalprice"))),
+      "insert-only (+ the DV-deleted key)" -> (live => live
+        .filter(k % 13 === 1).select((k + 9000000L).as("o_orderkey"),
+          col("o_custkey"), lit("I").as("o_orderstatus"),
+          col("o_totalprice"))
+        .union(base.filter(k === dvKey)
+          .withColumn("o_orderstatus", lit("D")))),
+      "mixed" -> (live => live.filter(k % 11 === 0).select(
+        (when(k % 2 === 0, k).otherwise(k + 8000000L)).as("o_orderkey"),
+        col("o_custkey"), lit("M").as("o_orderstatus"),
+        (col("o_totalprice") * 2).as("o_totalprice"))),
+      "duplicate source keys" -> { live =>
+        val s = live.filter(k % 17 === 0).select(
+          (when(k % 2 === 0, k).otherwise(k + 7000000L)).as("o_orderkey"),
+          col("o_custkey"), lit("X").as("o_orderstatus"),
+          col("o_totalprice"))
+        s.union(s)
+      },
+      "NULL source key" -> (live => live.filter(k % 19 === 0).select(k,
+        col("o_custkey"), lit("N").as("o_orderstatus"), col("o_totalprice"))
+        .union(live.limit(1).select(lit(null).cast("long").as("o_orderkey"),
+          col("o_custkey"), lit("Z").as("o_orderstatus"),
+          col("o_totalprice")))),
+      "empty source" -> (live => live.limit(0)),
+      "matches every row" -> (live => live.filter(k.isNotNull).select(k,
+        col("o_custkey"), lit("A").as("o_orderstatus"),
+        col("o_totalprice"))))
+    def render(rows: Seq[Row]): Seq[String] = rows.map(_.toString).sorted
+    layouts.foreach { case (layout, create) =>
+      val t = freshTable("mergeeq")
+      create(t)
+      cases.foreach { case (name, mk) =>
+        val what = s"$layout / $name"
+        val live = SnapshotTable.read(spark, t)
+        val prev = live.collect().toSeq
+        val srcRows = mk(live).select(base.schema.map(f =>
+          col(f.name).cast(f.dataType).as(f.name)): _*).collect().toSeq
+        // the model: duplicates collapse to one row per key (NULL is one
+        // key); a live key takes the source's non-NULL columns, any other
+        // source key inserts its row verbatim
+        val byKey = srcRows.groupBy(r => Option(r.get(0))).map {
+          case (key, rs) => key -> rs.head }
+        val liveKeys = prev.flatMap(r => Option(r.get(0))).toSet
+        val updatedRows = prev.map { r =>
+          byKey.get(Option(r.get(0))).filter(_ => !r.isNullAt(0)) match {
+            case Some(s) => Row.fromSeq(r.toSeq.indices.map(i =>
+              if (s.isNullAt(i)) r.get(i) else s.get(i)))
+            case None => r
+          }
+        }
+        val inserts = byKey.collect {
+          case (key, s) if key.forall(kv => !liveKeys(kv)) => s }.toSeq
+        val expUpd = prev.count(r =>
+          !r.isNullAt(0) && byKey.contains(Some(r.get(0)))).toLong
+        def snap() = SnapshotTable.readManifest(spark, t,
+          SnapshotTable.currentVersion(spark, t))
+        val before = snap()
+        val (v, upd, ins, rewritten) = SnapshotTable.mergeInto(spark, t,
+          spark.createDataFrame(spark.sparkContext.parallelize(srcRows, 2),
+            base.schema), "o_orderkey")
+        assert((upd, ins) === ((expUpd, inserts.size.toLong)), what)
+        val after = snap()
+        if (upd + ins == 0) {
+          assert((v, rewritten) === ((before.version, 0)), what)
+          assert(after.version === before.version, what)
+        } else assert(v === before.version + 1, what)
+        assert(rewritten === (before.files.toSet -- after.files).size, what)
+        assert((rewritten > 0) === (upd > 0), what)
+        assert(render(SnapshotTable.read(spark, t).collect().toSeq) ===
+          render(updatedRows ++ inserts), what)
+      }
+    }
+  }
 }
