@@ -669,10 +669,9 @@ object GraftDml {
             throw new IllegalArgumentException(s"no such column $c0"))
         }
         if (al.specs.forall(_.newDataType.isDefined)) {
-          // validate spec SHAPE here; widenColumns validates each
-          // widening against the schema as evolved by the specs before
-          // it (two specs on one column fail up front) and applies the
-          // whole statement as ONE manifest commit — a multi-spec
+          // validate spec SHAPE here; widenColumns rejects two specs on
+          // one column up front, skips a spec to the current type and
+          // applies the rest as ONE manifest commit — a multi-spec
           // statement can never half-apply then error
           val widens = al.specs.map { spec =>
             require(spec.newNullability.isEmpty &&

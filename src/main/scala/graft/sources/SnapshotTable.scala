@@ -683,6 +683,19 @@ object SnapshotTable {
     case _ => None
   }
 
+  /** The raw manifest paths named by `keys`' one encoded file-key
+    * column (`__fk`, or a deletion vector's `file_key`), in ONE job with
+    * no shuffle: each task de-duplicates its own keys and the driver
+    * unions the (file-count-bounded) sets, decoding each key once with
+    * [[pctDecode]] so files in partitions whose value carries a
+    * URI-special character still match the manifest.
+    */
+  private def fileKeysOf(keys: DataFrame): Set[String] = {
+    val str = org.apache.spark.sql.Encoders.STRING
+    keys.as(str).mapPartitions(_.toSet.iterator)(str)
+      .collect().iterator.map(pctDecode).toSet
+  }
+
   /** Read `files` under snapshot `snap` with its DELETION VECTORS
     * applied: rows whose (file key, row position) appear in a delete
     * file are anti-joined away. The anti join's build side is
@@ -847,14 +860,9 @@ object SnapshotTable {
       predicate: Column): (Long, Long) = {
     val snap = loadCurrent(spark, table)
     val matches = coalesce(predicate, lit(false))
-    val (dir, dvFiles) = stageDeletionVector(spark, table,
+    val (dvFiles, n) = stageDeletionVector(spark, table,
       readFilesDvProv(spark, table, snap, snap.files).filter(matches))
-    val n = labeledJob(spark, "graft: count deletion vector") {
-      spark.read.schema(dvFileSchema).parquet(dir).count() }
-    if (n == 0) {
-      fs(spark, table).delete(new Path(dir), true)
-      return (snap.version, 0L)
-    }
+    if (n == 0) return (snap.version, 0L)
     val v = commitManifest(spark, table,
       snap.copy(deleteFiles = snap.deleteFiles ++ dvFiles), snap.version,
       Some(snap))
@@ -863,20 +871,29 @@ object SnapshotTable {
 
   /** Write the (`__fk`, `__rp`) coordinates of `rows` as a fresh
     * `dv-<uuid>` deletion-vector batch, labeled as a staging job;
-    * returns the batch dir and its files' table-relative paths, sorted.
+    * returns its files' table-relative paths, sorted, and the rows it
+    * wrote — counted by an observed metric riding the write, not by a
+    * second job. A batch that wrote no rows is removed again and
+    * returns no files.
     */
   private def stageDeletionVector(spark: SparkSession, table: String,
-      rows: DataFrame): (String, Seq[String]) = {
+      rows: DataFrame): (Seq[String], Long) = {
     val batch = "dv-" + java.util.UUID.randomUUID().toString
     val dir = s"$table/data/$batch"
+    val obs = org.apache.spark.sql.Observation(s"graft-$batch")
     labeledJob(spark, "graft: stage deletion vector") {
-      rows.select(col("__fk").as("file_key"), col("__rp").as("pos"))
+      rows.observe(obs, count(lit(1L)).as("rows"))
+        .select(col("__fk").as("file_key"), col("__rp").as("pos"))
         .write.mode("error").options(stagingWriteOpts).parquet(dir) }
-    val files = fs(spark, table).listStatus(new Path(dir)).iterator
+    val n = observedLong(obs.get, "rows")(
+      spark.read.schema(dvFileSchema).parquet(dir).count())
+    val f = fs(spark, table)
+    if (n == 0) { f.delete(new Path(dir), true); return (Nil, 0L) }
+    val files = f.listStatus(new Path(dir)).iterator
       .map(_.getPath.getName)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-      .map(n => s"data/$batch/$n").toVector.sorted
-    (dir, files)
+      .filter(p => p.startsWith("part-") && p.endsWith(".parquet"))
+      .map(p => s"data/$batch/$p").toVector.sorted
+    (files, n)
   }
 
   /** Write `df` as a fresh immutable file batch under `data/b-<uuid>/`,
@@ -2788,21 +2805,26 @@ object SnapshotTable {
       to: org.apache.spark.sql.types.DataType): Long =
     widenColumns(spark, table, Seq(name -> to))
 
-  /** Widen several columns in ONE manifest commit. Each spec is
-    * validated against the schema AS EVOLVED by the specs before it —
-    * so two specs touching the same column fail the whole statement up
-    * front (the second would be widening an already-widened type),
-    * never after a first spec has committed.
+  /** Widen several columns in ONE manifest commit. A column named by
+    * two specs fails the whole statement up front, never after a first
+    * spec has committed. A spec to the column's current type is a no-op
+    * (the Spark and Delta rule); a statement of only no-ops commits
+    * nothing and returns the current version.
     */
   def widenColumns(spark: SparkSession, table: String,
       widens: Seq[(String, org.apache.spark.sql.types.DataType)]): Long = {
     val snap = loadCurrent(spark, table)
     require(widens.nonEmpty, "ALTER COLUMN needs at least one spec")
-    val newSchema = widens.foldLeft(snap.schema) { case (sch, (name, to)) =>
-      requireWidenable(sch, name, to)
-      StructType(sch.fields.map(x =>
-        if (x.name == name) x.copy(dataType = to) else x))
-    }
+    val twice = widens.map(_._1).diff(widens.map(_._1).distinct).distinct
+    require(twice.isEmpty,
+      s"ALTER COLUMN names column(s) ${twice.mkString(", ")} more than once")
+    val real = widens.filterNot { case (name, to) =>
+      snap.schema.fields.exists(f => f.name == name && f.dataType == to) }
+    real.foreach { case (name, to) => requireWidenable(snap.schema, name, to) }
+    if (real.isEmpty) return snap.version
+    val to = real.toMap
+    val newSchema = StructType(snap.schema.fields.map(x =>
+      to.get(x.name).fold(x)(t => x.copy(dataType = t))))
     commitManifest(spark, table, snap.copy(schema = newSchema),
       snap.version, Some(snap))
   }
@@ -3421,15 +3443,9 @@ object SnapshotTable {
     // DV-applied provenance scan: a file whose only matching rows are
     // already vector-deleted is NOT affected (rewriting it would be
     // wasted IO, though never wrong)
-    // __fk is the manifest-relative path in URI-ENCODED space — decode
-    // the (file-count-bounded) collected set on the driver before
-    // matching the raw manifest paths, or files in partitions whose
-    // value carries a URI-special character silently never match
-    val keys = readFilesDvProv(spark, table, snap, snap.files)
-      .filter(predicate)
-      .select(col("__fk")).distinct()
-      .collect().map(r => pctDecode(r.getString(0))).toSet
-    snap.files.filter(keys)
+    snap.files.filter(fileKeysOf(
+      readFilesDvProv(spark, table, snap, snap.files)
+        .filter(predicate).select(col("__fk"))))
   }
 
   /** File-granular R23: rewrite ONLY the files containing matching rows,
@@ -3439,6 +3455,8 @@ object SnapshotTable {
   def updateWhere(spark: SparkSession, table: String, predicate: Column,
       assignments: Map[String, Column]): (Long, Long, Int) = {
     val snap = loadCurrent(spark, table)
+    requireAssignable(snap.schema, assignments)
+    requireNotIdentity(snap, assignments.keys, "UPDATE")
     val hit = affectedFiles(spark, table, snap, predicate)
     if (hit.isEmpty) return (snap.version, 0L, 0)
     // DV-applied: a rewrite materializes the touched files' deletion
@@ -3461,8 +3479,6 @@ object SnapshotTable {
     // rule as INSERT/MERGE): an uncast RHS would let CaseWhen type
     // promotion stage parquet whose type differs from the manifest
     // schema — committing a version the schema'd reader cannot open.
-    requireAssignable(snap.schema, assignments)
-    requireNotIdentity(snap, assignments.keys, "UPDATE")
     val rewritten = touched.select(snap.schema.map { f =>
       assignments.get(f.name) match {
         case Some(v) =>
@@ -3519,17 +3535,23 @@ object SnapshotTable {
 
   /** File-granular MERGE (upsert): rows of `source` whose `key` exists
     * in the table update their row in place (source columns win); new
-    * keys append as a fresh batch. Only files CONTAINING matched keys
-    * are rewritten — unmatched files carry over verbatim, and the
-    * matched-key probe is an equi-join on the key column only (column
-    * pruning reaches the scan). One commit publishes both halves
-    * atomically. Update semantics are column-wise source-wins with NULL
+    * keys append. Update semantics are column-wise source-wins with NULL
     * falling back to the target value (the foreachBatch upsert sink's
     * semantics — with a NULL-free source this is row replacement).
     * Duplicate source keys collapse to one arbitrary row
     * (dropDuplicates); pass a pre-deduped source for determinism.
-    * Returns (new version, rows updated, rows inserted, files
-    * rewritten).
+    *
+    * One file probe plus one staged write. The probe (one job, no
+    * shuffle) finds `hit`, every file holding a live row whose key some
+    * source row carries — an equi-join on the key column only, so column
+    * pruning reaches the scan; unmatched files carry over verbatim. The
+    * write is ONE plan: the hit files' live rows FULL OUTER JOIN the
+    * de-duplicated source on the key, staged as one batch whose updated
+    * and inserted counts ride it as observed metrics. Inserts need no
+    * table scan: a matched key's every live row sits in `hit`, so a
+    * source row with no partner there has none in the table. One commit
+    * publishes the batch and retires the hit files. Returns (new
+    * version, rows updated, rows inserted, files rewritten).
     */
   def mergeInto(spark: SparkSession, table: String, source: DataFrame,
       key: String): (Long, Long, Long, Int) = {
@@ -3549,79 +3571,82 @@ object SnapshotTable {
     }
     val srcSchema = snap.schema.filterNot(f =>
       idcOpt.exists(_.equalsIgnoreCase(f.name)))
-    val cols = snap.schema.fieldNames
     // CAST to the table schema, not just select: a source whose column
     // types differ (e.g. an int literal for a bigint key) would
     // otherwise stage mistyped parquet the schema'd reader cannot open
     // — committing an unreadable table version (the INSERT path casts
     // for exactly this reason)
-    val src = source.select(srcSchema.map(f =>
+    val cast = source.select(srcSchema.map(f =>
       col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-      .dropDuplicates(key)
-    val cur = readFilesDv(spark, table, snap, snap.files)
-    val srcKeys = src.select(col(key))
-    // files holding at least one matched LIVE key (pruned scan: key +
-    // provenance). The file key is captured by the provenance read
-    // BEFORE the semi join — after it, the plan has two sources and a
-    // bare input_file_name would be rejected as ambiguous.
-    val hitKeys = readFilesDvProv(spark, table, snap, snap.files)
-      .select(col(key), col("__fk"))
-      .join(srcKeys, Seq(key), "left_semi")
-      .select(col("__fk")).distinct()
-      .collect().map(r => pctDecode(r.getString(0))).toSet
-    val hit = snap.files.filter(hitKeys)
-    val (rewritten, updated) = if (hit.isEmpty) (Nil, 0L)
-    else {
-      // the updated count rides the rewrite pass as an observed metric
-      // (every touched row flows through the CollectMetrics node; the
-      // __k probe marks the matched ones) — no separate semi-join job
-      val obs = org.apache.spark.sql.Observation(
-        s"graft-mrg-${java.util.UUID.randomUUID()}")
-      val touched = readFilesDv(spark, table, snap, hit)
-      val s2 = src.select(
-        col(key).as("__k") +: srcSchema.map(_.name).filterNot(_ == key)
-          .map(c => col(c).as(s"__s_$c")).toIndexedSeq: _*)
-      val merged = touched
-        .join(s2, touched(key) === col("__k"), "left_outer")
-        .observe(obs,
-          sum(when(col("__k").isNotNull, 1L).otherwise(0L)).as("updated"))
-        .select(cols.map(c =>
-          if (c == key) col(key)
-          // a matched row KEEPS its identity value — the source has
-          // no say over a generated column
-          else if (idcOpt.exists(_.equalsIgnoreCase(c))) col(c)
-          else coalesce(when(col("__k").isNotNull, col(s"__s_$c")),
-            col(c)).as(c)).toIndexedSeq: _*)
-      val staged = stageFor(snap, merged, table)
-      val nUpd = observedLong(obs.get, "updated")(
-        readFilesDv(spark, table, snap, hit)
-          .join(srcKeys, Seq(key), "left_semi").count())
-      (staged, nUpd)
+    val srcKeys = cast.select(col(key))
+    // the file key is captured by the provenance read BEFORE the semi
+    // join — after it, the plan has two sources and a bare
+    // input_file_name would be rejected as ambiguous; a semi join
+    // ignores duplicate source keys, so none are dropped first
+    val hit = snap.files.filter(fileKeysOf(
+      readFilesDvProv(spark, table, snap, snap.files)
+        .select(col(key), col("__fk"))
+        .join(srcKeys, Seq(key), "left_semi")
+        .select(col("__fk"))))
+    val src = cast.dropDuplicates(key)
+    val touched = readFilesDv(spark, table, snap, hit)
+      .withColumn("__t", lit(true))
+    val joined = touched.join(
+      src.select(col(key).as("__k") +: srcSchema.map(_.name)
+        .filterNot(_ == key).map(c => col(c).as(s"__s_$c"))
+        .toIndexedSeq: _*),
+      touched(key) === col("__k"), "full_outer")
+    val isIns = col("__t").isNull
+    val obs = org.apache.spark.sql.Observation(
+      s"graft-mrg-${java.util.UUID.randomUUID()}")
+    val observed = joined.observe(obs,
+      sum(when(!isIns && col("__k").isNotNull, 1L).otherwise(0L))
+        .as("updated"),
+      sum(when(isIns, 1L).otherwise(0L)).as("inserted"))
+    // one expression serves all three row kinds: a side that is absent
+    // reads NULL, so coalesce(source, target) is the source row for an
+    // insert, the target row for a carried-over one and the column-wise
+    // source-wins image for a matched one
+    def merged(c: String): Column =
+      if (c == key) coalesce(col(key), col("__k")).as(key)
+      // a matched row KEEPS its identity value — the source has no say
+      // over a generated column
+      else if (idcOpt.exists(_.equalsIgnoreCase(c))) col(c)
+      else coalesce(col(s"__s_$c"), col(c)).as(c)
+    // inserted rows of an identity table draw fresh ids; the plan runs
+    // once into a barrier so the rank pass can read the inserts alone,
+    // and the new mark rides the same atomic commit as the upsert
+    val (rows, idMeta) =
+      if (idcOpt.isEmpty)
+        (observed.select(snap.schema.fieldNames.map(merged).toIndexedSeq: _*),
+          Map.empty[String, String])
+      else {
+        val once = observed.localCheckpoint()
+        val (ins, idm) = identityFor(snap, once.filter(isIns)
+          .select(srcSchema.map(f => merged(f.name)).toIndexedSeq: _*))
+        (once.filter(!isIns)
+          .select(snap.schema.fieldNames.map(merged).toIndexedSeq: _*)
+          .unionByName(ins), idm)
+      }
+    val staged = stageFor(snap, rows, table)
+    val m = obs.get
+    val updated = observedLong(m, "updated")(
+      readFilesDv(spark, table, snap, hit).join(srcKeys, Seq(key),
+        "left_semi").count())
+    val inserted = observedLong(m, "inserted")(
+      src.join(readFilesDv(spark, table, snap, hit).select(col(key)),
+        Seq(key), "left_anti").count())
+    if (updated == 0 && inserted == 0) {
+      // nothing matched and nothing to insert: the batch holds only
+      // Spark's schema-carrying empty file
+      dropStagedBatches(spark, table, staged.map(_.path))
+      return (snap.version, 0L, 0L, 0)
     }
-    // the inserted count likewise rides the insert-batch write; a
-    // no-insert merge stages only Spark's schema-carrying empty file,
-    // which is dropped again below
-    val obsIns = org.apache.spark.sql.Observation(
-      s"graft-ins-${java.util.UUID.randomUUID()}")
-    val inserts = src.join(
-      cur.select(col(key)).distinct(), Seq(key), "left_anti")
-      .observe(obsIns, sum(lit(1L)).as("inserted"))
-    // inserted rows draw fresh identity values; the new mark rides the
-    // same atomic commit as the upsert
-    val (insertRows, idMeta) = identityFor(snap, inserts)
-    val insertStaged = stageFor(snap, insertRows, table)
-    val nIns = observedLong(obsIns.get, "inserted")(
-      src.join(cur.select(col(key)).distinct(), Seq(key), "left_anti")
-        .count())
-    val inserted =
-      if (nIns > 0) insertStaged
-      else { dropStagedBatches(spark, table, insertStaged.map(_.path)); Nil }
-    if (updated == 0 && nIns == 0) return (snap.version, 0L, 0L, 0)
     val v = commitManifest(spark, table,
-      snap.edit(hit.toSet, rewritten ++ inserted)
-        .copy(meta = snap.meta ++ (if (nIns > 0) idMeta else Map.empty)),
+      snap.edit(hit.toSet, staged)
+        .copy(meta = snap.meta ++ (if (inserted > 0) idMeta else Map.empty)),
       snap.version, Some(snap))
-    (v, updated, nIns, hit.size)
+    (v, updated, inserted, hit.size)
   }
 
   /** One WHEN clause of a general MERGE (matched or not-matched-by-
@@ -3791,10 +3816,8 @@ object SnapshotTable {
           matchedAny.map(c => col("__m").isNotNull && c)
             .getOrElse(lit(false)) ||
             nmbsAny.map(c => col("__m").isNull && c).getOrElse(lit(false))
-        val hitKeys = joinedProv.filter(affected)
-          .select(col("__fk")).distinct()
-          .collect().map(r => pctDecode(r.getString(0))).toSet
-        snap.files.filter(hitKeys)
+        snap.files.filter(fileKeysOf(
+          joinedProv.filter(affected).select(col("__fk"))))
       }
 
     // ----- rewrite pass over touched files: one simultaneous select
@@ -4605,12 +4628,10 @@ object SnapshotTable {
     val dvTargets: Seq[String] =
       if (dvChangedFiles.isEmpty) Nil
       else {
-        // stored DV file_keys live in the encoded __fk space; decode
-        // before matching the raw manifest paths
-        val keys = spark.read.schema(dvFileSchema)
+        // stored DV file_keys live in the encoded __fk space
+        val keys = fileKeysOf(spark.read.schema(dvFileSchema)
           .parquet(dvChangedFiles.map(d => s"$table/$d"): _*)
-          .select(col("file_key")).distinct()
-          .collect().map(r => pctDecode(r.getString(0))).toSet
+          .select(col("file_key")))
         from.files.filter(f => toSet(f) && keys(f))
       }
     val outCols = to.schema.fieldNames
@@ -5377,20 +5398,20 @@ object SnapshotTable {
   def updateWhereVector(spark: SparkSession, table: String,
       predicate: Column, assignments: Map[String, Column]): (Long, Long) = {
     val snap = loadCurrent(spark, table)
+    requireAssignable(snap.schema, assignments)
+    requireNotIdentity(snap, assignments.keys, "UPDATE")
     val matches = coalesce(predicate, lit(false))
+    // the DV write materializes the cache; the image write re-reads it
     val matched = readFilesDvProv(spark, table, snap, snap.files)
       .filter(matches)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = matched.count()
+      val (dvFiles, n) = stageDeletionVector(spark, table, matched)
       if (n == 0) return (snap.version, 0L)
-      val (_, dvFiles) = stageDeletionVector(spark, table, matched)
       // one simultaneous select (not a withColumn fold): every
       // assignment RHS binds against the OLD row, so `SET a = b,
       // b = a` swaps — and casts to the declared column type — the
       // same SQL-UPDATE rules as [[updateWhere]]
-      requireAssignable(snap.schema, assignments)
-      requireNotIdentity(snap, assignments.keys, "UPDATE")
       val updated = matched.drop("__fk", "__rp")
         .select(snap.schema.map { f =>
           assignments.get(f.name) match {

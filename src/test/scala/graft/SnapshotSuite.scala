@@ -5545,4 +5545,144 @@ class SnapshotSuite extends AnyFunSuite {
       }
     }
   }
+
+  /** The descriptions of the Spark jobs `body` starts. Listener events
+    * arrive asynchronously but in order, so a labelled fence job before
+    * and after `body` brackets exactly its jobs.
+    */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    def fence(label: String): Unit = {
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(label)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(prev)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(label) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(label), s"listener never saw $label")
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence("graft-test: before")
+      body
+      fence("graft-test: after")
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.dropWhile(_ != "graft-test: before").drop(1)
+      .takeWhile(_ != "graft-test: after")
+  }
+
+  private def dvDirs(t: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(t, "data")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(_.getPath.getName).filter(_.startsWith("dv-")).toSeq
+  }
+
+  test("row verbs: mergeInto stages one batch, deletion vectors are " +
+      "counted without a count job, zero-match DV verbs leave nothing") {
+    val t = freshTable("jobshape")
+    val k = col("o_orderkey")
+    SnapshotTable.create(spark, t, orders, numFiles = 4)
+    def snap() = SnapshotTable.readManifest(spark, t,
+      SnapshotTable.currentVersion(spark, t))
+    // an upsert with both updated and inserted rows adds ONE batch
+    val before = snap()
+    val src = orders.filter(k % 50 === 0)
+      .withColumn("o_orderstatus", lit("M"))
+      .union(orders.filter(k % 100 === 7)
+        .withColumn("o_orderkey", k + 9000000L))
+    val (_, upd, ins, _) = SnapshotTable.mergeInto(spark, t, src,
+      "o_orderkey")
+    assert(upd > 0 && ins > 0)
+    val added = snap().files.filterNot(before.files.toSet)
+    assert(added.nonEmpty &&
+      added.map(_.split('/')(1)).distinct.size === 1 &&
+      added.forall(_.startsWith("data/b-")),
+      s"one mergeInto commit must add files from one batch: $added")
+    // the DV verbs count their rows on the vector write itself
+    val dvJobs = jobsOf {
+      assert(SnapshotTable.deleteWhereVector(spark, t, k % 17 === 0)._2 > 0)
+      assert(SnapshotTable.updateWhereVector(spark, t, k % 19 === 0,
+        Map("o_orderstatus" -> lit("V")))._2 > 0)
+    }
+    assert(dvJobs.exists(_.startsWith("graft: stage deletion vector")),
+      s"the fence must see the DV writes: $dvJobs")
+    assert(!dvJobs.contains("graft: count deletion vector"), dvJobs)
+    // a DV verb that matches nothing commits nothing and leaves no batch
+    val v = SnapshotTable.currentVersion(spark, t)
+    val dirs = dvDirs(t)
+    assert(SnapshotTable.deleteWhereVector(spark, t, k === -1L) === ((v, 0L)))
+    assert(SnapshotTable.updateWhereVector(spark, t, k === -1L,
+      Map("o_orderstatus" -> lit("W"))) === ((v, 0L)))
+    assert(SnapshotTable.currentVersion(spark, t) === v)
+    assert(dvDirs(t) === dirs, "a zero-match DV verb must leave no dv-* dir")
+  }
+
+  test("a bad UPDATE assignment throws before any job runs, staging " +
+      "nothing") {
+    val t = freshTable("badset")
+    SnapshotTable.create(spark, t, orders, numFiles = 2)
+    val v = SnapshotTable.currentVersion(spark, t)
+    val jobs = jobsOf {
+      intercept[IllegalArgumentException] {
+        SnapshotTable.updateWhereVector(spark, t,
+          col("o_orderkey") % 3 === 0, Map("nope" -> lit(1L)))
+      }
+      intercept[IllegalArgumentException] {
+        SnapshotTable.updateWhere(spark, t,
+          col("o_orderkey") % 3 === 0, Map("nope" -> lit(1L)))
+      }
+    }
+    assert(jobs.isEmpty, s"validation must precede every job: $jobs")
+    assert(dvDirs(t).isEmpty, "no orphan dv-* batch may be left")
+    assert(SnapshotTable.currentVersion(spark, t) === v)
+  }
+
+  test("ALTER COLUMN to the current type is a no-op; two specs on one " +
+      "column fail whole; a no-op beside a real widening commits once") {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    import spark.implicits._
+    val t = freshTable("widennoop")
+    SnapshotTable.create(spark, t,
+      Seq((1L, 10), (2L, 20)).toDF("k", "i"), numFiles = 1)
+    val mdir = new org.apache.hadoop.fs.Path(t, "_manifests")
+    val fsys = mdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def manifests = fsys.listStatus(mdir).map(_.getPath.getName).toSet
+    val v1 = SnapshotTable.currentVersion(spark, t)
+    val m1 = manifests
+    // same type: no new manifest, the current version comes back
+    assert(SnapshotTable.widenColumn(spark, t, "k", LongType) === v1)
+    assert(SnapshotTable.widenColumns(spark, t,
+      Seq("k" -> LongType, "i" -> IntegerType)) === v1)
+    graft.GraftExtensions.register(spark)
+    spark.sql(s"""SELECT * FROM graft_dml("ALTER TABLE `$t` ALTER COLUMN """ +
+      s"""k TYPE BIGINT")""").head()
+    assert(manifests === m1, "a same-type ALTER COLUMN must commit nothing")
+    // one column named twice fails whole, even when both are no-ops
+    Seq(Seq("i" -> LongType, "i" -> LongType),
+      Seq("k" -> LongType, "k" -> LongType)).foreach { specs =>
+      intercept[IllegalArgumentException] {
+        SnapshotTable.widenColumns(spark, t, specs)
+      }
+      assert(manifests === m1, s"$specs must commit nothing")
+    }
+    // a no-op spec plus a real widening: exactly one new version
+    assert(SnapshotTable.widenColumns(spark, t,
+      Seq("k" -> LongType, "i" -> LongType)) === v1 + 1)
+    assert(manifests.size === m1.size + 1)
+    val r = SnapshotTable.read(spark, t)
+    assert(r.schema("i").dataType === LongType &&
+      r.schema("k").dataType === LongType)
+    assert(r.orderBy("k").collect().map(x => (x.getLong(0), x.getLong(1)))
+      .toSeq === Seq((1L, 10L), (2L, 20L)))
+  }
 }
