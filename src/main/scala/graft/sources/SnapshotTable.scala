@@ -684,11 +684,11 @@ object SnapshotTable {
   }
 
   /** The raw manifest paths named by `keys`' one encoded file-key
-    * column (`__fk`, or a deletion vector's `file_key`), in ONE job with
-    * no shuffle: each task de-duplicates its own keys and the driver
-    * unions the (file-count-bounded) sets, decoding each key once with
-    * [[pctDecode]] so files in partitions whose value carries a
-    * URI-special character still match the manifest.
+    * column (`__fk`, or a deletion vector's `file_key`), in ONE job
+    * adding no shuffle: each task de-duplicates its own keys and the
+    * driver unions the (file-count-bounded) sets, decoding each key
+    * once with [[pctDecode]] so files in partitions whose value carries
+    * a URI-special character still match the manifest.
     */
   private def fileKeysOf(keys: DataFrame): Set[String] = {
     val str = org.apache.spark.sql.Encoders.STRING
@@ -3541,9 +3541,9 @@ object SnapshotTable {
     * Duplicate source keys collapse to one arbitrary row
     * (dropDuplicates); pass a pre-deduped source for determinism.
     *
-    * One file probe plus one staged write. The probe (one job, no
-    * shuffle) finds `hit`, every file holding a live row whose key some
-    * source row carries — an equi-join on the key column only, so column
+    * One file probe plus one staged write. The probe ([[fileKeysOf]])
+    * finds `hit`, every file holding a live row whose key some source
+    * row carries — an equi-join on the key column only, so column
     * pruning reaches the scan; unmatched files carry over verbatim. The
     * write is ONE plan: the hit files' live rows FULL OUTER JOIN the
     * de-duplicated source on the key, staged as one batch whose updated
@@ -3616,19 +3616,17 @@ object SnapshotTable {
     // inserted rows of an identity table draw fresh ids; the plan runs
     // once into a barrier so the rank pass can read the inserts alone,
     // and the new mark rides the same atomic commit as the upsert
-    val (rows, idMeta) =
-      if (idcOpt.isEmpty)
-        (observed.select(snap.schema.fieldNames.map(merged).toIndexedSeq: _*),
-          Map.empty[String, String])
-      else {
-        val once = observed.localCheckpoint()
-        val (ins, idm) = identityFor(snap, once.filter(isIns)
-          .select(srcSchema.map(f => merged(f.name)).toIndexedSeq: _*))
-        (once.filter(!isIns)
-          .select(snap.schema.fieldNames.map(merged).toIndexedSeq: _*)
-          .unionByName(ins), idm)
-      }
+    val all = snap.schema.fieldNames.map(merged).toIndexedSeq
+    val barrier = idcOpt.map(_ => observed.localCheckpoint())
+    val (rows, idMeta) = barrier.fold(
+      (observed.select(all: _*), Map.empty[String, String])) { once =>
+      val (ins, idm) = identityFor(snap, once.filter(isIns)
+        .select(srcSchema.map(f => merged(f.name)).toIndexedSeq: _*))
+      (once.filter(!isIns).select(all: _*).unionByName(ins), idm)
+    }
     val staged = stageFor(snap, rows, table)
+    // the staged parquet now holds the rows — release the barrier copy
+    barrier.foreach(_.unpersist(blocking = false))
     val m = obs.get
     val updated = observedLong(m, "updated")(
       readFilesDv(spark, table, snap, hit).join(srcKeys, Seq(key),
