@@ -348,4 +348,106 @@ class CorpusPipelineSuite extends AnyFunSuite {
     assert(CorpusPipeline.takedown(spark, corpus, idx,
       Seq(1L).toDF("doc_id")) == 0)
   }
+
+  /** The index's rows as a sorted multiset of `doc_id|kind|band|sh`
+    * lines (each shingle set sorted: `collect_list` fixes no order),
+    * digested so a step can pin the exact index contents.
+    */
+  private def indexDigest(idx: String): String = {
+    val lines = spark.read.parquet(s"$idx/data")
+      .select(col("doc_id"), col("kind"), col("band"), col("sh"))
+      .collect().map { r =>
+        val sh = if (r.isNullAt(3)) "" else r.getSeq[String](3).sorted.mkString(",")
+        s"${r.getLong(0)}|${r.getString(1)}|${r.getString(2)}|$sh"
+      }.sorted
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(lines.mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+  }
+
+  test("admission equivalence: reports, corpus rows and index contents per batch shape") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_adm_eq").toString
+    val (corpus, idx) = (s"$dir/corpus", s"$dir/idx")
+    val rnd = new scala.util.Random(13)
+    def words(n: Int) = Seq.fill(n)(s"v${rnd.nextInt(300)}").mkString(" ")
+    def w(p: String, n: Int) = (1 to n).map(i => s"$p$i")
+    val seedText = (1L to 12L).map(i => i -> words(40 + rnd.nextInt(20))).toMap
+    CorpusPipeline.seedCorpus(spark,
+      seedText.toSeq.map { case (i, t) => (i, "en", t) }
+        .toDF("doc_id", "lang", "text"), corpus, idx)
+    val fresh = (101L to 106L).map(i => (i, words(20 + rnd.nextInt(40))))
+    val s24 = w("s", 24)
+    val chain = Seq(
+      401L -> (w("x", 6) ++ s24).mkString(" "),
+      402L -> (s24 ++ w("y", 6)).mkString(" "),
+      403L -> (s24.drop(6) ++ w("y", 6) ++ w("z", 6)).mkString(" "))
+    val contaminated = "held out eval five gram " + words(20)
+    val bench = Seq((900L, "held out eval five gram")).toDF("doc_id", "text")
+    // (name, before the batch, batch, benchmark, expected report, corpus ids)
+    case class Step(name: String, before: () => Unit,
+        batch: Seq[(Long, String)], benchmark: Option[org.apache.spark.sql.DataFrame],
+        want: CorpusPipeline.IncrementalReport, ids: Set[Long])
+    val seedIds = (1L to 12L).toSet
+    val freshIds = fresh.map(_._1).toSet
+    var removed = -1L
+    val steps = Seq(
+      Step("fresh docs", () => (), fresh, None,
+        CorpusPipeline.IncrementalReport(6, 6, 6, 6, 18), seedIds ++ freshIds),
+      Step("exact duplicate of a corpus doc", () => (),
+        Seq(201L -> seedText(1L).replace(" ", "  "), 202L -> words(30)), None,
+        CorpusPipeline.IncrementalReport(2, 2, 1, 1, 19),
+        seedIds ++ freshIds + 202L),
+      Step("near duplicates of corpus docs", () => (),
+        Seq(301L -> (seedText(2L) + " dup"), 302L -> (seedText(3L) + " dup"),
+          303L -> words(30)), None,
+        CorpusPipeline.IncrementalReport(3, 3, 3, 1, 20),
+        seedIds ++ freshIds ++ Set(202L, 303L)),
+      Step("in-batch A~B~C chain", () => (), chain, None,
+        CorpusPipeline.IncrementalReport(3, 3, 3, 1, 21),
+        seedIds ++ freshIds ++ Set(202L, 303L, 401L)),
+      Step("sub-10-token doc", () => (),
+        Seq(501L -> words(5), 502L -> words(30)), None,
+        CorpusPipeline.IncrementalReport(2, 1, 1, 1, 22),
+        seedIds ++ freshIds ++ Set(202L, 303L, 401L, 502L)),
+      Step("replay of an admitted batch", () => (), fresh, None,
+        CorpusPipeline.IncrementalReport(6, 6, 0, 0, 22),
+        seedIds ++ freshIds ++ Set(202L, 303L, 401L, 502L)),
+      // a takedown naming a chain representative, an id twice and an id
+      // that is not in the corpus; then the erased content comes back
+      Step("batch after a takedown",
+        () => removed = CorpusPipeline.takedown(spark, corpus, idx,
+          Seq(101L, 401L, 101L, 99999L).toDF("doc_id")),
+        Seq(701L -> fresh.head._2, 702L -> chain(1)._2,
+          703L -> (seedText(4L) + " dup")), None,
+        CorpusPipeline.IncrementalReport(3, 3, 3, 2, 22),
+        seedIds ++ freshIds - 101L ++ Set(202L, 303L, 502L, 701L, 702L)),
+      Step("benchmark curation path", () => (),
+        Seq(801L -> contaminated, 802L -> words(30)), Some(bench),
+        CorpusPipeline.IncrementalReport(2, 1, 1, 1, 23),
+        seedIds ++ freshIds - 101L ++ Set(202L, 303L, 502L, 701L, 702L, 802L)))
+    // the index contents each step leaves, pinned from the admission
+    // path that sketched the batch once per consumer (probe, in-batch
+    // pairs, append): sketching the batch any other way must reproduce
+    // them
+    val wantIndex = Seq(
+      "10af670e5dc6b86152e051376dff660f", "d2e6fe311c228274d7b3b7d7075dd553",
+      "4953ef2ef875464bffd549e152bd05f2", "2dc67d5c8fecd708f790c0671450f13b",
+      "00cd3e0ff6f7b9408bb6f698ef3fab61", "00cd3e0ff6f7b9408bb6f698ef3fab61",
+      "d9dbcac91979c163439c6cc9a90c69c4", "9f82908c5c05fc5c69eb9d30ac9c15ff")
+    steps.zip(wantIndex).foreach { case (st, wantDigest) =>
+      st.before()
+      val r = CorpusPipeline.runIncremental(spark,
+        st.batch.map { case (i, t) => (i, "en", t) }.toDF("doc_id", "lang", "text"),
+        corpus, idx, benchmark = st.benchmark)
+      assert(r == st.want, s"${st.name}: report")
+      val got = spark.read.parquet(corpus).select("doc_id").collect()
+        .map(_.getLong(0))
+      assert(got.length == got.toSet.size && got.toSet == st.ids,
+        s"${st.name}: corpus ids ${got.sorted.mkString(",")}")
+      assert(indexDigest(idx) == wantDigest, s"${st.name}: index contents")
+    }
+    assert(removed == 2, s"takedown removes only rows it finds, got $removed")
+    assert(CorpusPipeline.reconcile(spark, corpus, idx) == 0)
+  }
 }
