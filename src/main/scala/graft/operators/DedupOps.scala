@@ -220,21 +220,6 @@ object DedupOps {
       .select(col("d_small"), col("d_big"), col("containment"))
   }
 
-  /** MinHash-LSH near-dup pairs over a `shingleRows` frame — the 100 TB
-    * sketch tier, exposed as a pair SOURCE so cluster resolution
-    * (connected components) and the corpus pipeline can compose over it
-    * interchangeably with the exact tier.
-    *
-    * 32 minhashes (ONE portable md5-derived hash per shingle + 32
-    * codegen'd affine permutations `a_i*h + b_i`, a_i odd — see
-    * AffineHashExpr and [[portableHash64]]; 32x less hashing than
-    * independent string hashes), 16 bands x 2 rows; band
-    * collisions become candidate pairs via an equi-join on the band key
-    * (each doc shuffles a constant 16 rows — never all-pairs), then exact
-    * Jaccard verifies >= threshold, so every EMITTED pair is a true
-    * near-dup pair: precision 1.0, recall asserted >= 80% vs the exact
-    * tier in DedupSimilaritySuite.
-    */
   /** The fixed-seed affine permutations shared by the band computation
     * AND the DuckDB oracle builder (the oracle interpolates the same
     * constants, so both engines derive identical band keys).
@@ -257,53 +242,55 @@ object DedupOps {
       .bitwiseOR(conv(substring(m, 9, 8), 16, 10).cast("long"))
   }
 
-  /** LSH band keys for a `shingleRows` frame: (doc_id, band), 16 bands
-    * of 2 minhash rows each, band key = index:sig:sig. Deterministic
-    * (fixed-seed affine permutations over one portable md5-derived hash
-    * per shingle), so bands computed in DIFFERENT runs — or persisted by
-    * MinHashIndex and probed later — collide identically, and the DuckDB
-    * oracle reproduces them bit-exactly. Each doc emits exactly 16 rows.
+  /** Verified near-dup pairs between two sketches in the row form of
+    * [[MinHashIndex.sketchOf]]: band collisions become candidate
+    * (d1 from `a`, d2 from `b`) pairs, `keep` filters them, and exact
+    * Jaccard over the set rows keeps those >= `threshold`. The one
+    * candidate-plus-verification definition behind [[sketchPairs]],
+    * [[minhashLshPairs]] and the index probe.
     */
-  private[operators] def bandRows(shRows: DataFrame): DataFrame = {
-    import graft.functions.AffineHash.affine_hash
-    val nHashes = 32
-    val ex = shRows.select(col("doc_id"), portableHash64(col("g")).as("h"))
-    val minhashes = minhashPerms.zipWithIndex.map { case ((a, b), i) =>
-      min(affine_hash(col("h"), a, b)).as(s"h$i")
-    }
-    ex.groupBy(col("doc_id"))
-      .agg(minhashes.head, minhashes.tail: _*)
-      .select(col("doc_id"),
-        array((0 until nHashes).map(i => col(s"h$i")): _*).as("sig"))
-      .select(col("doc_id"),
-        explode(expr("transform(sequence(0, 15), b -> " +
-          "concat(b, ':', sig[2*b], ':', sig[2*b+1]))")).as("band"))
-  }
-
-  /** Distinct-shingle sets per doc (doc_id, sh) for exact verification. */
-  private[operators] def shingleSets(shRows: DataFrame): DataFrame =
-    shRows.groupBy(col("doc_id")).agg(collect_list(col("g")).as("sh"))
-
-  def minhashLshPairs(shRows0: DataFrame, threshold: Double): DataFrame = {
-    // one shingle frame feeds BOTH the signature pass and the
-    // exact-verification sets — the construction pipeline is the
-    // expensive stage and Spark has no common-subplan reuse. Lazy
-    // persist, not localCheckpoint — see ngramJaccardPairs.
-    val shRows = shRows0.select(col("doc_id"), col("sz"), col("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bands = bandRows(shRows)
-    val cand = bands.alias("x").join(bands.alias("y"), Seq("band"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-      .distinct()
-    val sets = shingleSets(shRows)
-    val withSets = cand
-      .join(sets.select(col("doc_id").as("d1"), col("sh").as("a_sh")), Seq("d1"))
-      .join(sets.select(col("doc_id").as("d2"), col("sh").as("b_sh")), Seq("d2"))
-    withSets.withColumn("jaccard", pairJaccard)
+  private[operators] def verifiedPairs(a: DataFrame, b: DataFrame,
+      keep: Column, threshold: Double): DataFrame = {
+    def bands(s: DataFrame, d: String) = s.filter(col("kind") === "b")
+      .select(col("band"), col("doc_id").as(d))
+    def sets(s: DataFrame, d: String, sh: String) = s
+      .filter(col("kind") === "s").select(col("doc_id").as(d), col("sh").as(sh))
+    bands(a, "d1").join(bands(b, "d2"), Seq("band"))
+      .filter(keep).select(col("d1"), col("d2")).distinct()
+      .join(sets(a, "d1", "a_sh"), Seq("d1"))
+      .join(sets(b, "d2", "b_sh"), Seq("d2"))
+      .withColumn("jaccard", pairJaccard)
       .filter(col("jaccard") >= threshold)
       .select(col("d1"), col("d2"), col("jaccard"))
   }
+
+  /** Verified near-dup pairs (d1 < d2) within one sketch (the row form
+    * of [[MinHashIndex.sketchOf]]) — for a caller that has sketched a
+    * batch once and also probes or appends it.
+    */
+  def sketchPairs(sketch: DataFrame, threshold: Double): DataFrame =
+    verifiedPairs(sketch, sketch, col("d1") < col("d2"), threshold)
+
+  /** MinHash-LSH near-dup pairs over a `shingleRows` frame — the 100 TB
+    * sketch tier, exposed as a pair SOURCE so cluster resolution
+    * (connected components) and the corpus pipeline can compose over it
+    * interchangeably with the exact tier.
+    *
+    * 32 minhashes (ONE portable md5-derived hash per shingle + 32
+    * codegen'd affine permutations `a_i*h + b_i`, a_i odd — see
+    * AffineHashExpr and [[portableHash64]]; 32x less hashing than
+    * independent string hashes), 16 bands x 2 rows; band
+    * collisions become candidate pairs via an equi-join on the band key
+    * (each doc shuffles a constant 16 rows — never all-pairs), then exact
+    * Jaccard verifies >= threshold, so every EMITTED pair is a true
+    * near-dup pair: precision 1.0, recall asserted >= 80% vs the exact
+    * tier in DedupSimilaritySuite.
+    */
+  def minhashLshPairs(shRows: DataFrame, threshold: Double): DataFrame =
+    // the sketch feeds the band self-join AND both verification sides.
+    // Lazy persist, not localCheckpoint — see ngramJaccardPairs.
+    sketchPairs(MinHashIndex.sketchOf(shRows)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), threshold)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Asymmetric containment tier (threshold 0.8): sub-document

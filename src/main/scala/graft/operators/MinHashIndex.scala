@@ -35,10 +35,16 @@ import org.apache.spark.sql.functions._
   * scans key bucket ids off file names). The index still assumes a
   * single writer AT A TIME for appends.
   *
+  * The row form `(doc_id, band, sh, kind)` is [[sketchOf]]: a caller
+  * that sketches a batch once can probe ([[probeSketch]]), pair it
+  * within itself (`DedupOps.sketchPairs`) and append it
+  * ([[appendSketch]]) without re-sketching; [[fit]], [[append]] and
+  * [[probe]] are the same verbs over a `shingleRows` frame.
+  *
   * A probe is one equi-join on the band key followed by exact Jaccard
   * verification of the (few) collisions, so emitted pairs have precision
   * 1.0 and the corpus text is never re-shingled. Band keys are
-  * deterministic (fixed-seed permutations, `DedupOps.bandRows`), which
+  * deterministic (fixed-seed permutations, see [[sketchOf]]), which
   * is what makes cross-run probing sound.
   *
   * Generalizes the reference's ingest-skip invariant (main.py:90,
@@ -105,9 +111,38 @@ object MinHashIndex {
     else s.read.parquet(path + "/data")
   }
 
+  /** The index row form of a `shingleRows` frame: per doc, 16 LSH band
+    * rows (`kind = b`, `sh` null) and one set row (`kind = s`, the
+    * distinct shingles in `sh`; `band` is `s:<doc_id>`, a spread key
+    * that only balances the band buckets and that probes never read).
+    *
+    * Band key = `index:sig:sig` over the 32 fixed-seed minhashes of
+    * `DedupOps.minhashLshPairs`, so bands computed in different runs
+    * collide identically and the DuckDB oracle reproduces them
+    * bit-exactly. One aggregation per doc yields both the minhashes and
+    * the set: a batch is sketched in one shuffle.
+    */
+  def sketchOf(shRows: DataFrame): DataFrame = {
+    import graft.functions.AffineHash.affine_hash
+    val mins = DedupOps.minhashPerms.map { case (a, b) =>
+      min(affine_hash(col("h"), a, b)) }
+    shRows.select(col("doc_id"), col("g"),
+        DedupOps.portableHash64(col("g")).as("h"))
+      .groupBy(col("doc_id"))
+      .agg(array(mins: _*).as("sig"), collect_list(col("g")).as("sh"))
+      .select(col("doc_id"), explode(concat(
+        expr("transform(sequence(0, 15), b -> named_struct(" +
+          "'band', concat(b, ':', sig[2*b], ':', sig[2*b+1]), " +
+          "'sh', CAST(NULL AS ARRAY<STRING>), 'kind', 'b'))"),
+        array(struct(concat(lit("s:"), col("doc_id")).as("band"),
+          col("sh").as("sh"), lit("s").as("kind"))))).as("r"))
+      .select(col("doc_id"), col("r.band").as("band"), col("r.sh").as("sh"),
+        col("r.kind").as("kind"))
+  }
+
   /** Sketch `shRows` (a `DedupOps.shingleRows` frame) into `path`. */
   def fit(shRows0: DataFrame, path: String): Unit =
-    write(shRows0, path, "overwrite")
+    write(sketchOf(shRows0), path, "overwrite")
 
   // ---- deletion / takedown (tombstones + compaction) -------------------
   //
@@ -241,20 +276,14 @@ object MinHashIndex {
     * are new; the index itself never dedups.
     */
   def append(shRows0: DataFrame, path: String): Unit =
-    write(shRows0, path, "append")
+    appendSketch(sketchOf(shRows0), path)
 
-  private def write(shRows0: DataFrame, path: String, mode: String): Unit = {
-    val shRows = shRows0.select(col("doc_id"), col("sz"), col("g"))
-      .localCheckpoint()  // bands and sets both read it
-    val bands = DedupOps.bandRows(shRows).select(
-      col("doc_id"), col("band"),
-      lit(null).cast("array<string>").as("sh"), lit("b").as("kind"))
-    // `band` on set rows is a spread key (never read) so the band
-    // bucketing distributes the big shingle arrays across bucket files.
-    val sets = DedupOps.shingleSets(shRows).select(
-      col("doc_id"), concat(lit("s:"), col("doc_id")).as("band"),
-      col("sh"), lit("s").as("kind"))
-    val all = bands.unionByName(sets)
+  /** [[append]] for docs already in the row form of [[sketchOf]]. */
+  def appendSketch(sketch: DataFrame, path: String): Unit =
+    write(sketch, path, "append")
+
+  private def write(sketch: DataFrame, path: String, mode: String): Unit = {
+    val all = sketch.select(col("doc_id"), col("band"), col("sh"), col("kind"))
     val spark = all.sparkSession
     val tbl = tableName(path)
     val dataPath = new org.apache.hadoop.fs.Path(path + "/data")
@@ -306,27 +335,16 @@ object MinHashIndex {
     * precision is 1.0 (every candidate is exactly verified).
     */
   def probe(s: SparkSession, path: String, shRows0: DataFrame,
-      threshold: Double): DataFrame = {
-    val shRows = shRows0.select(col("doc_id"), col("sz"), col("g"))
-      .localCheckpoint()  // band pass + verification sets
+      threshold: Double): DataFrame =
+    // materialized: the band join and the verification sets both read it
+    probeSketch(s, path, sketchOf(shRows0).localCheckpoint(), threshold)
+
+  /** [[probe]] for a batch already in the row form of [[sketchOf]]. */
+  def probeSketch(s: SparkSession, path: String, sketch: DataFrame,
+      threshold: Double): DataFrame =
     // tombstoned docs stop matching immediately (pre-compaction); the
     // tombstone side is takedown-sized so the anti-join broadcasts and
     // the corpus side keeps its shuffle-free bucketed path
-    val idx = minusTombstones(s, path, indexFrame(s, path))
-    val incBands = DedupOps.bandRows(shRows)
-      .select(col("band"), col("doc_id").as("d2"))
-    val idxBands = idx.filter(col("kind") === "b")
-      .select(col("band"), col("doc_id").as("d1"))
-    val cand = idxBands.join(incBands, Seq("band"))
-      .filter(col("d1") =!= col("d2"))
-      .select(col("d1"), col("d2")).distinct()
-    val idxSets = idx.filter(col("kind") === "s")
-      .select(col("doc_id").as("d1"), col("sh").as("a_sh"))
-    val incSets = DedupOps.shingleSets(shRows)
-      .select(col("doc_id").as("d2"), col("sh").as("b_sh"))
-    cand.join(idxSets, Seq("d1")).join(incSets, Seq("d2"))
-      .withColumn("jaccard", DedupOps.pairJaccard)
-      .filter(col("jaccard") >= threshold)
-      .select(col("d1"), col("d2"), col("jaccard"))
-  }
+    DedupOps.verifiedPairs(minusTombstones(s, path, indexFrame(s, path)),
+      sketch, col("d1") =!= col("d2"), threshold)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Det, Tables}
+import graft.{Det, Observed, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -59,26 +59,35 @@ object PipelineOps {
     */
   def connectedComponentsWithRounds(pairs: DataFrame, maxIter: Int = 20,
       localFinishEdges: Long = 100000L): (DataFrame, Int) = {
+    // cheap fixed-point detector: (count, xor of row hashes) per edge set
+    // (xor, not sum: ANSI mode would throw on the intended wrap-around),
+    // observed on the localCheckpoint that materializes each edge set,
+    // so it costs no job of its own (a recount when AQE loses the
+    // metric, see Observed). Equal checksums are CONFIRMED with the
+    // deterministic exceptAll (paid once, on the final round), so a
+    // 2^-64 hash collision can delay convergence detection but never
+    // mis-report it.
+    def checkpointWithSum(e: DataFrame): (DataFrame, (Long, Long)) = {
+      val obs = org.apache.spark.sql.Observation()
+      val sumOf = Seq(count(lit(1)).as("n"), expr("bit_xor(xxhash64(u, v))").as("x"))
+      val cp = e.observe(obs, sumOf.head, sumOf.tail: _*).localCheckpoint()
+      val m = obs.get
+      (cp, if (m.contains("n"))
+        (Observed.observedLong(m, "n")(0L), Observed.observedLong(m, "x")(0L))
+      else {
+        val r = cp.agg(sumOf.head, sumOf.tail: _*).head()
+        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+      })
+    }
     // canonical large→small orientation, self-loops dropped. The
     // (potentially expensive) pair-producing plan is read exactly ONCE —
     // greatest/least run in the same projection pass — and the distinct's
     // localCheckpoint materializes the result for the iteration, so no
     // separate checkpoint of the input is needed.
-    var edges = pairs.select(greatest(col("d1"), col("d2")).as("u"),
+    var (edges, edgeSum) = checkpointWithSum(pairs
+      .select(greatest(col("d1"), col("d2")).as("u"),
         least(col("d1"), col("d2")).as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint()
-    // cheap fixed-point detector: (count, xor of row hashes) per edge set
-    // — one partial-agg job per round instead of an exceptAll join (xor,
-    // not sum: ANSI mode would throw on the intended wrap-around). Equal
-    // checksums are CONFIRMED with the deterministic exceptAll (paid
-    // once, on the final round), so a 2^-64 hash collision can delay
-    // convergence detection but never mis-report it.
-    def checksum(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(u, v))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    var edgeSum = checksum(edges)
+      .filter(col("u") =!= col("v")).distinct())
     // small-graph fast path: once the (distinct, canonical) edge set fits
     // comfortably in driver memory, a local union-find beats ~4 Spark
     // jobs per star round on pure scheduling overhead. This is the
@@ -135,14 +144,14 @@ object PipelineOps {
       // every smaller neighbor v != m to m. All emitted edges stay
       // large→small (v > m by minimality).
       val sMin = afterLarge.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val next = afterLarge.join(sMin, Seq("u"))
+      // fixed point: the oriented distinct edge sets are equal — checked
+      // by checksum first, confirmed exactly only when checksums match
+      val (next, nextSum) = checkpointWithSum(afterLarge
+        .join(sMin, Seq("u"))
         .filter(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
         .union(sMin.select(col("u"), col("m").as("v")))
-        .distinct().localCheckpoint()
-      // fixed point: the oriented distinct edge sets are equal — checked
-      // by checksum first, confirmed exactly only when checksums match
-      val nextSum = checksum(next)
+        .distinct())
       it += 1
       // geometric contraction usually brings a huge graph under the
       // local bound within a few rounds — take the endgame as soon as

@@ -2,7 +2,8 @@ package graft.pipeline
 
 import graft.Tables
 import graft.operators.{DedupOps, MinHashIndex, PipelineOps, TrainingOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Observed.observedLong
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -267,20 +268,27 @@ object CorpusPipeline {
     * id would defeat the probe's self-pair filter and conflate distinct
     * documents in every downstream join.
     *
-    * The publish step is three ordered appends (victims sidecar, then
-    * corpus, then index); a crash between any two leaves a window that
+    * The publish step is up to three ordered appends: the victims
+    * sidecar (only when the batch has cluster victims), then the corpus,
+    * then the index; a crash between any two leaves a window that
     * [[reconcile]] detects and repairs — run it on restart before
     * replaying batches. SINGLE WRITER: batches must be admitted one at
     * a time (the shape [[streamIncremental]]'s serialized micro-batches
     * give for free) — two concurrent admissions could each pass the
     * other's probe before either publishes, admitting mutual near-dups.
+    *
+    * The batch is sketched ONCE ([[MinHashIndex.sketchOf]]): that one
+    * sketch is probed against the index, paired within the batch and
+    * appended to the index. The report's counts ride the checkpoints
+    * and the corpus append that run anyway (recounted only when a
+    * metric is lost, see [[graft.Observed]]).
     */
   def runIncremental(spark: SparkSession, batch: DataFrame,
       corpusDir: String, indexPath: String, minTokens: Int = 10,
       threshold: Double = 0.5,
       benchmark: Option[DataFrame] = None,
       maxRepetition: Option[Double] = None): IncrementalReport = {
-    val nBatch = batch.count()
+    val (batchIn, inObs) = counted(batch)
     // materialized: the exact tier and the afterQuality count both read
     // it — unmaterialized, each extra action would re-scan and
     // re-normalize the batch source (per micro-batch, in the streaming
@@ -292,11 +300,12 @@ object CorpusPipeline {
     // anti-join) would otherwise re-scan the batch source twice — and
     // curate's last enabled gate checkpoints the final frame.
     val gated = {
-      val g = gate(batch, minTokens)
+      val g = gate(batchIn, minTokens)
       if (benchmark.nonEmpty || maxRepetition.nonEmpty)
         curate(g.localCheckpoint(), benchmark, maxRepetition, None)
       else g.localCheckpoint()
     }
+    val nBatch = countOf(inObs)(batch.count())
 
     // exact tier: dedup within the batch, then against the corpus's
     // persisted digests (a 16-byte column scan, pruned to one column).
@@ -306,90 +315,92 @@ object CorpusPipeline {
     // Mixed corpora (legacy files + digest-bearing appends) read the
     // legacy rows' content_hash as NULL — and NULL never equi-joins, so
     // trusting the column blindly would silently re-admit exact dups of
-    // every legacy doc. The null probe is footer-stats cheap; only a
-    // fully-digested corpus takes the 16-byte-column fast path.
+    // every legacy doc. One aggregate gives the corpus size and the
+    // null-digest count; only a fully-digested corpus takes the
+    // 16-byte-column fast path.
     val corpusRaw = spark.read.parquet(corpusDir)
-    val hasDigests = corpusRaw.columns.contains("content_hash") &&
-      corpusRaw.filter(col("content_hash").isNull).isEmpty
+    val digestCol = corpusRaw.columns.contains("content_hash")
+    val corpusStats = corpusRaw.agg(count(lit(1)),
+      if (digestCol) count_if(col("content_hash").isNull) else lit(1L)).head()
+    val corpusSizeBefore = corpusStats.getLong(0)
+    val hasDigests = digestCol && corpusStats.getLong(1) == 0L
     val corpusHashes = (if (hasDigests) corpusRaw.select(col("content_hash"))
       else corpusRaw.select(md5(col("text")).as("content_hash")))
       .distinct()
-    val corpusSizeBefore = corpusRaw.count()
-    val exactSafe = exactDedupWithHash(gated)
-      .join(corpusHashes, Seq("content_hash"), "left_anti")
-      .localCheckpoint()
-    val afterExact = exactSafe.count()
-    val afterQuality = gated.count()
+    val (gatedIn, qualityObs) = counted(gated)
+    val (exactOut, exactObs) = counted(exactDedupWithHash(gatedIn)
+      .join(corpusHashes, Seq("content_hash"), "left_anti"))
+    val exactSafe = exactOut.localCheckpoint()
+    val afterQuality = countOf(qualityObs)(gated.count())
+    val afterExact = countOf(exactObs)(exactSafe.count())
 
-    // near-dup vs corpus: one probe of the persisted band index
-    val sh = DedupOps.shingleRowsOf(
-      exactSafe.select(col("doc_id"), col("text"))).localCheckpoint()
-    val corpusVictims = MinHashIndex.probe(spark, indexPath, sh, threshold)
+    // near-dup vs corpus: one probe of the persisted band index with the
+    // batch's sketch, which the in-batch pairs and the append reuse
+    val sketch = MinHashIndex.sketchOf(DedupOps.shingleRowsOf(
+      exactSafe.select(col("doc_id"), col("text")))).localCheckpoint()
+    val corpusVictims = MinHashIndex.probeSketch(spark, indexPath, sketch,
+        threshold)
       .select(col("d2").as("doc_id")).distinct()
     val corpusSafe = exactSafe.join(corpusVictims, Seq("doc_id"), "left_anti")
       .localCheckpoint()  // consumed by the pair join AND the admit anti-join
+    val safeSketch = sketch.join(corpusSafe.select(col("doc_id")),
+      Seq("doc_id"), "left_semi")
 
     // near-dup within the surviving batch: LSH pairs -> CC -> keep min.
     // Victims keep their cluster label: the representative's doc_id is
     // what makes a torn publish recoverable (see the sidecar below).
-    val shSafe = sh.join(corpusSafe.select(col("doc_id")), Seq("doc_id"))
-    val batchVictims = PipelineOps.connectedComponents(
-        DedupOps.minhashLshPairs(shSafe, threshold)
+    val (victimsOut, victimsObs) = counted(PipelineOps.connectedComponents(
+        DedupOps.sketchPairs(safeSketch, threshold)
           .select(col("d1"), col("d2")))
       .filter(col("node") =!= col("cluster"))
-      .select(col("node").as("doc_id"), col("cluster").as("rep_id"))
-      .localCheckpoint()
-    val admitted = corpusSafe
+      .select(col("node").as("doc_id"), col("cluster").as("rep_id")))
+    val batchVictims = victimsOut.localCheckpoint()
+    val nVictims = countOf(victimsObs)(batchVictims.count())
+    val admittedRows = corpusSafe
       .join(batchVictims.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    val nAdmitted = admitted.count()
+    val (admitted, admittedObs) = counted(admittedRows)
 
     // publish, in recovery order (each step makes the next repairable by
     // [[reconcile]]):
     //   1. victims sidecar (doc_id, text, rep_id) — the cluster victims'
-    //      text, keyed by their admitted representative. Without it a
+    //      text, keyed by their admitted representative; appended only
+    //      when the batch HAS victims. Without it a
     //      crash before the index append would lose the victims'
     //      sketches forever (their text lives nowhere else), and a
     //      replayed chain A~B~C with A~C below threshold would re-admit
     //      C. reconcile purges sidecar rows whose rep never landed
     //      (crash before step 2) and re-sketches the rest (crash before
     //      step 3).
-    //   2. corpus rows for admitted docs.
+    //   2. corpus rows for admitted docs (their count rides the write).
     //   3. index sketches for every corpus-safe doc (representatives AND
     //      victims — replay idempotence under the transitive cluster
     //      policy needs the victims' sketches too).
-    corpusSafe.join(batchVictims, Seq("doc_id"))
-      .select(col("doc_id"), col("text"), col("rep_id"))
-      .write.mode("append").parquet(victimsDir(corpusDir))
+    if (nVictims > 0)
+      corpusSafe.join(batchVictims, Seq("doc_id"))
+        .select(col("doc_id"), col("text"), col("rep_id"))
+        .write.mode("append").parquet(victimsDir(corpusDir))
     admitted.write.mode("append").parquet(corpusDir)
-    MinHashIndex.append(
-      sh.join(corpusSafe.select(col("doc_id")), Seq("doc_id")), indexPath)
+    val nAdmitted = countOf(admittedObs)(admittedRows.count())
+    MinHashIndex.appendSketch(safeSketch, indexPath)
     IncrementalReport(nBatch, afterQuality, afterExact, nAdmitted,
       corpusSizeBefore + nAdmitted)
   }
+
+  /** `df` with its row count riding whatever job executes it. */
+  private def counted(df: DataFrame): (DataFrame, Observation) = {
+    val o = Observation()
+    (df.observe(o, count(lit(1)).as("n")), o)
+  }
+
+  /** The count [[counted]] observed, or `recount` when it was lost. */
+  private def countOf(o: Observation)(recount: => Long): Long =
+    observedLong(o.get, "n")(recount)
 
   /** Sidecar of within-batch cluster victims (doc_id, text, rep_id),
     * sibling to the corpus directory; owned by this object.
     */
   private def victimsDir(corpusDir: String): String =
     corpusDir.stripSuffix("/") + "_victims"
-
-  private def readVictims(spark: SparkSession, corpusDir: String): DataFrame = {
-    val path = victimsDir(corpusDir)
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(hPath))
-      spark.read.parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("rep_id",
-          org.apache.spark.sql.types.LongType))))
-  }
 
   /** Continuous corpus admission: stream document-batch files landing
     * under `sourceDir` through [[runIncremental]] with a foreachBatch
@@ -477,12 +488,14 @@ object CorpusPipeline {
     //    so a replayed takedown just re-appends ignored tombstones
     MinHashIndex.delete(spark, indexPath, extIds)
     // 2. corpus rewrite minus the ids (stage-then-swap, the same
-    //    discipline as reconcile's sidecar GC)
-    val corpus = spark.read.parquet(corpusDir)
-    val nBefore = corpus.count()
-    swapRewrite(spark, corpusDir,
-      corpus.join(ids, Seq("doc_id"), "left_anti"))
-    val removed = nBefore - spark.read.parquet(corpusDir).count()
+    //    discipline as reconcile's sidecar GC); the rows before and
+    //    after are counted on the rewrite itself
+    val (corpus, before) = counted(spark.read.parquet(corpusDir))
+    val (keep, after) = counted(corpus.join(ids, Seq("doc_id"), "left_anti"))
+    val removed = swapRewrite(spark, corpusDir, keep) {
+      countOf(before)(spark.read.parquet(corpusDir).count()) -
+        countOf(after)(spark.read.parquet(corpusDir + ".tmp").count())
+    }
     // 3. victims sidecar: purge every erased row — takedown ids that
     //    live there as victims AND victims of removed representatives
     //    (both are in extIds by construction)
@@ -490,7 +503,7 @@ object CorpusPipeline {
       val victims = spark.read.parquet(vDir)
       swapRewrite(spark, vDir, victims
         .join(extIds, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("text"), col("rep_id")))
+        .select(col("doc_id"), col("text"), col("rep_id")))(())
     }
     // 4. fold the tombstones into the index files (prunable work for the
     //    IVF layout; one amortizable rewrite for the band index)
@@ -499,21 +512,24 @@ object CorpusPipeline {
   }
 
   /** Stage-then-swap rewrite of a parquet directory: write `keep` to a
-    * sibling .tmp, then delete + rename. The delete/rename instant is
+    * sibling .tmp, evaluate `staged` (both copies still exist), then
+    * delete + rename and return its value. The delete/rename instant is
     * the one non-atomic window; the durable .tmp makes the loss
     * recoverable by hand, matching reconcile's sidecar GC contract.
     */
-  private def swapRewrite(spark: SparkSession, dir: String,
-      keep: DataFrame): Unit = {
+  private def swapRewrite[A](spark: SparkSession, dir: String,
+      keep: DataFrame)(staged: => A): A = {
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     keep.write.mode("overwrite").parquet(dir + ".tmp")
+    val result = staged
     if (!fs.delete(dirPath, true))
       throw new java.io.IOException(s"takedown: delete($dir) failed")
     if (!fs.rename(new org.apache.hadoop.fs.Path(dir + ".tmp"), dirPath))
       throw new java.io.IOException(
         s"takedown: rename($dir.tmp -> $dir) failed — " +
           "restore the .tmp directory and re-run")
+    result
   }
 
   /** Detect and repair the publish windows [[runIncremental]] documents:
@@ -542,19 +558,28 @@ object CorpusPipeline {
       indexPath: String): Long = {
     val corpus = spark.read.parquet(corpusDir)
     val corpusReps = corpus.select(col("doc_id").as("rep_id"))
-    val victims = readVictims(spark, corpusDir).localCheckpoint()
-    val nOrphans = victims.join(corpusReps, Seq("rep_id"), "left_anti").count()
-    val validVictims = victims.join(corpusReps, Seq("rep_id"), "left_semi")
+    val dir = victimsDir(corpusDir)
+    val dirPath = new org.apache.hadoop.fs.Path(dir)
+    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // no sidecar (no batch since the last GC had cluster victims): no
+    // orphans to count, nothing to collect
+    val victims =
+      if (fs.exists(dirPath)) Some(spark.read.parquet(dir).localCheckpoint())
+      else None
+    val nOrphans =
+      victims.fold(0L)(_.join(corpusReps, Seq("rep_id"), "left_anti").count())
+    val validVictims = victims.map(_.join(corpusReps, Seq("rep_id"), "left_semi"))
     // docs under 3 tokens produce no trigram shingles and CAN never be
     // indexed — excluding them keeps "returns 0" ⇔ "consistent" (they
     // are equally invisible to every probe, so nothing is lost)
-    val missing = corpus.select(col("doc_id"), col("text"))
-      .union(validVictims.select(col("doc_id"), col("text")))
+    val (missingRows, missingObs) = counted(validVictims
+      .foldLeft(corpus.select(col("doc_id"), col("text")))(
+        (docs, v) => docs.union(v.select(col("doc_id"), col("text"))))
       .filter(size(split(col("text"), " ")) >= 3)
       .join(MinHashIndex.indexedIds(spark, indexPath),
-        Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    val n = missing.count()
+        Seq("doc_id"), "left_anti"))
+    val missing = missingRows.localCheckpoint()
+    val n = countOf(missingObs)(missing.count())
     if (n > 0)
       MinHashIndex.append(
         DedupOps.shingleRowsOf(missing.select(col("doc_id"), col("text"))),
@@ -565,29 +590,28 @@ object CorpusPipeline {
     // text would grow the sidecar without bound across batches). The
     // sidecar thus shrinks back to only victims of publishes still in
     // flight — normally empty.
-    val keep = validVictims
-      .join(MinHashIndex.indexedIds(spark, indexPath),
-        Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("text"), col("rep_id"))
-      .localCheckpoint()
-    if (keep.count() < victims.count()) {
-      val dir = victimsDir(corpusDir)
-      val dirPath = new org.apache.hadoop.fs.Path(dir)
-      val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // HDFS-style FileSystems report failure by RETURNING false, not
-      // throwing — a swallowed false would report rows as purged while
-      // they linger (or silently drop the sidecar on a failed rename)
-      if (keep.isEmpty) {
-        if (fs.exists(dirPath) && !fs.delete(dirPath, true))
-          throw new java.io.IOException(s"sidecar GC: delete($dir) failed")
-      } else {
-        keep.write.mode("overwrite").parquet(dir + ".tmp")
-        if (!fs.delete(dirPath, true))
-          throw new java.io.IOException(s"sidecar GC: delete($dir) failed")
-        if (!fs.rename(new org.apache.hadoop.fs.Path(dir + ".tmp"), dirPath))
-          throw new java.io.IOException(
-            s"sidecar GC: rename($dir.tmp -> $dir) failed — " +
-              "re-run reconcile after restoring the .tmp directory")
+    for (all <- victims; valid <- validVictims) {
+      val keep = valid
+        .join(MinHashIndex.indexedIds(spark, indexPath),
+          Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), col("text"), col("rep_id"))
+        .localCheckpoint()
+      if (keep.count() < all.count()) {
+        // HDFS-style FileSystems report failure by RETURNING false, not
+        // throwing — a swallowed false would report rows as purged while
+        // they linger (or silently drop the sidecar on a failed rename)
+        if (keep.isEmpty) {
+          if (fs.exists(dirPath) && !fs.delete(dirPath, true))
+            throw new java.io.IOException(s"sidecar GC: delete($dir) failed")
+        } else {
+          keep.write.mode("overwrite").parquet(dir + ".tmp")
+          if (!fs.delete(dirPath, true))
+            throw new java.io.IOException(s"sidecar GC: delete($dir) failed")
+          if (!fs.rename(new org.apache.hadoop.fs.Path(dir + ".tmp"), dirPath))
+            throw new java.io.IOException(
+              s"sidecar GC: rename($dir.tmp -> $dir) failed — " +
+                "re-run reconcile after restoring the .tmp directory")
+        }
       }
     }
     n + nOrphans

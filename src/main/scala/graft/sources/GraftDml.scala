@@ -483,7 +483,7 @@ object GraftDml {
           SnapshotTable.replaceContents(spark, path, observed)
         else SnapshotTable.append(spark, path, observed)
       (if (i.overwrite) "insert_overwrite" else "insert",
-        v, SnapshotTable.observedLong(obs.get, "inserted")(
+        v, graft.Observed.observedLong(obs.get, "inserted")(
           aligned.count()), -1L)
 
     case ct: CreateTableAsSelect =>
@@ -511,7 +511,7 @@ object GraftDml {
             observed, ts.map(transformSpecText))
         }
         ("create", v,
-          SnapshotTable.observedLong(obs.get, "created")(df.count()), -1L)
+          graft.Observed.observedLong(obs.get, "created")(df.count()), -1L)
       }
 
     case DropTable(ident, ifExists, _) =>

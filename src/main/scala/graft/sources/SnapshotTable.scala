@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Observed.observedLong
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1071,24 +1072,6 @@ object SnapshotTable {
     }
     i >= x.length // x exhausted first (or equal) => x <= y
   }
-
-  /** An observed long metric, null-safe (a sum over zero rows is null)
-    * — with a FALLBACK job for the case where the metric was LOST:
-    * AQE's runtime empty-relation propagation replaces a subtree whose
-    * shuffle output turned out empty (e.g. a delete that leaves no
-    * survivors) and the final adaptive plan then no longer contains the
-    * CollectMetrics node, so the observation resolves to an EMPTY map
-    * even though the scan ran (reproduced on 4.1.2). The fast path
-    * stays job-free; the rare lost path recomputes.
-    */
-  private[sources] def observedLong(metrics: Map[String, Any], name: String)(
-      fallback: => Long): Long =
-    metrics.get(name) match {
-      case Some(null) => 0L
-      case Some(n: java.lang.Long) => n.longValue
-      case Some(other) => other.toString.toLong
-      case None => fallback
-    }
 
   private def declaredStatsCols(snap: Snapshot): Seq[String] =
     snap.meta.get("statsCols").toSeq

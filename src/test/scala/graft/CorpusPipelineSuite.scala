@@ -450,4 +450,34 @@ class CorpusPipelineSuite extends AnyFunSuite {
     assert(removed == 2, s"takedown removes only rows it finds, got $removed")
     assert(CorpusPipeline.reconcile(spark, corpus, idx) == 0)
   }
+
+  test("an admission without in-batch clusters: pinned job count, no victims sidecar") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_adm_jobs").toString
+    val (corpus, idx) = (s"$dir/corpus", s"$dir/idx")
+    val rnd = new scala.util.Random(7)
+    def words(n: Int) = Seq.fill(n)(s"v${rnd.nextInt(300)}").mkString(" ")
+    val seedText = (1L to 12L).map(i => i -> words(40 + rnd.nextInt(20)))
+    CorpusPipeline.seedCorpus(spark,
+      seedText.map { case (i, t) => (i, "en", t) }.toDF("doc_id", "lang", "text"),
+      corpus, idx)
+    // the benchmark's batch shape in small: fresh docs, an exact and two
+    // near duplicates of corpus docs, one low-quality doc; no in-batch
+    // cluster, so nothing goes to the victims sidecar
+    val batch = ((101L to 106L).map(i => (i, words(20 + rnd.nextInt(40)))) ++
+      Seq(201L -> seedText(0)._2, 202L -> (seedText(1)._2 + " dup"),
+        203L -> (seedText(2)._2 + " dup"), 204L -> words(5)))
+      .map { case (i, t) => (i, "en", t) }.toDF("doc_id", "lang", "text")
+    var r: CorpusPipeline.IncrementalReport = null
+    val jobs = jobsOf {
+      r = CorpusPipeline.runIncremental(spark, batch, corpus, idx)
+    }
+    assert(r == CorpusPipeline.IncrementalReport(10, 9, 8, 6, 18))
+    // 56 jobs when the probe, the in-batch pairs and the append each
+    // sketched the batch and five counts ran as their own actions
+    assert(jobs.size == 29, s"admission ran ${jobs.size} jobs")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"${corpus}_victims")),
+      "a batch without cluster victims must not touch the victims sidecar")
+    assert(CorpusPipeline.reconcile(spark, corpus, idx) == 0)
+  }
 }

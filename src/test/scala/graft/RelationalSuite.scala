@@ -16,6 +16,41 @@ object SparkFixture {
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** The descriptions of the Spark jobs `body` starts. Listener events
+    * arrive asynchronously but in order, so a labelled fence job before
+    * and after `body` brackets exactly its jobs.
+    */
+  def jobsOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    def fence(label: String): Unit = {
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(label)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(prev)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(label) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      require(seen.contains(label), s"listener never saw $label")
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence("graft-test: before")
+      body
+      fence("graft-test: after")
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.dropWhile(_ != "graft-test: before").drop(1)
+      .takeWhile(_ != "graft-test: after")
+  }
 }
 
 /** Smoke + targeted correctness for the relational core at sf0.001.

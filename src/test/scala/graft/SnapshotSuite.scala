@@ -5546,41 +5546,6 @@ class SnapshotSuite extends AnyFunSuite {
     }
   }
 
-  /** The descriptions of the Spark jobs `body` starts. Listener events
-    * arrive asynchronously but in order, so a labelled fence job before
-    * and after `body` brackets exactly its jobs.
-    */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    def fence(label: String): Unit = {
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(label)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(prev)
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!seen.contains(label) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(label), s"listener never saw $label")
-    }
-    sc.addSparkListener(listener)
-    try {
-      fence("graft-test: before")
-      body
-      fence("graft-test: after")
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    seen.asScala.toSeq.dropWhile(_ != "graft-test: before").drop(1)
-      .takeWhile(_ != "graft-test: after")
-  }
-
   private def dvDirs(t: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(t, "data")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
