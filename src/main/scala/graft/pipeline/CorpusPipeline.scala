@@ -364,13 +364,12 @@ object CorpusPipeline {
     // [[reconcile]]):
     //   1. victims sidecar (doc_id, text, rep_id) — the cluster victims'
     //      text, keyed by their admitted representative; appended only
-    //      when the batch HAS victims. Without it a
-    //      crash before the index append would lose the victims'
-    //      sketches forever (their text lives nowhere else), and a
-    //      replayed chain A~B~C with A~C below threshold would re-admit
-    //      C. reconcile purges sidecar rows whose rep never landed
-    //      (crash before step 2) and re-sketches the rest (crash before
-    //      step 3).
+    //      when the batch HAS victims. Without it a crash before the
+    //      index append would lose the victims' sketches forever (their
+    //      text lives nowhere else), and a replayed chain A~B~C with A~C
+    //      below threshold would re-admit C. reconcile purges sidecar
+    //      rows whose rep never landed (crash before step 2) and
+    //      re-sketches the rest (crash before step 3).
     //   2. corpus rows for admitted docs (their count rides the write).
     //   3. index sketches for every corpus-safe doc (representatives AND
     //      victims — replay idempotence under the transitive cluster
