@@ -39,6 +39,46 @@ class DedupSimilaritySuite extends AnyFunSuite {
       s"diff: ${(got diff expected).take(3)} / ${(expected diff got).take(3)}")
   }
 
+  /** A sketch frame as a sorted multiset of (doc_id, kind, band, sorted sh). */
+  private def sketchRows(sk: org.apache.spark.sql.DataFrame) =
+    sk.select("doc_id", "kind", "band", "sh").collect().map { r =>
+      (r.getLong(0), r.getString(1), r.getString(2),
+        if (r.isNullAt(3)) Seq.empty[String] else r.getSeq[String](3).sorted)
+    }.toSeq.sortBy(t => (t._1, t._2, t._3, t._4.mkString("\u0000")))
+
+  test("the index sketch equals the two-shuffle reference on random texts") {
+    import spark.implicits._
+    // seeded property loop over the tokenizer's edge shapes: null and
+    // empty text, 1-2 tokens (no trigram), repeated trigrams, runs of
+    // spaces (empty tokens), leading/trailing spaces, non-ASCII
+    val rnd = new scala.util.Random(0x5ce7)
+    val vocab = Vector("a", "bb", "ccc", "", "é", "日本", "straße", "😀")
+    def tokens(n: Int) = Vector.fill(n)(vocab(rnd.nextInt(vocab.size)))
+    def text(): String = rnd.nextInt(7) match {
+      case 0 => null
+      case 1 => ""
+      case 2 => tokens(1 + rnd.nextInt(2)).mkString(" ")
+      case 3 => Vector.fill(2 + rnd.nextInt(4))(tokens(2).mkString(" ")).mkString(" ")
+      case 4 => " " * (1 + rnd.nextInt(3)) + tokens(rnd.nextInt(6)).mkString(" ") +
+        " " * rnd.nextInt(3)
+      case _ => tokens(rnd.nextInt(12)).mkString(" " * (1 + rnd.nextInt(2)))
+    }
+    (1 to 4).foreach { round =>
+      val docs = (1L to 60L).map(id => (round * 1000L + id, text()))
+        .toDF("doc_id", "text")
+      val want = sketchRows(operators.SketchReference.sketchOf(docs))
+      val got = sketchRows(operators.MinHashIndex.sketchOf(
+        operators.DedupOps.shingleRowsOf(docs)))
+      assert(want.exists(_._2 == "b"), s"round $round sketched no document")
+      assert(got == want, s"round $round: ${got.diff(want).take(2)} / " +
+        s"${want.diff(got).take(2)}")
+    }
+    val corpus = Tables.documents(spark, sf).select("doc_id", "text")
+    assert(sketchRows(operators.MinHashIndex.sketchOf(
+        operators.DedupOps.shingleRowsOf(corpus))) ==
+      sketchRows(operators.SketchReference.sketchOf(corpus)))
+  }
+
   test("minhash-LSH recalls >= 80% of exact jaccard>=0.5 pairs, no junk") {
     val exact = pairs("q_dedup_ngram_jaccard")
     val lsh = pairs("q_dedup_minhash")
