@@ -30,7 +30,9 @@ object DedupOps {
     * here, and the pair join pays the pass twice. The window/distinct
     * form is whole-stage-codegen end to end (~10x less CPU), shuffles by
     * doc_id (narrow, bounded rows), and is the shape every shingle
-    * consumer (jaccard join, MinHash, SimHash) wants anyway.
+    * consumer (jaccard join, containment, incremental, SimHash) wants
+    * anyway. MinHash sketches no longer read it: [[MinHashIndex.sketchOf]]
+    * builds the same trigram set per document in one pass.
     */
   /** The CORPUS-table shingle frame is shared the way
     * `MultimodalOps.decodedMedia` and `AnalyticsOps.orderPartSets` are:
@@ -59,8 +61,11 @@ object DedupOps {
     * ordering at all, so the scan, the generate and the consumer's map
     * side fuse into one codegen stage with zero pre-gram shuffles (the
     * filter keeps sequence() ascending: sub-n-token docs emit nothing).
-    * The single shared tokenization for every gram consumer —
-    * dedup shingles, decontamination, repetition scoring.
+    * The single shared tokenization for every gram-row consumer —
+    * dedup shingles, decontamination, repetition scoring. MinHash
+    * sketches do not read these rows: `graft.functions.MinHashSketch`
+    * tokenizes the same way inside one row (pinned against this path
+    * in DedupSimilaritySuite).
     */
   private[graft] def gramRows(docs: DataFrame, n: Int): DataFrame = {
     val parts = (0 until n).map(j => element_at(col("ts"), col("i") + j))
@@ -229,19 +234,6 @@ object DedupOps {
     IndexedSeq.fill(32)((rnd.nextLong() | 1L, rnd.nextLong()))
   }
 
-  /** PORTABLE 64-bit shingle hash: the two md5-prefix 32-bit halves
-    * packed into one signed long — exactly computable in DuckDB (hex
-    * parse + HUGEINT packing), unlike xxhash64, which is what puts the
-    * whole MinHash/SimHash band derivation under the hard oracle. conv's
-    * 8-hex-digit output is ≤ 2^32−1 so the long cast never overflows;
-    * shiftleft wraps into the sign bit by definition (no ANSI overflow).
-    */
-  private[operators] def portableHash64(g: Column): Column = {
-    val m = md5(g)
-    shiftleft(conv(substring(m, 1, 8), 16, 10).cast("long"), 32)
-      .bitwiseOR(conv(substring(m, 9, 8), 16, 10).cast("long"))
-  }
-
   /** Verified near-dup pairs between two sketches in the row form of
     * [[MinHashIndex.sketchOf]]: band collisions become candidate
     * (d1 from `a`, d2 from `b`) pairs, `keep` filters them, and exact
@@ -271,14 +263,14 @@ object DedupOps {
   def sketchPairs(sketch: DataFrame, threshold: Double): DataFrame =
     verifiedPairs(sketch, sketch, col("d1") < col("d2"), threshold)
 
-  /** MinHash-LSH near-dup pairs over a `shingleRows` frame — the 100 TB
-    * sketch tier, exposed as a pair SOURCE so cluster resolution
-    * (connected components) and the corpus pipeline can compose over it
-    * interchangeably with the exact tier.
+  /** MinHash-LSH near-dup pairs over a `(doc_id, text)` frame (`doc_id`
+    * unique) — the 100 TB sketch tier, exposed as a pair SOURCE so
+    * cluster resolution (connected components) and the corpus pipeline
+    * can compose over it interchangeably with the exact tier.
     *
-    * 32 minhashes (ONE portable md5-derived hash per shingle + 32
-    * codegen'd affine permutations `a_i*h + b_i`, a_i odd — see
-    * AffineHashExpr and [[portableHash64]]; 32x less hashing than
+    * 32 minhashes (ONE portable md5-derived hash per shingle + 32 wrapping
+    * affine permutations `a_i*h + b_i`, a_i odd — see
+    * `graft.functions.MinHashSketch`; 32x less hashing than
     * independent string hashes), 16 bands x 2 rows; band
     * collisions become candidate pairs via an equi-join on the band key
     * (each doc shuffles a constant 16 rows — never all-pairs), then exact
@@ -286,10 +278,10 @@ object DedupOps {
     * near-dup pair: precision 1.0, recall asserted >= 80% vs the exact
     * tier in DedupSimilaritySuite.
     */
-  def minhashLshPairs(shRows: DataFrame, threshold: Double): DataFrame =
+  def minhashLshPairs(docs: DataFrame, threshold: Double): DataFrame =
     // the sketch feeds the band self-join AND both verification sides.
     // Lazy persist, not localCheckpoint — see ngramJaccardPairs.
-    sketchPairs(MinHashIndex.sketchOf(shRows)
+    sketchPairs(MinHashIndex.sketchOf(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), threshold)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -360,12 +352,12 @@ object DedupOps {
         val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
         if (f.exists(p)) { f.delete(p, true); () }
       }
-      val sh = shingleRows(s, d)
-      MinHashIndex.fit(sh.filter(col("doc_id") % 5 =!= 0), path)
+      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+      MinHashIndex.fit(docs.filter(col("doc_id") % 5 =!= 0), path)
       MinHashIndex.delete(s, path,
-        sh.filter(col("doc_id") % 10 === 1).select(col("doc_id")).distinct())
+        docs.filter(col("doc_id") % 10 === 1).select(col("doc_id")).distinct())
       MinHashIndex.compact(s, path)
-      MinHashIndex.probe(s, path, sh.filter(col("doc_id") % 5 === 0), 0.5)
+      MinHashIndex.probe(s, path, docs.filter(col("doc_id") % 5 === 0), 0.5)
         .withColumn("jaccard", graft.Det.r4(col("jaccard")))
         .orderBy(col("d1").asc_nulls_first, col("d2").asc_nulls_first)
     }),
@@ -385,7 +377,7 @@ object DedupOps {
     // the identical candidate set and verified pairs (recall vs the
     // exact operator additionally asserted in DedupSimilaritySuite).
     "q_dedup_minhash" -> ((s, d) => {
-      minhashLshPairs(shingleRows(s, d), 0.5)
+      minhashLshPairs(Tables.documents(s, d), 0.5)
         .orderBy(col("d1").asc_nulls_first, col("d2").asc_nulls_first)
     }),
 

@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   * that sketches a batch once can probe ([[probeSketch]]), pair it
   * within itself (`DedupOps.sketchPairs`) and append it
   * ([[appendSketch]]) without re-sketching; [[fit]], [[append]] and
-  * [[probe]] are the same verbs over a `shingleRows` frame.
+  * [[probe]] are the same verbs over a `(doc_id, text)` frame.
   *
   * A probe is one equi-join on the band key followed by exact Jaccard
   * verification of the (few) collisions, so emitted pairs have precision
@@ -111,38 +111,40 @@ object MinHashIndex {
     else s.read.parquet(path + "/data")
   }
 
-  /** The index row form of a `shingleRows` frame: per doc, 16 LSH band
-    * rows (`kind = b`, `sh` null) and one set row (`kind = s`, the
-    * distinct shingles in `sh`; `band` is `s:<doc_id>`, a spread key
-    * that only balances the band buckets and that probes never read).
+  /** The index row form of a `(doc_id, text)` frame: per doc, 16 LSH
+    * band rows (`kind = b`, `sh` null) and one set row (`kind = s`, the
+    * distinct trigram shingles in `sh`; `band` is `s:<doc_id>`, a spread
+    * key that only balances the band buckets and that probes never
+    * read). A doc with fewer than 3 tokens has no trigram and no rows.
     *
     * Band key = `index:sig:sig` over the 32 fixed-seed minhashes of
     * `DedupOps.minhashLshPairs`, so bands computed in different runs
     * collide identically and the DuckDB oracle reproduces them
-    * bit-exactly. One aggregation per doc yields both the minhashes and
-    * the set: a batch is sketched in one shuffle.
+    * bit-exactly. Each doc is sketched in one pass over its own row
+    * (`graft.functions.MinHashSketch`): a batch is sketched with no
+    * shuffle. `doc_id` must be unique in `docs`; each doc's rows carry
+    * it as they are.
     */
-  def sketchOf(shRows: DataFrame): DataFrame = {
-    import graft.functions.AffineHash.affine_hash
-    val mins = DedupOps.minhashPerms.map { case (a, b) =>
-      min(affine_hash(col("h"), a, b)) }
-    shRows.select(col("doc_id"), col("g"),
-        DedupOps.portableHash64(col("g")).as("h"))
-      .groupBy(col("doc_id"))
-      .agg(array(mins: _*).as("sig"), collect_list(col("g")).as("sh"))
-      .select(col("doc_id"), explode(concat(
-        expr("transform(sequence(0, 15), b -> named_struct(" +
-          "'band', concat(b, ':', sig[2*b], ':', sig[2*b+1]), " +
-          "'sh', CAST(NULL AS ARRAY<STRING>), 'kind', 'b'))"),
-        array(struct(concat(lit("s:"), col("doc_id")).as("band"),
-          col("sh").as("sh"), lit("s").as("kind"))))).as("r"))
-      .select(col("doc_id"), col("r.band").as("band"), col("r.sh").as("sh"),
-        col("r.kind").as("kind"))
+  def sketchOf(docs: DataFrame): DataFrame = {
+    import graft.functions.MinHashSketch.minhash_sketch
+    val sig = col("k.sig")
+    val bands = (0 until 16).map { b =>
+      struct(concat(lit(s"$b:"), sig(2 * b).cast("string"), lit(":"),
+          sig(2 * b + 1).cast("string")).as("band"),
+        lit(null).cast("array<string>").as("sh"), lit("b").as("kind"))
+    }
+    val set = struct(concat(lit("s:"), col("doc_id")).as("band"),
+      col("k.sh").as("sh"), lit("s").as("kind"))
+    docs.select(col("doc_id"),
+        minhash_sketch(col("text"), DedupOps.minhashPerms).as("k"))
+      // a null sketch (under 3 tokens) explodes to no rows
+      .select(col("doc_id"),
+        inline(when(col("k").isNotNull, array(bands :+ set: _*))))
   }
 
-  /** Sketch `shRows` (a `DedupOps.shingleRows` frame) into `path`. */
-  def fit(shRows0: DataFrame, path: String): Unit =
-    write(sketchOf(shRows0), path, "overwrite")
+  /** Sketch `docs` (a `(doc_id, text)` frame) into `path`. */
+  def fit(docs: DataFrame, path: String): Unit =
+    write(sketchOf(docs), path, "overwrite")
 
   // ---- deletion / takedown (tombstones + compaction) -------------------
   //
@@ -275,8 +277,8 @@ object MinHashIndex {
     * the incremental-ingest publish step. Callers guarantee the doc_ids
     * are new; the index itself never dedups.
     */
-  def append(shRows0: DataFrame, path: String): Unit =
-    appendSketch(sketchOf(shRows0), path)
+  def append(docs: DataFrame, path: String): Unit =
+    appendSketch(sketchOf(docs), path)
 
   /** [[append]] for docs already in the row form of [[sketchOf]]. */
   def appendSketch(sketch: DataFrame, path: String): Unit =
@@ -328,16 +330,16 @@ object MinHashIndex {
     }
   }
 
-  /** Probe an incoming batch (as a `shingleRows` frame) against the
+  /** Probe an incoming batch (a `(doc_id, text)` frame) against the
     * index: returns (d1 = indexed doc, d2 = incoming doc, jaccard) for
     * every verified near-dup pair at `threshold`. Recall vs the exact
     * cross join is the LSH band recall (suite-asserted >= 80%);
     * precision is 1.0 (every candidate is exactly verified).
     */
-  def probe(s: SparkSession, path: String, shRows0: DataFrame,
+  def probe(s: SparkSession, path: String, docs: DataFrame,
       threshold: Double): DataFrame =
     // materialized: the band join and the verification sets both read it
-    probeSketch(s, path, sketchOf(shRows0).localCheckpoint(), threshold)
+    probeSketch(s, path, sketchOf(docs).localCheckpoint(), threshold)
 
   /** [[probe]] for a batch already in the row form of [[sketchOf]]. */
   def probeSketch(s: SparkSession, path: String, sketch: DataFrame,

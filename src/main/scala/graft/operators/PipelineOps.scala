@@ -513,7 +513,7 @@ object PipelineOps {
     // asserts LSH-sourced clusters refine the exact clusters with >= 80%
     // doc coverage.
     "q_dedup_clusters_lsh" -> ((s, d) => {
-      val pairs = DedupOps.minhashLshPairs(DedupOps.shingleRows(s, d), 0.5)
+      val pairs = DedupOps.minhashLshPairs(Tables.documents(s, d), 0.5)
         .select(col("d1"), col("d2"))
       connectedComponents(pairs)
         .select(col("node").as("doc_id"), col("cluster"))

@@ -47,8 +47,7 @@ object CorpusPipeline {
       DedupOps.shingleRowsOf(docs.select(col("doc_id"), col("text"))), t, None)
 
   val lshPairs: (DataFrame, Double) => DataFrame =
-    (docs, t) => DedupOps.minhashLshPairs(
-      DedupOps.shingleRowsOf(docs.select(col("doc_id"), col("text"))), t)
+    (docs, t) => DedupOps.minhashLshPairs(docs, t)
 
   val phashPairs: (DataFrame, Double) => DataFrame =
     (docs, _) => graft.operators.MultimodalOps.phashPairsOf(
@@ -240,9 +239,7 @@ object CorpusPipeline {
     val vPath = new org.apache.hadoop.fs.Path(vDir)
     vPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(vPath, true)
-    MinHashIndex.fit(
-      DedupOps.shingleRowsOf(seeded.select(col("doc_id"), col("text"))),
-      indexPath)
+    MinHashIndex.fit(seeded, indexPath)
     seeded.count()
   }
 
@@ -336,8 +333,7 @@ object CorpusPipeline {
 
     // near-dup vs corpus: one probe of the persisted band index with the
     // batch's sketch, which the in-batch pairs and the append reuse
-    val sketch = MinHashIndex.sketchOf(DedupOps.shingleRowsOf(
-      exactSafe.select(col("doc_id"), col("text")))).localCheckpoint()
+    val sketch = MinHashIndex.sketchOf(exactSafe).localCheckpoint()
     val corpusVictims = MinHashIndex.probeSketch(spark, indexPath, sketch,
         threshold)
       .select(col("d2").as("doc_id")).distinct()
@@ -580,9 +576,7 @@ object CorpusPipeline {
     val missing = missingRows.localCheckpoint()
     val n = countOf(missingObs)(missing.count())
     if (n > 0)
-      MinHashIndex.append(
-        DedupOps.shingleRowsOf(missing.select(col("doc_id"), col("text"))),
-        indexPath)
+      MinHashIndex.append(missing, indexPath)
     // sidecar GC: after the repairs above, drop rows that are orphans
     // (their batch never landed — they must not linger into a replay)
     // or already fully indexed (their sketches are durable; keeping the

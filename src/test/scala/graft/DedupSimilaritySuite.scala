@@ -67,16 +67,65 @@ class DedupSimilaritySuite extends AnyFunSuite {
       val docs = (1L to 60L).map(id => (round * 1000L + id, text()))
         .toDF("doc_id", "text")
       val want = sketchRows(operators.SketchReference.sketchOf(docs))
-      val got = sketchRows(operators.MinHashIndex.sketchOf(
-        operators.DedupOps.shingleRowsOf(docs)))
+      val got = sketchRows(operators.MinHashIndex.sketchOf(docs))
       assert(want.exists(_._2 == "b"), s"round $round sketched no document")
       assert(got == want, s"round $round: ${got.diff(want).take(2)} / " +
         s"${want.diff(got).take(2)}")
     }
     val corpus = Tables.documents(spark, sf).select("doc_id", "text")
-    assert(sketchRows(operators.MinHashIndex.sketchOf(
-        operators.DedupOps.shingleRowsOf(corpus))) ==
+    assert(sketchRows(operators.MinHashIndex.sketchOf(corpus)) ==
       sketchRows(operators.SketchReference.sketchOf(corpus)))
+  }
+
+  /** The physical plans of the SQL executions `body` runs, the writes
+    * nested in its commands included. Listener events arrive
+    * asynchronously but in order, so a fence query after `body` flushes
+    * them.
+    */
+  private def plansOf(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { seen.add(qe); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val fence = spark.range(1)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      fence.collect()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(fence.queryExecution) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      require(seen.contains(fence.queryExecution), "listener never saw the fence")
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.filterNot(_ eq fence.queryExecution).map(_.executedPlan)
+  }
+
+  test("the sketch plans no shuffle; fit's write plans one, the band bucket repartition") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    def exchanges(p: SparkPlan) =
+      helper.collectWithSubqueries(p) { case e: ShuffleExchangeExec => e }
+    val docs = Tables.documents(spark, sf)
+    val sketch = operators.MinHashIndex.sketchOf(docs)
+    sketch.collect() // finalize AQE
+    assert(exchanges(sketch.queryExecution.executedPlan).isEmpty,
+      s"the sketch shuffled:\n${sketch.queryExecution.executedPlan}")
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_mhp").toString + "/idx"
+    val ex = plansOf(operators.MinHashIndex.fit(docs, path)).flatMap(exchanges)
+    assert(ex.size == 1, s"fit planned ${ex.size} exchanges: $ex")
+    ex.head.outputPartitioning match {
+      case HashPartitioning(Seq(k), 8) =>
+        assert(k.references.map(_.name).toSet == Set("band"), s"bucket key $k")
+      case p => fail(s"fit's exchange is not the 8-bucket band repartition: $p")
+    }
   }
 
   test("minhash-LSH recalls >= 80% of exact jaccard>=0.5 pairs, no junk") {
@@ -152,6 +201,7 @@ class DedupSimilaritySuite extends AnyFunSuite {
   }
 
   test("persisted MinHash index probe: precision 1.0, >= 80% cross recall") {
+    val docs = Tables.documents(spark, sf)
     val sh = operators.DedupOps.shingleRows(spark, sf).cache()
     try {
       val shEx = sh.filter(col("doc_id") % 5 =!= 0)
@@ -161,8 +211,9 @@ class DedupSimilaritySuite extends AnyFunSuite {
       assert(exact.nonEmpty, "planted cross-split near-dup pairs expected")
       val path = java.nio.file.Files
         .createTempDirectory("graft_mh").toString + "/idx"
-      operators.MinHashIndex.fit(shEx, path)
-      val probed = operators.MinHashIndex.probe(spark, path, shInc, 0.5)
+      operators.MinHashIndex.fit(docs.filter(col("doc_id") % 5 =!= 0), path)
+      val probed = operators.MinHashIndex
+        .probe(spark, path, docs.filter(col("doc_id") % 5 === 0), 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert((probed -- exact).isEmpty,
         s"probe invented pairs: ${(probed -- exact).take(5)}")
@@ -185,6 +236,7 @@ class DedupSimilaritySuite extends AnyFunSuite {
     import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
     import org.apache.spark.sql.execution.FileSourceScanExec
     val helper = new AdaptiveSparkPlanHelper {}
+    val docs = Tables.documents(spark, sf)
     val sh = operators.DedupOps.shingleRows(spark, sf).cache()
     // at test scale everything broadcasts; force the shuffled join the
     // 100 TB probe would plan so the bucketing claim is actually tested
@@ -195,9 +247,9 @@ class DedupSimilaritySuite extends AnyFunSuite {
     try {
       val path = java.nio.file.Files
         .createTempDirectory("graft_mhb").toString + "/idx"
-      operators.MinHashIndex.fit(sh.filter(col("doc_id") % 5 =!= 0), path)
+      operators.MinHashIndex.fit(docs.filter(col("doc_id") % 5 =!= 0), path)
       val probed = operators.MinHashIndex.probe(
-        spark, path, sh.filter(col("doc_id") % 5 === 0), 0.5)
+        spark, path, docs.filter(col("doc_id") % 5 === 0), 0.5)
       probed.collect() // finalize AQE so stage boundaries are real
       val exec = probed.queryExecution.executedPlan
       // the candidate join is the (only) equi-join keyed on `band`
@@ -227,7 +279,7 @@ class DedupSimilaritySuite extends AnyFunSuite {
       operators.MinHashIndex.delete(spark, path,
         sh.filter(col("doc_id") === 1).select("doc_id"))
       val probedDel = operators.MinHashIndex.probe(
-        spark, path, sh.filter(col("doc_id") % 5 === 0), 0.5)
+        spark, path, docs.filter(col("doc_id") % 5 === 0), 0.5)
       probedDel.collect()
       val execDel = probedDel.queryExecution.executedPlan
       import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
@@ -272,6 +324,7 @@ class DedupSimilaritySuite extends AnyFunSuite {
   }
 
   test("MinHash index append falls back to the plain layout without catalog metadata") {
+    val docs = Tables.documents(spark, sf)
     val sh = operators.DedupOps.shingleRows(spark, sf).cache()
     try {
       val shA = sh.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 1)
@@ -279,14 +332,15 @@ class DedupSimilaritySuite extends AnyFunSuite {
       val shInc = sh.filter(col("doc_id") % 5 === 0)
       val path = java.nio.file.Files
         .createTempDirectory("graft_mhf").toString + "/idx"
-      operators.MinHashIndex.fit(shA, path)
+      operators.MinHashIndex.fit(
+        docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 1), path)
       // simulate a NEW session appending to the same files: this session
       // forgets the catalog entry, so append must go down the plain-
       // parquet branch instead of mislabeling unbucketed files
       spark.catalog.listTables().collect()
         .filter(_.name.startsWith("graft_mhidx_"))
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.name}"))
-      operators.MinHashIndex.append(shB, path)
+      operators.MinHashIndex.append(docs.filter(col("doc_id") % 5 === 1), path)
       val nA = shA.select("doc_id").distinct().count()
       val nB = shB.select("doc_id").distinct().count()
       assert(operators.MinHashIndex.indexedIds(spark, path).count() == nA + nB,
@@ -296,7 +350,8 @@ class DedupSimilaritySuite extends AnyFunSuite {
       val exact = operators.DedupOps
         .crossNgramJaccardPairs(sh.filter(col("doc_id") % 5 =!= 0), shInc, 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val probed = operators.MinHashIndex.probe(spark, path, shInc, 0.5)
+      val probed = operators.MinHashIndex
+        .probe(spark, path, docs.filter(col("doc_id") % 5 === 0), 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert((probed -- exact).isEmpty,
         s"probe invented pairs: ${(probed -- exact).take(5)}")
@@ -307,131 +362,124 @@ class DedupSimilaritySuite extends AnyFunSuite {
 
   test("MinHash index delete + compact: takedown invisible, probe parity preserved") {
     import spark.implicits._
-    val sh = operators.DedupOps.shingleRows(spark, sf).cache()
-    try {
-      val shEx = sh.filter(col("doc_id") % 5 =!= 0)
-      val shInc = sh.filter(col("doc_id") % 5 === 0)
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_mhd").toString + "/idx"
-      operators.MinHashIndex.fit(shEx, path)
-      def probePairs() = operators.MinHashIndex.probe(spark, path, shInc, 0.5)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val before = probePairs()
-      assert(before.nonEmpty, "planted cross-split near-dup pairs expected")
-      // take down half the indexed docs that currently match something
-      val deleted = before.map(_._1).toSeq.sorted
-        .take(math.max(1, before.size / 2)).toSet
-      operators.MinHashIndex.delete(spark, path,
-        deleted.toSeq.toDF("doc_id"))
-      val after = probePairs()
-      assert(after == before.filterNot(p => deleted.contains(p._1)),
-        "exactly the deleted docs' pairs must vanish, nothing else")
-      assert(operators.MinHashIndex.indexedIds(spark, path)
-        .collect().map(_.getLong(0)).toSet.intersect(deleted).isEmpty,
-        "membership view must exclude tombstoned docs")
-      // replayed delete is an idempotent no-op
-      operators.MinHashIndex.delete(spark, path,
-        deleted.toSeq.toDF("doc_id"))
-      assert(probePairs() == after)
-      // compaction: bytes leave disk, probe parity holds, state cleared
-      operators.MinHashIndex.compact(spark, path)
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(path + "/tombstones")),
-        "compact must clear the tombstones")
-      assert(probePairs() == after, "compaction must not change results")
-      assert(spark.read.parquet(path + "/data")
-        .filter(col("doc_id").isInCollection(deleted)).count() == 0,
-        "deleted docs' rows must be physically gone")
-      // compacting an already-clean index is a no-op
-      operators.MinHashIndex.compact(spark, path)
-      assert(probePairs() == after)
-    } finally { sh.unpersist(); () }
+    val docs = Tables.documents(spark, sf)
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_mhd").toString + "/idx"
+    operators.MinHashIndex.fit(docs.filter(col("doc_id") % 5 =!= 0), path)
+    def probePairs() = operators.MinHashIndex
+      .probe(spark, path, docs.filter(col("doc_id") % 5 === 0), 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val before = probePairs()
+    assert(before.nonEmpty, "planted cross-split near-dup pairs expected")
+    // take down half the indexed docs that currently match something
+    val deleted = before.map(_._1).toSeq.sorted
+      .take(math.max(1, before.size / 2)).toSet
+    operators.MinHashIndex.delete(spark, path,
+      deleted.toSeq.toDF("doc_id"))
+    val after = probePairs()
+    assert(after == before.filterNot(p => deleted.contains(p._1)),
+      "exactly the deleted docs' pairs must vanish, nothing else")
+    assert(operators.MinHashIndex.indexedIds(spark, path)
+      .collect().map(_.getLong(0)).toSet.intersect(deleted).isEmpty,
+      "membership view must exclude tombstoned docs")
+    // replayed delete is an idempotent no-op
+    operators.MinHashIndex.delete(spark, path,
+      deleted.toSeq.toDF("doc_id"))
+    assert(probePairs() == after)
+    // compaction: bytes leave disk, probe parity holds, state cleared
+    operators.MinHashIndex.compact(spark, path)
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(path + "/tombstones")),
+      "compact must clear the tombstones")
+    assert(probePairs() == after, "compaction must not change results")
+    assert(spark.read.parquet(path + "/data")
+      .filter(col("doc_id").isInCollection(deleted)).count() == 0,
+      "deleted docs' rows must be physically gone")
+    // compacting an already-clean index is a no-op
+    operators.MinHashIndex.compact(spark, path)
+    assert(probePairs() == after)
   }
 
   test("MinHash compact recovers a swap torn between stage and publish") {
     import spark.implicits._
-    val sh = operators.DedupOps.shingleRows(spark, sf).cache()
-    try {
-      val shEx = sh.filter(col("doc_id") % 5 =!= 0)
-      val shInc = sh.filter(col("doc_id") % 5 === 0)
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_mhc").toString + "/idx"
-      operators.MinHashIndex.fit(shEx, path)
-      def probePairs() = operators.MinHashIndex.probe(spark, path, shInc, 0.5)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val before = probePairs()
-      val deleted = before.map(_._1).toSeq.sorted.take(2).toSet
-      operators.MinHashIndex.delete(spark, path, deleted.toSeq.toDF("doc_id"))
-      val expected = probePairs()
-      // simulate the crash window: the staged survivors are durable, but
-      // the process died after dropping the table + data dir and before
-      // republishing — the exact state compact's scaladoc promises to
-      // repair from the stage
-      spark.read.parquet(path + "/data")
-        .join(deleted.toSeq.toDF("doc_id"), Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(path + "/data.compact")
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val tbl = "graft_mhidx_" + md.digest(path.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      val dataDir = new java.io.File(path + "/data")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dataDir)
-      assert(!dataDir.exists, "crash state: data dir gone, stage durable")
-      // recovery: compact first finishes the torn swap, then the fresh
-      // pass sees no remaining tombstoned rows and clears state
-      operators.MinHashIndex.compact(spark, path)
-      assert(probePairs() == expected,
-        "recovered index must equal the tombstone-masked results")
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(path + "/data.compact")))
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(path + "/tombstones")))
-      // an INCOMPLETE stage (crash mid-stage-write: no _SUCCESS marker)
-      // must be DISCARDED, never published — trusting partial files
-      // would silently lose the rest of the index. The data dir is
-      // intact in that window, so the fresh pass still folds the
-      // tombstones.
-      val del2 = expected.map(_._1).toSeq.sorted.take(1)
-      operators.MinHashIndex.delete(spark, path, del2.toDF("doc_id"))
-      val expected2 = probePairs()
-      val stageDir = new java.io.File(path + "/data.compact")
-      stageDir.mkdirs()
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(path + "/data.compact/part-garbage.parquet"),
-        "not parquet".getBytes("UTF-8"))
-      operators.MinHashIndex.compact(spark, path)
-      assert(probePairs() == expected2,
-        "partial stage must be discarded and the pass re-run")
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(path + "/tombstones")))
-    } finally { sh.unpersist(); () }
+    val docs = Tables.documents(spark, sf)
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_mhc").toString + "/idx"
+    operators.MinHashIndex.fit(docs.filter(col("doc_id") % 5 =!= 0), path)
+    def probePairs() = operators.MinHashIndex
+      .probe(spark, path, docs.filter(col("doc_id") % 5 === 0), 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val before = probePairs()
+    val deleted = before.map(_._1).toSeq.sorted.take(2).toSet
+    operators.MinHashIndex.delete(spark, path, deleted.toSeq.toDF("doc_id"))
+    val expected = probePairs()
+    // simulate the crash window: the staged survivors are durable, but
+    // the process died after dropping the table + data dir and before
+    // republishing — the exact state compact's scaladoc promises to
+    // repair from the stage
+    spark.read.parquet(path + "/data")
+      .join(deleted.toSeq.toDF("doc_id"), Seq("doc_id"), "left_anti")
+      .write.mode("overwrite").parquet(path + "/data.compact")
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val tbl = "graft_mhidx_" + md.digest(path.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(12)
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    val dataDir = new java.io.File(path + "/data")
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
+    }
+    rm(dataDir)
+    assert(!dataDir.exists, "crash state: data dir gone, stage durable")
+    // recovery: compact first finishes the torn swap, then the fresh
+    // pass sees no remaining tombstoned rows and clears state
+    operators.MinHashIndex.compact(spark, path)
+    assert(probePairs() == expected,
+      "recovered index must equal the tombstone-masked results")
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(path + "/data.compact")))
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(path + "/tombstones")))
+    // an INCOMPLETE stage (crash mid-stage-write: no _SUCCESS marker)
+    // must be DISCARDED, never published — trusting partial files
+    // would silently lose the rest of the index. The data dir is
+    // intact in that window, so the fresh pass still folds the
+    // tombstones.
+    val del2 = expected.map(_._1).toSeq.sorted.take(1)
+    operators.MinHashIndex.delete(spark, path, del2.toDF("doc_id"))
+    val expected2 = probePairs()
+    val stageDir = new java.io.File(path + "/data.compact")
+    stageDir.mkdirs()
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(path + "/data.compact/part-garbage.parquet"),
+      "not parquet".getBytes("UTF-8"))
+    operators.MinHashIndex.compact(spark, path)
+    assert(probePairs() == expected2,
+      "partial stage must be discarded and the pass re-run")
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(path + "/tombstones")))
   }
 
   test("q_dedup_index_takedown equals the undeleted probe minus deleted docs") {
     val got = SparkEntry.queries("q_dedup_index_takedown")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val sh = operators.DedupOps.shingleRows(spark, sf).cache()
-    try {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_mhq").toString + "/idx"
-      operators.MinHashIndex.fit(sh.filter(col("doc_id") % 5 =!= 0), path)
-      val full = operators.MinHashIndex
-        .probe(spark, path, sh.filter(col("doc_id") % 5 === 0), 0.5)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val expected = full.filterNot(_._1 % 10 == 1)
-      assert(got == expected,
-        s"takedown query drifted: extra=${(got -- expected).take(5)} " +
-          s"missing=${(expected -- got).take(5)}")
-      assert(full.exists(_._1 % 10 == 1),
-        "the deleted slice must have matched something pre-delete " +
-          "or the assertion is vacuous")
-    } finally { sh.unpersist(); () }
+    val docs = Tables.documents(spark, sf)
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_mhq").toString + "/idx"
+    operators.MinHashIndex.fit(docs.filter(col("doc_id") % 5 =!= 0), path)
+    val full = operators.MinHashIndex
+      .probe(spark, path, docs.filter(col("doc_id") % 5 === 0), 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val expected = full.filterNot(_._1 % 10 == 1)
+    assert(got == expected,
+      s"takedown query drifted: extra=${(got -- expected).take(5)} " +
+        s"missing=${(expected -- got).take(5)}")
+    assert(full.exists(_._1 % 10 == 1),
+      "the deleted slice must have matched something pre-delete " +
+        "or the assertion is vacuous")
   }
 
   test("layout marker overrides a stale bucketed catalog entry after a plain append") {
+    val docs = Tables.documents(spark, sf)
     val sh = operators.DedupOps.shingleRows(spark, sf).cache()
     try {
       val shA = sh.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 1)
@@ -441,11 +489,12 @@ class DedupSimilaritySuite extends AnyFunSuite {
       val md = java.security.MessageDigest.getInstance("MD5")
       val tbl = "graft_mhidx_" + md.digest(path.getBytes("UTF-8"))
         .map("%02x".format(_)).mkString.take(12)
-      operators.MinHashIndex.fit(shA, path)
+      operators.MinHashIndex.fit(
+        docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 1), path)
       assert(spark.catalog.tableExists(tbl), "fit must register the table")
       // another session (no catalog) appends: plain layout, marker demoted
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      operators.MinHashIndex.append(shB, path)
+      operators.MinHashIndex.append(docs.filter(col("doc_id") % 5 === 1), path)
       val marker = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(path + "/_layout")), "UTF-8").trim
       assert(marker == "plain", s"plain append must demote the marker ($marker)")
@@ -468,7 +517,7 @@ class DedupSimilaritySuite extends AnyFunSuite {
         // and a further append from this session must STAY plain — not
         // mislabel the unbucketed files because it sees a catalog entry
         operators.MinHashIndex.append(
-          sh.filter(col("doc_id") % 5 === 0), path)
+          docs.filter(col("doc_id") % 5 === 0), path)
         val after = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(path + "/_layout")), "UTF-8").trim
         assert(after == "plain", s"append through a stale entry relabeled ($after)")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The two-shuffle MinHash sketch of a `(doc_id, text)` frame: trigram
@@ -11,12 +11,19 @@ import org.apache.spark.sql.functions._
   * set row per doc with at least 3 tokens.
   */
 object SketchReference {
+  /** The md5-prefix 32-bit halves packed into one signed long, in SQL. */
+  private def portableHash64(g: Column): Column = {
+    val m = md5(g)
+    shiftleft(conv(substring(m, 1, 8), 16, 10).cast("long"), 32)
+      .bitwiseOR(conv(substring(m, 9, 8), 16, 10).cast("long"))
+  }
+
   def sketchOf(docs: DataFrame): DataFrame = {
     import graft.functions.AffineHash.affine_hash
     val mins = DedupOps.minhashPerms.map { case (a, b) =>
       min(affine_hash(col("h"), a, b)) }
     DedupOps.shingleRowsOf(docs)
-      .select(col("doc_id"), col("g"), DedupOps.portableHash64(col("g")).as("h"))
+      .select(col("doc_id"), col("g"), portableHash64(col("g")).as("h"))
       .groupBy(col("doc_id"))
       .agg(array(mins: _*).as("sig"), collect_list(col("g")).as("sh"))
       .select(col("doc_id"), explode(concat(
