@@ -230,7 +230,8 @@ object CorpusPipeline {
   def seedCorpus(spark: SparkSession, docs: DataFrame, corpusDir: String,
       indexPath: String, minTokens: Int = 10): Long = {
     val seeded = exactDedupWithHash(gate(docs, minTokens)).localCheckpoint()
-    seeded.write.mode("overwrite").parquet(corpusDir)
+    val (written, writtenObs) = counted(seeded)
+    written.write.mode("overwrite").parquet(corpusDir)
     // a fresh seed resets ALL admission state: a stale victims sidecar
     // from a previous incremental history would otherwise feed reconcile
     // phantom victims (old text re-sketched into the new index whenever
@@ -240,7 +241,7 @@ object CorpusPipeline {
     vPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(vPath, true)
     MinHashIndex.fit(seeded, indexPath)
-    seeded.count()
+    countOf(writtenObs)(seeded.count())
   }
 
   /** Admit one batch against the standing corpus. The corpus itself is
@@ -286,23 +287,21 @@ object CorpusPipeline {
       benchmark: Option[DataFrame] = None,
       maxRepetition: Option[Double] = None): IncrementalReport = {
     val (batchIn, inObs) = counted(batch)
-    // materialized: the exact tier and the afterQuality count both read
-    // it — unmaterialized, each extra action would re-scan and
-    // re-normalize the batch source (per micro-batch, in the streaming
-    // composition). The optional curation gates mirror [[run]]'s
-    // (batch-local ones only: the perplexity gate needs a reference LM
-    // — see [[TrainingOps.perplexityScoresAgainst]] — so it is not
-    // offered per batch). When gates are on, the gate() output is
-    // checkpointed FIRST — the first gate's dual-branch plan (victims +
-    // anti-join) would otherwise re-scan the batch source twice — and
+    // Without curation gates the gated frame is not materialized: the
+    // exact tier's checkpoint below is its one reader, and the input and
+    // afterQuality counts ride that job. The optional curation gates
+    // mirror [[run]]'s (batch-local ones only: the perplexity gate needs
+    // a reference LM — see [[TrainingOps.perplexityScoresAgainst]] — so
+    // it is not offered per batch). When gates are on, the gate() output
+    // is checkpointed FIRST — the first gate's dual-branch plan (victims
+    // + anti-join) would otherwise re-scan the batch source twice — and
     // curate's last enabled gate checkpoints the final frame.
     val gated = {
       val g = gate(batchIn, minTokens)
       if (benchmark.nonEmpty || maxRepetition.nonEmpty)
         curate(g.localCheckpoint(), benchmark, maxRepetition, None)
-      else g.localCheckpoint()
+      else g
     }
-    val nBatch = countOf(inObs)(batch.count())
 
     // exact tier: dedup within the batch, then against the corpus's
     // persisted digests (a 16-byte column scan, pruned to one column).
@@ -328,6 +327,7 @@ object CorpusPipeline {
     val (exactOut, exactObs) = counted(exactDedupWithHash(gatedIn)
       .join(corpusHashes, Seq("content_hash"), "left_anti"))
     val exactSafe = exactOut.localCheckpoint()
+    val nBatch = countOf(inObs)(batch.count())
     val afterQuality = countOf(qualityObs)(gated.count())
     val afterExact = countOf(exactObs)(exactSafe.count())
 
