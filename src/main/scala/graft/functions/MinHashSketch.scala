@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 
 /** One-pass MinHash sketch of a text: `struct<sig, sh>`, where `sh` is
@@ -39,8 +39,12 @@ object MinHashSketch {
     Some(Sketch(sig, sh.toArray(new Array[String](0))))
   }
 
-  def minhash_sketch(text: Column, perms: IndexedSeq[(Long, Long)]): Column = {
+  /** The sketch over `perms` as a UDF of the text. Build it once and
+    * reuse it: plans share a UDF only by instance, and a persisted
+    * sketch is found again only by a plan that compares equal.
+    */
+  def udfOf(perms: IndexedSeq[(Long, Long)]): UserDefinedFunction = {
     val (as, bs) = (perms.map(_._1).toArray, perms.map(_._2).toArray)
-    udf((t: String) => sketch(t, as, bs)).withName("minhash_sketch")(text)
+    udf((t: String) => sketch(t, as, bs)).withName("minhash_sketch")
   }
 }

@@ -111,6 +111,9 @@ object MinHashIndex {
     else s.read.parquet(path + "/data")
   }
 
+  private val minhashSketch =
+    graft.functions.MinHashSketch.udfOf(DedupOps.minhashPerms)
+
   /** The index row form of a `(doc_id, text)` frame: per doc, 16 LSH
     * band rows (`kind = b`, `sh` null) and one set row (`kind = s`, the
     * distinct trigram shingles in `sh`; `band` is `s:<doc_id>`, a spread
@@ -122,11 +125,10 @@ object MinHashIndex {
     * collide identically and the DuckDB oracle reproduces them
     * bit-exactly. Each doc is sketched in one pass over its own row
     * (`graft.functions.MinHashSketch`): a batch is sketched with no
-    * shuffle. `doc_id` must be unique in `docs`; each doc's rows carry
-    * it as they are.
+    * shuffle. `doc_id` must be unique in `docs` (every caller's
+    * contract): a repeated id would get one row set per occurrence.
     */
   def sketchOf(docs: DataFrame): DataFrame = {
-    import graft.functions.MinHashSketch.minhash_sketch
     val sig = col("k.sig")
     val bands = (0 until 16).map { b =>
       struct(concat(lit(s"$b:"), sig(2 * b).cast("string"), lit(":"),
@@ -135,8 +137,7 @@ object MinHashIndex {
     }
     val set = struct(concat(lit("s:"), col("doc_id")).as("band"),
       col("k.sh").as("sh"), lit("s").as("kind"))
-    docs.select(col("doc_id"),
-        minhash_sketch(col("text"), DedupOps.minhashPerms).as("k"))
+    docs.select(col("doc_id"), minhashSketch(col("text")).as("k"))
       // a null sketch (under 3 tokens) explodes to no rows
       .select(col("doc_id"),
         inline(when(col("k").isNotNull, array(bands :+ set: _*))))

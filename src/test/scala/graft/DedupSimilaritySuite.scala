@@ -117,6 +117,10 @@ class DedupSimilaritySuite extends AnyFunSuite {
     sketch.collect() // finalize AQE
     assert(exchanges(sketch.queryExecution.executedPlan).isEmpty,
       s"the sketch shuffled:\n${sketch.queryExecution.executedPlan}")
+    // a second sketch of the same docs plans the same result, so the
+    // sketch minhashLshPairs persists is found again, not re-cached
+    assert(operators.MinHashIndex.sketchOf(docs).queryExecution.analyzed
+      .sameResult(sketch.queryExecution.analyzed))
     val path = java.nio.file.Files
       .createTempDirectory("graft_mhp").toString + "/idx"
     val ex = plansOf(operators.MinHashIndex.fit(docs, path)).flatMap(exchanges)
