@@ -46,8 +46,7 @@ object CorpusPipeline {
     (docs, t) => DedupOps.ngramJaccardPairs(
       DedupOps.shingleRowsOf(docs.select(col("doc_id"), col("text"))), t, None)
 
-  val lshPairs: (DataFrame, Double) => DataFrame =
-    (docs, t) => DedupOps.minhashLshPairs(docs, t)
+  val lshPairs: (DataFrame, Double) => DataFrame = DedupOps.minhashLshPairs
 
   val phashPairs: (DataFrame, Double) => DataFrame =
     (docs, _) => graft.operators.MultimodalOps.phashPairsOf(
